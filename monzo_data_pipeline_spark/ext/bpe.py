@@ -31,7 +31,10 @@ textrank_keywords technique), so Spark and DuckDB must agree on every
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from monzo_data_pipeline_spark.ext.lineage import truncate_lineage
+from monzo_data_pipeline_spark.ext.lineage import (
+    collect_if_small,
+    truncate_lineage,
+)
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -82,14 +85,14 @@ def _pair_counts(corpus: DataFrame) -> DataFrame:
     return pairs.groupBy("a", "b").agg(F.sum("n").alias("cnt"))
 
 
-# Bounded-state cap for the driver-side merge loop (r11, the graph
-# family's ITER_DRIVER_FINISH idiom): a vocabulary under this many
-# distinct words is collected once (limit-guarded — a few MB of
-# delimited strings) and the n_merges steps run in plain Python,
-# replacing one pair-count aggregation + argmax collect + lazy
-# checkpoint PER STEP (22-27 jobs across the BPE queries) with a
-# single collect. Larger vocabularies fall through to the unchanged
-# distributed loop, so the cap bounds driver memory, not coverage.
+# Bounded-state cap for the driver-side merge loop
+# (ext/lineage.py::collect_if_small): a vocabulary under this many
+# distinct words is collected once (a few MB of delimited strings)
+# and the n_merges steps run in plain Python, replacing one pair-count
+# aggregation + argmax collect + lazy checkpoint PER STEP (22-27 jobs
+# across the BPE queries) with a single collect. Larger vocabularies
+# fall through to the unchanged distributed loop, so the cap bounds
+# driver memory, not coverage.
 BPE_DRIVER_FINISH_WORDS = 65_536
 
 
@@ -132,47 +135,40 @@ def _train(
         "n",
     )
     spark = documents.sparkSession
-    # no lineage cut before the guard: truncate_lineage forces toRdd
-    # (under AQE that executes the whole plan's query stages at
-    # PLAN-BUILD time — measured 0.6-0.9 s driver-side per call) and
-    # only the distributed per-step loop needs the cut; the guard
-    # collect executes the word-frequency pass exactly once
-    crows = corpus.limit(BPE_DRIVER_FINISH_WORDS + 1).collect()
-    if len(crows) <= BPE_DRIVER_FINISH_WORDS:
-        voc = [(r["s"], r["n"]) for r in crows]
-        rows: list[tuple] = []
+    with collect_if_small(corpus, BPE_DRIVER_FINISH_WORDS, ["s"]) as (voc, cached):
+        if voc is not None:
+            rows: list[tuple] = []
+            for step in range(1, n_merges + 1):
+                top = _py_pair_argmax(voc)
+                if top is None:
+                    break
+                a, b, cnt = top
+                rows.append((step, a, b, a + b, int(cnt)))
+                pat, rep = f"|{a}||{b}|", f"|{a}{b}|"
+                voc = [(s.replace(pat, rep), n) for s, n in voc]
+            return rows, spark.createDataFrame(voc, "s string, n bigint")
+        # distributed fallback: cut the lineage once up front (the
+        # first pair count materializes it from the cache) and then
+        # per rewrite step
+        corpus = truncate_lineage(cached, eager=False)
+        rows = []
         for step in range(1, n_merges + 1):
-            top = _py_pair_argmax(voc)
-            if top is None:
+            top = (
+                _pair_counts(corpus)
+                .orderBy(F.desc("cnt"), F.asc("a"), F.asc("b"))
+                .limit(1)
+                .collect()
+            )
+            if not top:
                 break
-            a, b, cnt = top
-            rows.append((step, a, b, a + b, int(cnt)))
-            pat, rep = f"|{a}||{b}|", f"|{a}{b}|"
-            voc = [(s.replace(pat, rep), n) for s, n in voc]
-        final = spark.createDataFrame(voc, "s string, n bigint")
-        return rows, final
-    # distributed fallback: cut the lineage once up front (the first
-    # pair count materializes it) and then per rewrite step, exactly
-    # the pre-r11 spelling
-    corpus = truncate_lineage(corpus, eager=False)
-    rows = []
-    for step in range(1, n_merges + 1):
-        top = (
-            _pair_counts(corpus)
-            .orderBy(F.desc("cnt"), F.asc("a"), F.asc("b"))
-            .limit(1)
-            .collect()
-        )
-        if not top:
-            break
-        a, b, cnt = top[0]["a"], top[0]["b"], int(top[0]["cnt"])
-        rows.append((step, a, b, a + b, cnt))
-        corpus = corpus.select(
-            F.replace(
-                F.col("s"), F.lit(f"|{a}||{b}|"), F.lit(f"|{a}{b}|")
-            ).alias("s"),
-            "n",
-        ).transform(truncate_lineage)
+            a, b, cnt = top[0]["a"], top[0]["b"], int(top[0]["cnt"])
+            rows.append((step, a, b, a + b, cnt))
+            corpus = corpus.select(
+                F.replace(
+                    F.col("s"), F.lit(f"|{a}||{b}|"), F.lit(f"|{a}{b}|")
+                ).alias("s"),
+                "n",
+            ).transform(truncate_lineage)
     return rows, corpus
 
 

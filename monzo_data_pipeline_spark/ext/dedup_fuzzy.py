@@ -20,7 +20,11 @@ Scale design (the 100 TB story):
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
-from monzo_data_pipeline_spark.ext.lineage import truncate_lineage
+from monzo_data_pipeline_spark.ext.lineage import (
+    collect_if_small,
+    keyed_frame,
+    truncate_lineage,
+)
 from pyspark.sql import functions as F
 
 N_MINHASH = 64  # signature length
@@ -499,14 +503,13 @@ def incremental_candidate_pairs(
     return pairs, new_idx
 
 
-# Bounded-state cap for the CC driver finisher (r11 — the graph
-# family's ITER_DRIVER_FINISH idiom): a pair set under this many rows
-# is collected once (limit-guarded) and labeled with exact
-# union-find; exact connected components are unique (label = the
-# component's minimum id, and Python's code-point string order equals
-# Spark's UTF-8 binary order), so the result is identical to the
-# converged distributed propagation and to the oracle. Larger pair
-# sets keep the unchanged distributed loops.
+# Bounded-state cap for the CC driver finisher
+# (ext/lineage.py::collect_if_small): a pair set under this many rows
+# is collected once and labeled with exact union-find; exact connected
+# components are unique (label = the component's minimum id, and
+# Python's code-point string order equals Spark's UTF-8 binary order),
+# so the result is identical to the converged distributed propagation
+# and to the oracle. Larger pair sets keep the distributed loops.
 CC_DRIVER_FINISH_PAIRS = 131_072
 
 
@@ -543,6 +546,20 @@ def _cc_driver_labels(pairs_rows: list) -> dict:
     return out
 
 
+def _cc_driver_frame(raw: DataFrame, prows: list) -> DataFrame:
+    """(doc_id, cluster_id) from collected (u, v) pairs, in the id
+    column's type."""
+    t = raw.schema["u"].dataType
+    return keyed_frame(
+        raw.sparkSession,
+        sorted(_cc_driver_labels(prows).items()),
+        "doc_id",
+        t,
+        "cluster_id",
+        t,
+    )
+
+
 def near_dup_clusters(
     pairs: DataFrame,
     a_col: str = "doc_a",
@@ -562,41 +579,24 @@ def near_dup_clusters(
     (Kiveris et al., "Connected Components in MapReduce") replaces
     the plain propagation — same loop skeleton.
 
-    Returns (doc_id, cluster_id) for every doc appearing in `pairs`.
+    Returns (doc_id, cluster_id) for every doc appearing in `pairs`;
+    a pair with a NULL id is dropped.
     """
-    # r11 bounded driver finish: a pair set under the cap is labeled
-    # with exact union-find on the driver (see CC_DRIVER_FINISH_PAIRS)
-    prows = (
-        pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
-        .limit(CC_DRIVER_FINISH_PAIRS + 1)
-        .collect()
-    )
-    if len(prows) <= CC_DRIVER_FINISH_PAIRS:
-        lab = _cc_driver_labels([(r["u"], r["v"]) for r in prows])
-        ntype = pairs.select(F.col(a_col)).schema.fields[0].dataType
-        from pyspark.sql import types as T
-
-        schema = T.StructType(
-            [
-                T.StructField("doc_id", ntype),
-                T.StructField("cluster_id", ntype),
-            ]
+    with collect_if_small(
+        pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v")),
+        CC_DRIVER_FINISH_PAIRS,
+        ["u", "v"],
+    ) as (prows, raw):
+        if prows is not None:
+            return _cc_driver_frame(raw, prows)
+        edges = (
+            raw.unionByName(raw.select(F.col("v").alias("u"), F.col("u").alias("v")))
+            .distinct()
+            # edges sits under EVERY iteration's join: materialize it
+            # once (reliable checkpoint when the session has a
+            # checkpoint dir — ext/lineage.py)
+            .transform(truncate_lineage)
         )
-        return pairs.sparkSession.createDataFrame(
-            sorted(lab.items()), schema
-        )
-    edges = (
-        pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
-        .unionByName(pairs.select(F.col(b_col).alias("u"), F.col(a_col).alias("v")))
-        .distinct()
-        # edges sits under EVERY iteration's join: without truncation the
-        # (possibly expensive) upstream pair generation — e.g. the n-gram
-        # self-join — re-executes once per round. Materialize it once.
-        # truncate_lineage: reliable checkpoint when the session
-        # has a checkpoint dir (cluster posture), localCheckpoint
-        # otherwise — ext/lineage.py
-        .transform(truncate_lineage)
-    )
     labels = (
         edges.select(F.col("u").alias("node"))
         .distinct()
@@ -695,48 +695,27 @@ def connected_components_star(
     Returns (doc_id, cluster_id) — identical output contract (and
     registry oracle) as `near_dup_clusters`: every node labeled with
     its component's minimum id."""
-    # r11 bounded driver finish — see near_dup_clusters / union-find
-    prows = (
-        pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
-        .limit(CC_DRIVER_FINISH_PAIRS + 1)
-        .collect()
-    )
-    if len(prows) <= CC_DRIVER_FINISH_PAIRS:
-        lab = _cc_driver_labels([(r["u"], r["v"]) for r in prows])
-        ntype = pairs.select(F.col(a_col)).schema.fields[0].dataType
-        from pyspark.sql import types as T
-
-        schema = T.StructType(
-            [
-                T.StructField("doc_id", ntype),
-                T.StructField("cluster_id", ntype),
-            ]
+    with collect_if_small(
+        pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v")),
+        CC_DRIVER_FINISH_PAIRS,
+        ["u", "v"],
+    ) as (prows, raw):
+        if prows is not None:
+            return _cc_driver_frame(raw, prows)
+        edges = (
+            raw.filter(F.col("u") != F.col("v"))
+            .distinct()
+            .transform(truncate_lineage)
         )
-        return pairs.sparkSession.createDataFrame(
-            sorted(lab.items()), schema
+        # nodes from the RAW pairs: a degenerate self-loop-only node
+        # must still appear in the output (as its own cluster), exactly
+        # as the pointer-jumping variant labels it
+        nodes = (
+            raw.select(F.col("u").alias("node"))
+            .unionByName(raw.select(F.col("v").alias("node")))
+            .distinct()
+            .transform(truncate_lineage)
         )
-    # the input pair plan is typically the expensive part (an LSH /
-    # n-gram candidate build); it feeds BOTH the edge and the node
-    # derivation, so cache it for the two setup scans — without this
-    # the whole candidate build executes twice
-    raw = pairs.select(
-        F.col(a_col).alias("u"), F.col(b_col).alias("v")
-    ).persist()
-    edges = (
-        raw.filter(F.col("u") != F.col("v"))
-        .distinct()
-        .transform(truncate_lineage)
-    )
-    # nodes from the RAW pairs: a degenerate self-loop-only node must
-    # still appear in the output (as its own cluster), exactly as the
-    # pointer-jumping variant labels it
-    nodes = (
-        raw.select(F.col("u").alias("node"))
-        .unionByName(raw.select(F.col("v").alias("node")))
-        .distinct()
-        .transform(truncate_lineage)
-    )
-    raw.unpersist()
 
     def _labels(e: DataFrame) -> DataFrame:
         sym = e.unionByName(

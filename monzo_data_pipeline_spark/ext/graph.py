@@ -25,8 +25,14 @@ identical in the twin.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame
-from monzo_data_pipeline_spark.ext.lineage import truncate_lineage
+from monzo_data_pipeline_spark.ext.lineage import (
+    collect_if_small,
+    keyed_frame,
+    truncate_lineage,
+)
 from pyspark.sql import functions as F
 
 # rank fixed-point scale: 10^9 keeps rank·weight < 2^63 for graphs
@@ -34,19 +40,15 @@ from pyspark.sql import functions as F
 RANK_SCALE = 1_000_000_000
 
 # Bounded-state caps for the iterative family's driver finishers
-# (r11, the SCC `_tarjan_min_scc` idiom generalized): an ENTITY graph
-# under these caps is collected once and the fixed-round ALL-INTEGER
-# iteration runs in plain Python — Python `//` on the non-negative
-# operands these operators produce is exactly Spark's `DIV`, so the
-# result is bit-identical to the distributed rounds (pinned by
-# tests), while the per-round plan/scheduling cost (lazy-checkpoint
+# (ext/lineage.py::collect_if_small): an ENTITY graph under these caps
+# is collected once and the fixed-round ALL-INTEGER iteration runs in
+# plain Python, so the per-round plan/scheduling cost (lazy-checkpoint
 # planning forcing toRdd + eager broadcast builds, 1 collect job per
-# round) disappears. The collects are limit-guarded: a graph over the
-# caps falls through to the unchanged distributed machinery, so the
-# caps bound DRIVER memory (a few MB), never coverage — at 100 TB the
-# fact-scale edge BUILD stays a distributed join either way, and a
-# node-scale iteration on ≤131k edges is exactly the state a driver
-# already holds for kmeans centroids or BPE argmaxes.
+# round) disappears. The caps bound DRIVER memory (a few MB), never
+# coverage — at 100 TB the fact-scale edge BUILD stays a distributed
+# join either way, and a node-scale iteration on ≤131k edges is
+# exactly the state a driver already holds for kmeans centroids or
+# BPE argmaxes.
 ITER_DRIVER_FINISH_EDGES = 131_072
 ITER_DRIVER_FINISH_NODES = 65_536
 
@@ -60,12 +62,12 @@ def pagerank(
     src_col: str = "src",
     dst_col: str = "dst",
     weight_col: str = "w",
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Weighted PageRank, ``iters`` fixed rounds, integer fixed-point.
 
     nodes: one row per node (``node_col``); edges: (src, dst, w>0).
     Returns (node, rank_q) where rank_q is the scaled-integer rank.
+    NULL node ids are dropped.
 
     Per round: one shuffle join ranks⋈edges on src (AQE broadcasts the
     rank side when the node table is small), one partial-agg'd groupBy
@@ -73,114 +75,13 @@ def pagerank(
     edge-proportional work only, never fact-proportional. Lineage is
     flattened per round via localCheckpoint (the kmeans_fit /
     near_dup_clusters idiom) so iteration N doesn't re-execute rounds
-    1..N−1 under each downstream action.
+    1..N−1 under each downstream action. This is
+    `personalized_pagerank` with every node a seed.
     """
-    base = (100 - damping_pct) * RANK_SCALE // 100
-    # w <= 0 would make __out zero/negative and the floor-division
-    # contribution NULL or sign-flipped (the weighted_priority_sample
-    # lesson): non-positive weights are dropped, not propagated
-    edges = edges.filter(F.col(weight_col) > 0)
-    out = edges.groupBy(src_col).agg(F.sum(weight_col).alias("__out"))
-    e = (
-        edges.join(out, src_col)
-        .select(
-            F.col(src_col).alias("__src"),
-            F.col(dst_col).alias("__dst"),
-            F.col(weight_col).alias("__w"),
-            "__out",
-        )
+    return _seeded_pagerank(
+        nodes, edges, None, iters, damping_pct,
+        node_col, src_col, dst_col, weight_col,
     )
-    # the edge list (often the output of a fact-scale join) feeds every
-    # round — cache it so iteration i doesn't rebuild it; after the
-    # final localCheckpoint the returned ranks no longer reference it,
-    # so it unpersists safely before return
-    # (r10 note: the child-session iteration idiom was tried here and
-    # reverted — for the nation-scale graphs this operator serves, the
-    # paired A/B was neutral-to-negative: the sizing count() pays the
-    # fact-scale edge build up front without reducing the per-round
-    # broadcast jobs. hits/sssp/textrank DO keep it; see
-    # _iteration_session.)
-    e = e.persist()
-    # r11 bounded driver finish: limit-guarded collects — an entity
-    # graph under the caps iterates in exact Python integers (see
-    # ITER_DRIVER_FINISH_* above); larger graphs fall through with
-    # the cache already warm
-    nrows = nodes.select(F.col(node_col).alias("__node")).limit(
-        ITER_DRIVER_FINISH_NODES + 1
-    ).collect()
-    if len(nrows) <= ITER_DRIVER_FINISH_NODES:
-        # count first: one full-parallelism pass that materializes the
-        # cache the rounds need either way (a limit-collect over the
-        # unmaterialized fact-scale join would execute through
-        # CollectLimit's single-partition first attempt — measured
-        # SLOWER than the 3 distributed rounds it replaced)
-        if e.count() <= ITER_DRIVER_FINISH_EDGES:
-            erows = e.collect()
-            node_ids = [r["__node"] for r in nrows]
-            rank = {n: RANK_SCALE for n in node_ids}
-            for _ in range(iters):
-                acc: dict = {}
-                for r in erows:
-                    ru = rank.get(r["__src"])
-                    if ru is None:
-                        continue  # src outside the node table
-                    c = ru * r["__w"] // r["__out"]
-                    d = r["__dst"]
-                    acc[d] = acc.get(d, 0) + c
-                rank = {
-                    n: base + acc.get(n, 0) * damping_pct // 100
-                    for n in node_ids
-                }
-            e.unpersist()
-            spark = nodes.sparkSession
-            ntype = nodes.select(F.col(node_col)).schema.fields[0].dataType
-            from pyspark.sql import types as T
-
-            schema = T.StructType(
-                [
-                    T.StructField(node_col, ntype),
-                    T.StructField("rank_q", T.LongType()),
-                ]
-            )
-            return spark.createDataFrame(
-                [(n, rank[n]) for n in node_ids], schema
-            )
-    ranks = nodes.select(
-        F.col(node_col).alias("__node"),
-        F.lit(RANK_SCALE).cast("long").alias("rank_q"),
-    )
-    for _ in range(iters):
-        contrib = (
-            ranks.join(e, ranks["__node"] == e["__src"])
-            .select(
-                "__dst",
-                # floor division AFTER the product: exact integer
-                # share, identical in DuckDB's r.rank_q * w // out
-                F.expr("rank_q * __w DIV __out").alias("__c"),
-            )
-            .groupBy("__dst")
-            .agg(F.sum("__c").alias("__in"))
-        )
-        ranks = (
-            nodes.select(F.col(node_col).alias("__node"))
-            .join(contrib, F.col("__node") == F.col("__dst"), "left")
-            .select(
-                "__node",
-                (
-                    F.lit(base)
-                    + F.expr(
-                        f"coalesce(__in, 0L) * {damping_pct} DIV 100"
-                    )
-                )
-                .cast("long")
-                .alias("rank_q"),
-            )
-        )
-        if checkpoint:
-            ranks = truncate_lineage(ranks)
-    if checkpoint:
-        e.unpersist()
-    return ranks.select(F.col("__node").alias(node_col), "rank_q")
 
 
 def personalized_pagerank(
@@ -207,7 +108,29 @@ def personalized_pagerank(
     100). Unnormalized (masses are comparable within one run, which
     is what ranking needs); dangling mass dropped as in `pagerank`.
     `seeds` is one column of node ids (deduplicated here)."""
+    return _seeded_pagerank(
+        nodes, edges, seeds, iters, damping_pct,
+        node_col, src_col, dst_col, weight_col,
+    )
+
+
+def _seeded_pagerank(
+    nodes: DataFrame,
+    edges: DataFrame,
+    seeds: DataFrame | None,
+    iters: int,
+    damping_pct: int,
+    node_col: str,
+    src_col: str,
+    dst_col: str,
+    weight_col: str,
+) -> DataFrame:
+    """Shared body of `pagerank` (``seeds`` None: every node is a
+    seed) and `personalized_pagerank`."""
     base_seed = (100 - damping_pct) * RANK_SCALE // 100
+    # w <= 0 would make __out zero/negative and the floor-division
+    # contribution NULL or sign-flipped (the weighted_priority_sample
+    # lesson): non-positive weights are dropped, not propagated
     edges = edges.filter(F.col(weight_col) > 0)
     out = edges.groupBy(src_col).agg(F.sum(weight_col).alias("__out"))
     e = edges.join(out, src_col).select(
@@ -216,103 +139,78 @@ def personalized_pagerank(
         F.col(weight_col).alias("__w"),
         "__out",
     )
-    e = e.persist()
-    sd = seeds.select(
-        F.col(seeds.columns[0]).alias("__node")
-    ).distinct()
-    # r11 bounded driver finish (see pagerank / ITER_DRIVER_FINISH_*)
-    nrows = nodes.select(F.col(node_col).alias("__node")).limit(
-        ITER_DRIVER_FINISH_NODES + 1
-    ).collect()
-    if len(nrows) <= ITER_DRIVER_FINISH_NODES:
-        srows = sd.limit(ITER_DRIVER_FINISH_NODES + 1).collect()
-        # count-guard, not limit-guard: see pagerank above
-        if (
-            len(srows) <= ITER_DRIVER_FINISH_NODES
-            and e.count() <= ITER_DRIVER_FINISH_EDGES
-        ):
-            erows = e.collect()
-            seed_set = {r["__node"] for r in srows}
-            node_ids = [r["__node"] for r in nrows]
-            rank = {
-                n: (RANK_SCALE if n in seed_set else 0) for n in node_ids
-            }
-            for _ in range(iters):
-                acc: dict = {}
-                for r in erows:
-                    ru = rank.get(r["__src"])
-                    if ru is None:
-                        continue
-                    c = ru * r["__w"] // r["__out"]
-                    d = r["__dst"]
-                    acc[d] = acc.get(d, 0) + c
-                rank = {
-                    n: (base_seed if n in seed_set else 0)
-                    + acc.get(n, 0) * damping_pct // 100
-                    for n in node_ids
-                }
-            e.unpersist()
-            spark = nodes.sparkSession
-            ntype = nodes.select(F.col(node_col)).schema.fields[0].dataType
-            from pyspark.sql import types as T
-
-            schema = T.StructType(
-                [
-                    T.StructField(node_col, ntype),
-                    T.StructField("rank_q", T.LongType()),
-                ]
-            )
-            return spark.createDataFrame(
-                [(n, rank[n]) for n in node_ids], schema
-            )
-    marked = (
-        nodes.select(F.col(node_col).alias("__node"))
-        .join(
-            F.broadcast(sd.withColumn("__is_seed", F.lit(1))),
-            "__node",
-            "left",
-        )
-        .select(
+    ids = nodes.select(F.col(node_col).alias("__node"))
+    if seeds is None:
+        marked = ids.withColumn("__is_seed", F.lit(1))
+    else:
+        sd = seeds.select(F.col(seeds.columns[0]).alias("__node")).distinct()
+        marked = ids.join(
+            F.broadcast(sd.withColumn("__is_seed", F.lit(1))), "__node", "left"
+        ).select(
             "__node",
             F.coalesce(F.col("__is_seed"), F.lit(0)).alias("__is_seed"),
         )
-        .persist()
-    )
-    ranks = marked.select(
-        "__node",
-        (F.col("__is_seed").cast("long") * F.lit(RANK_SCALE)).alias(
-            "rank_q"
-        ),
-    )
-    for _ in range(iters):
-        contrib = (
-            ranks.join(e, ranks["__node"] == e["__src"])
-            .select(
-                "__dst",
-                F.expr("rank_q * __w DIV __out").alias("__c"),
+    # (r10 note: the child-session iteration idiom was tried here and
+    # reverted — for the nation-scale graphs this operator serves, the
+    # paired A/B was neutral-to-negative. hits/sssp/textrank DO keep
+    # it; see _iteration_session.)
+    with collect_if_small(
+        marked, ITER_DRIVER_FINISH_NODES, ["__node"]
+    ) as (nrows, marked), collect_if_small(
+        e, ITER_DRIVER_FINISH_EDGES, ["__src", "__dst"]
+    ) as (erows, e):
+        if nrows is not None and erows is not None:
+            rank = {n: RANK_SCALE * s for n, s in nrows}
+            for _ in range(iters):
+                acc: dict = {}
+                for src, dst, w, w_out in erows:
+                    ru = rank.get(src)
+                    if ru is not None:  # src outside the node table
+                        acc[dst] = acc.get(dst, 0) + ru * w // w_out
+                rank = {
+                    n: base_seed * s + acc.get(n, 0) * damping_pct // 100
+                    for n, s in nrows
+                }
+            return keyed_frame(
+                nodes.sparkSession,
+                [(n, rank[n]) for n, _ in nrows],
+                node_col,
+                marked.schema["__node"].dataType,
+                "rank_q",
             )
-            .groupBy("__dst")
-            .agg(F.sum("__c").alias("__in"))
+        ranks = marked.select(
+            "__node",
+            (F.col("__is_seed").cast("long") * F.lit(RANK_SCALE)).alias(
+                "rank_q"
+            ),
         )
-        ranks = (
-            marked.join(
-                contrib, F.col("__node") == F.col("__dst"), "left"
-            )
-            .select(
-                "__node",
-                (
-                    F.col("__is_seed").cast("long") * F.lit(base_seed)
-                    + F.expr(
-                        f"coalesce(__in, 0L) * {damping_pct} DIV 100"
-                    )
+        for _ in range(iters):
+            contrib = (
+                ranks.join(e, ranks["__node"] == e["__src"])
+                .select(
+                    "__dst",
+                    # floor division AFTER the product: exact integer
+                    # share, identical in DuckDB's r.rank_q * w // out
+                    F.expr("rank_q * __w DIV __out").alias("__c"),
                 )
-                .cast("long")
-                .alias("rank_q"),
+                .groupBy("__dst")
+                .agg(F.sum("__c").alias("__in"))
             )
-        )
-        ranks = truncate_lineage(ranks)
-    e.unpersist()
-    marked.unpersist()
+            ranks = truncate_lineage(
+                marked.join(
+                    contrib, F.col("__node") == F.col("__dst"), "left"
+                ).select(
+                    "__node",
+                    (
+                        F.col("__is_seed").cast("long") * F.lit(base_seed)
+                        + F.expr(
+                            f"coalesce(__in, 0L) * {damping_pct} DIV 100"
+                        )
+                    )
+                    .cast("long")
+                    .alias("rank_q"),
+                )
+            )
     return ranks.select(F.col("__node").alias(node_col), "rank_q")
 
 
@@ -340,86 +238,90 @@ def hits_bipartite(
     Σ can exceed 2⁵³) but they round IDENTICALLY from the same exact
     integer in both engines, so floor(raw·SCALE/max) is bit-stable
     (the spend_trend_slopes determinism argument); oracle = chained
-    AS MATERIALIZED CTE half-rounds.
+    AS MATERIALIZED CTE half-rounds. The driver finisher computes the
+    Σ in exact Python ints and the same double expression
+    ``floor(float(raw) * 1e6 / float(mx))``.
 
     Returns (hubs, authorities) DataFrames: (node, score_q). Per
     half-round: one join edges⋈scores (shuffle on the score key, AQE
     broadcasts when the node table is small), one partial-agg'd
     groupBy, and the max-normalizer as a 1-row broadcast cross join —
-    no collect, no global sort. Non-positive weights are dropped
-    (the weighted_priority_sample lesson)."""
+    no collect, no global sort, no global window. Non-positive weights
+    (the weighted_priority_sample lesson) and NULL ids are dropped."""
     edges = edges.filter(F.col(weight_col) > 0).select(
         F.col(left_col).alias("__l"),
         F.col(right_col).alias("__r"),
         F.col(weight_col).alias("__w"),
     )
-    # the (fact-scale) edge list feeds every half-round; without the
-    # cache + per-half-round localCheckpoint the ONE lazy plan would
-    # re-execute the edge-build join ~2·rounds·2 times (raw appears
-    # under both the normalizer's max and the next join) — the
-    # pagerank() lineage-flattening idiom.
-    edges_cached = edges.persist()
-    # r10: half-rounds in a right-sized child session (AQE off below
-    # cluster width — see _iteration_session; 34 AQE stage-jobs per
-    # call measured before); the count materializes the edge cache
-    parent = edges_cached.sparkSession
-    child = _iteration_session(parent, edges_cached.count())
-    edges = _in_session(edges_cached, child)
-    hubs = edges.select("__l").distinct().select(
-        "__l", F.lit(HITS_SCALE).cast("long").alias("score_q")
-    )
-
-    cached: list[DataFrame] = []
-
-    def _half(scores: DataFrame, key: str, out_key: str) -> DataFrame:
-        # scores is node-count sized: broadcast it so the edge list
-        # joins map-side and the only exchange is the partial-agg'd
-        # node-count groupBy. raw is persisted (not checkpointed):
-        # it has two consumers (the max normalizer and the output),
-        # and the cache collapses all half-rounds into one lazy plan
-        # instead of 2·rounds eager materialization jobs
-        raw = (
-            F.broadcast(scores).join(edges, on=key)
-            .groupBy(out_key)
-            .agg(
-                F.sum(
-                    (F.col("score_q") * F.col("__w")).cast("decimal(38,0)")
-                ).alias("__raw")
+    parent = edges.sparkSession
+    # the (fact-scale) edge list feeds every half-round: the helper's
+    # cache plus the per-half-round raw caches keep the ONE lazy plan
+    # from re-executing the edge-build join ~2·rounds·2 times
+    with collect_if_small(
+        edges, ITER_DRIVER_FINISH_EDGES, ["__l", "__r"]
+    ) as (erows, edges_cached):
+        if erows is not None:
+            hubs_d = {l: HITS_SCALE for l, _, _ in erows}
+            auth_d: dict = {}
+            for _ in range(rounds):
+                auth_d = _hits_half(hubs_d, erows, 0, 1)
+                hubs_d = _hits_half(auth_d, erows, 1, 0)
+            types = edges_cached.schema
+            return (
+                keyed_frame(parent, hubs_d.items(), left_col,
+                            types["__l"].dataType, "score_q"),
+                keyed_frame(parent, auth_d.items(), right_col,
+                            types["__r"].dataType, "score_q"),
             )
-        ).persist()
-        cached.append(raw)
-        # r11: the max-normalizer as a GLOBAL window instead of a
-        # broadcast cross join — the hint chained one extra broadcast
-        # build per half-round onto the critical path (each eager at
-        # plan-build time, a separate sequential driver job: 18 → 13
-        # jobs, measured ~10% wall). The window moves only the
-        # node-scale raw rows to one partition inside the SAME job;
-        # the max and the floor math are unchanged bit-for-bit.
-        from pyspark.sql import Window as _W
-
-        mxc = F.max("__raw").over(_W.partitionBy())
-        return raw.select(
-            out_key,
-            F.floor(
-                F.col("__raw").cast("double")
-                * F.lit(float(HITS_SCALE))
-                / mxc.cast("double")
-            )
-            .cast("long")
-            .alias("score_q"),
+        # r10: half-rounds in a right-sized child session (AQE off
+        # below cluster width — see _iteration_session; 34 AQE
+        # stage-jobs per call measured before)
+        child = _iteration_session(parent, edges_cached.count())
+        edges = _in_session(edges_cached, child)
+        hubs = edges.select("__l").distinct().select(
+            "__l", F.lit(HITS_SCALE).cast("long").alias("score_q")
         )
+        cached: list[DataFrame] = []
 
-    auth = None
-    for _ in range(rounds):
-        auth = _half(hubs, "__l", "__r")
-        hubs = _half(auth, "__r", "__l")
-    # materialize the final node-count scores, then drop every cache
-    # (edges and the per-half-round raws) before handing them back
-    hubs = hubs.localCheckpoint(eager=True)
-    auth = auth.localCheckpoint(eager=True)
-    edges_cached.unpersist()
-    for c in cached:
-        c.unpersist()
+        def _half(scores: DataFrame, key: str, out_key: str) -> DataFrame:
+            # scores is node-count sized: broadcast it so the edge list
+            # joins map-side and the only exchange is the partial-agg'd
+            # node-count groupBy. raw is persisted (not checkpointed):
+            # it has two consumers (the max normalizer and the output),
+            # and the cache collapses all half-rounds into one lazy plan
+            # instead of 2·rounds eager materialization jobs
+            raw = (
+                F.broadcast(scores).join(edges, on=key)
+                .groupBy(out_key)
+                .agg(
+                    F.sum(
+                        (F.col("score_q") * F.col("__w")).cast("decimal(38,0)")
+                    ).alias("__raw")
+                )
+            ).persist()
+            cached.append(raw)
+            mx = raw.agg(F.max("__raw").cast("double").alias("__mx"))
+            return raw.crossJoin(F.broadcast(mx)).select(
+                out_key,
+                F.floor(
+                    F.col("__raw").cast("double")
+                    * F.lit(float(HITS_SCALE))
+                    / F.col("__mx")
+                )
+                .cast("long")
+                .alias("score_q"),
+            )
+
+        auth = None
+        for _ in range(rounds):
+            auth = _half(hubs, "__l", "__r")
+            hubs = _half(auth, "__r", "__l")
+        # materialize the final node-count scores, then drop the
+        # per-half-round raws before handing them back
+        hubs = hubs.localCheckpoint(eager=True)
+        auth = auth.localCheckpoint(eager=True)
+        for c in cached:
+            c.unpersist()
     # hand the node-sized results back to the caller's session
     return (
         _in_session(
@@ -429,6 +331,24 @@ def hits_bipartite(
             auth.select(F.col("__r").alias(right_col), "score_q"), parent
         ),
     )
+
+
+def _hits_half(scores: dict, erows: list, key: int, out_key: int) -> dict:
+    """One driver-side HITS half-round over (l, r, w) edge tuples: the
+    exact integer Σ score·w per ``out_key`` node, max-normalized with
+    the distributed half's IEEE double expression."""
+    raw: dict = {}
+    for e in erows:
+        s = scores.get(e[key])
+        if s is not None:
+            raw[e[out_key]] = raw.get(e[out_key], 0) + s * e[2]
+    if not raw:
+        return raw
+    mx = float(max(raw.values()))
+    return {
+        n: math.floor(float(v) * float(HITS_SCALE) / mx)
+        for n, v in raw.items()
+    }
 
 
 def triangle_stats(
@@ -629,124 +549,99 @@ def sssp(
         F.col(src_col).alias("__es"),
         F.col(dst_col).alias("__ed"),
         F.col(w_col).cast("long").alias("__ew"),
-    ).filter(
-        F.col("__es").isNotNull()
-        & F.col("__ed").isNotNull()
-        & F.col("__ew").isNotNull()
     )
-    # negative weights: one cheap full-scan agg up front (the edge
-    # list is about to be scanned max_rounds more times anyway) —
-    # r10: the same job ALSO materializes the cache and measures the
-    # edge count for the child-session sizing below
-    e_cached = e.persist()
-    row = e_cached.agg(
-        F.min("__ew").alias("m"), F.count(F.lit(1)).alias("n")
-    ).collect()[0]
-    if row["m"] is not None and row["m"] < 0:
-        e_cached.unpersist()
-        raise ValueError(
-            f"negative edge weight {row['m']}: sssp requires w >= 0"
-        )
-    parent = e_cached.sparkSession
-    # r11 bounded driver finish (see ITER_DRIVER_FINISH_*): the edge
-    # count is already measured by the guard agg; a graph under the
-    # caps runs its Bellman-Ford rounds in exact Python integers —
-    # full per-round relaxation with the same ≤ max_rounds /
-    # empty-frontier early stop, which the delta-frontier distributed
-    # form is bit-identical to by construction
-    if row["n"] <= ITER_DRIVER_FINISH_EDGES:
-        srows = (
-            sources.select(F.col(node_col).alias("__n"))
-            .filter(F.col("__n").isNotNull())
-            .distinct()
-            .limit(ITER_DRIVER_FINISH_NODES + 1)
-            .collect()
-        )
-        if len(srows) <= ITER_DRIVER_FINISH_NODES:
-            erows = e_cached.collect()
-            e_cached.unpersist()
-            dist = {r["__n"]: 0 for r in srows}
+    srcs = sources.select(F.col(node_col).alias("__n")).distinct()
+    parent = edges.sparkSession
+    with collect_if_small(
+        e, ITER_DRIVER_FINISH_EDGES, ["__es", "__ed", "__ew"]
+    ) as (erows, e_cached), collect_if_small(
+        srcs, ITER_DRIVER_FINISH_NODES, ["__n"]
+    ) as (srows, srcs):
+        # negative weights: one cheap full-scan agg over the cached
+        # edges (scanned max_rounds more times anyway); the same job
+        # measures the edge count for the child-session sizing below
+        if erows is not None:
+            m, n_edges = min((w for _, _, w in erows), default=None), len(erows)
+        else:
+            m, n_edges = e_cached.agg(
+                F.min("__ew"), F.count(F.lit(1))
+            ).collect()[0]
+        if m is not None and m < 0:
+            raise ValueError(f"negative edge weight {m}: sssp requires w >= 0")
+        if erows is not None and srows is not None:
+            # full per-round relaxation with the same ≤ max_rounds /
+            # empty-frontier early stop, which the delta-frontier
+            # distributed form is bit-identical to by construction
+            dist = {n: 0 for (n,) in srows}
             for _ in range(max_rounds):
-                improved = {}
-                for r in erows:
-                    du = dist.get(r["__es"])
+                improved: dict = {}
+                for u, v, w in erows:
+                    du = dist.get(u)
                     if du is None:
                         continue
-                    nd = du + r["__ew"]
-                    dv = improved.get(r["__ed"])
+                    nd = du + w
+                    dv = improved.get(v)
                     if dv is None or nd < dv:
-                        old = dist.get(r["__ed"])
+                        old = dist.get(v)
                         if old is None or nd < old:
-                            improved[r["__ed"]] = nd
+                            improved[v] = nd
                 if not improved:
                     break
                 dist.update(improved)
-            ntype = (
-                sources.select(F.col(node_col)).schema.fields[0].dataType
+            return keyed_frame(
+                parent,
+                sorted(dist.items()),
+                node_col,
+                srcs.schema["__n"].dataType,
+                "dist",
             )
-            from pyspark.sql import types as T
-
-            schema = T.StructType(
-                [
-                    T.StructField(node_col, ntype),
-                    T.StructField("dist", T.LongType()),
-                ]
-            )
-            return parent.createDataFrame(
-                sorted(dist.items()), schema
-            )
-    # r10: relaxation rounds in a right-sized child session (AQE off
-    # below cluster width — see _iteration_session; 40 AQE stage-jobs
-    # per call measured before)
-    child = _iteration_session(parent, row["n"])
-    e = _in_session(e_cached, child)
-    dist = (
-        _in_session(
-            sources.select(F.col(node_col).alias("__n")), child
+        # r10: relaxation rounds in a right-sized child session (AQE off
+        # below cluster width — see _iteration_session; 40 AQE stage-jobs
+        # per call measured before)
+        child = _iteration_session(parent, n_edges)
+        e = _in_session(e_cached, child)
+        dist = (
+            _in_session(srcs, child)
+            .withColumn("__d", F.lit(0).cast("long"))
+            .transform(truncate_lineage)
         )
-        .filter(F.col("__n").isNotNull())
-        .distinct()
-        .withColumn("__d", F.lit(0).cast("long"))
-        .transform(truncate_lineage)
-    )
-    frontier = dist
-    for _ in range(max_rounds):
-        cand = (
-            frontier.join(e, frontier["__n"] == e["__es"])
-            .select(
-                F.col("__ed").alias("__n"),
-                (F.col("__d") + F.col("__ew")).alias("__d"),
+        frontier = dist
+        for _ in range(max_rounds):
+            cand = (
+                frontier.join(e, frontier["__n"] == e["__es"])
+                .select(
+                    F.col("__ed").alias("__n"),
+                    (F.col("__d") + F.col("__ew")).alias("__d"),
+                )
+                .groupBy("__n")
+                .agg(F.min("__d").alias("__cd"))
             )
-            .groupBy("__n")
-            .agg(F.min("__d").alias("__cd"))
-        )
-        merged = (
-            dist.join(cand, on="__n", how="full")
-            .select(
-                "__n",
-                F.least(
-                    F.coalesce(F.col("__d"), F.col("__cd")),
-                    F.coalesce(F.col("__cd"), F.col("__d")),
-                ).alias("__nd"),
-                # improved = first seen, or candidate strictly lower
-                (
-                    F.col("__d").isNull()
-                    | (F.col("__cd") < F.col("__d"))
-                ).alias("__impr"),
+            merged = (
+                dist.join(cand, on="__n", how="full")
+                .select(
+                    "__n",
+                    F.least(
+                        F.coalesce(F.col("__d"), F.col("__cd")),
+                        F.coalesce(F.col("__cd"), F.col("__d")),
+                    ).alias("__nd"),
+                    # improved = first seen, or candidate strictly lower
+                    (
+                        F.col("__d").isNull()
+                        | (F.col("__cd") < F.col("__d"))
+                    ).alias("__impr"),
+                )
+                .withColumnRenamed("__nd", "__d")
+                # lazy truncation: the improvement count below is the
+                # action that materializes it — one job per round
+                .transform(lambda d: truncate_lineage(d, eager=False))
             )
-            .withColumnRenamed("__nd", "__d")
-            # lazy truncation: the improvement count below is the
-            # action that materializes it — one job per round
-            .transform(lambda d: truncate_lineage(d, eager=False))
-        )
-        n_improved = (
-            merged.filter(F.col("__impr")).agg(F.count(F.lit(1))).collect()[0][0]
-        )
-        dist = merged.select("__n", "__d")
-        if n_improved == 0:
-            break  # exact fixpoint: no distance changed, no node added
-        frontier = merged.filter(F.col("__impr")).select("__n", "__d")
-    e_cached.unpersist()
+            n_improved = (
+                merged.filter(F.col("__impr")).agg(F.count(F.lit(1))).collect()[0][0]
+            )
+            dist = merged.select("__n", "__d")
+            if n_improved == 0:
+                break  # exact fixpoint: no distance changed, no node added
+            frontier = merged.filter(F.col("__impr")).select("__n", "__d")
     out = dist.select(
         F.col("__n").alias(node_col), F.col("__d").alias("dist")
     )
@@ -1276,13 +1171,10 @@ def strongly_connected_components(
     convergence); lineage cut per round via `truncate_lineage`, and
     the stability check after each 4-round block is the single job
     that materializes it — a converged phase costs ONE Spark job.
-    r11: a residual subgraph whose node/edge counts fall under the
-    ``driver_finish_*`` caps is collected and finished EXACTLY on the
-    driver (iterative Tarjan, `_tarjan_min_scc`) — exact SCC
-    assignments are unique, so the finisher agrees with the
-    distributed peels and the oracle on any graph, while replacing
-    per-peel plan/scheduling cost that dwarfs node-scale residue
-    data; above the caps the distributed machinery runs unchanged.
+    A residual subgraph under the ``driver_finish_*`` caps is
+    finished EXACTLY on the driver (iterative Tarjan,
+    `_tarjan_min_scc`; exact SCC assignments are unique, so it agrees
+    with the distributed peels and the oracle on any graph).
     The iteration runs in a CHILD
     SparkSession (same context, executors and data — frames cross
     via global temp views) whose shuffle parallelism is sized to the
@@ -1433,33 +1325,28 @@ def strongly_connected_components(
             # forward phase's first stability job played that role
             # before) and feeds the driver-finish gate below
             n_rem = nodes.count()
-        # -- 0.5 bounded driver finish (r11): a residual subgraph
-        # under the collect caps is finished exactly on the driver
-        # (iterative Tarjan — exact SCC is unique, so this agrees
-        # with the distributed peels and the oracle on any graph).
-        # Each extra peel on a node-scale residue costs ~10 lazy
-        # checkpoint plannings + 3-5 jobs regardless of data; the
-        # finisher replaces ALL remaining peels with two bounded
-        # collects (measured 9.7-16 s → 2.2-3.8 s on the precedence
-        # graph, whose post-trim cyclic core is ~2.5 k nodes).
-        # Residues over the caps fall through to the unchanged
-        # FW-BW machinery — the caps bound driver memory (≤ ~3 MB
-        # of longs), not coverage.
+        # -- 0.5 bounded driver finish: each extra peel on a
+        # node-scale residue costs ~10 lazy checkpoint plannings + 3-5
+        # jobs regardless of data; Tarjan on the collected residue
+        # replaces ALL remaining peels (measured 9.7-16 s → 2.2-3.8 s
+        # on the precedence graph, whose post-trim core is ~2.5 k nodes)
         if n_rem == 0:
             break  # trim assigned everything: the graph was a DAG
         if n_rem <= driver_finish_nodes:
-            erows = e.limit(driver_finish_edges + 1).collect()
-            if len(erows) <= driver_finish_edges:
-                adj: dict = {}
-                for r in erows:
-                    adj.setdefault(r["__s"], []).append(r["__d"])
-                node_ids = [r["__n"] for r in nodes.collect()]
-                comp = _tarjan_min_scc(node_ids, adj)
-                got_lit = child.createDataFrame(
-                    list(comp.items()), "__n long, __scc long"
-                )
-                assigned = lazy(assigned.unionByName(got_lit))
-                break
+            with collect_if_small(
+                e, driver_finish_edges, ["__s", "__d"]
+            ) as (erows, _):
+                if erows is not None:
+                    adj: dict = {}
+                    for s, d in erows:
+                        adj.setdefault(s, []).append(d)
+                    node_ids = [r["__n"] for r in nodes.collect()]
+                    comp = _tarjan_min_scc(node_ids, adj)
+                    got_lit = child.createDataFrame(
+                        list(comp.items()), "__n long, __scc long"
+                    )
+                    assigned = lazy(assigned.unionByName(got_lit))
+                    break
         # -- 1. forward min-label coloring (jump-accelerated) ---------
         col = lazy(nodes.withColumn("__c", F.col("__n")))
         col = _min_label_fixpoint(col, e, prop_rounds)

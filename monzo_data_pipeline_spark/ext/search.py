@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions.text import tokens
+from .lineage import collect_if_small, truncate_lineage
 
 # BM25 constants as exact rationals: k1 = 6/5 (1.2), b = 1.
 # With b=1 and avgdl = T/N (total tokens / doc count), the per-term
@@ -374,96 +375,85 @@ def textrank_keywords(
     round is a broadcast join + one tiny agg, and the driver loop adds
     no corpus rescans (edges are cached).
     """
-    from .graph import _in_session, _iteration_session
+    from . import graph as G
 
-    edges_cached = adjacency_edges(documents, text_col).cache()
-    nodes_cached = (
-        edges_cached.select(F.col("src").alias("word"))
-        .unionByName(edges_cached.select(F.col("dst").alias("word")))
-        .distinct()
-        .cache()
-    )
-    n = nodes_cached.count()
     parent = documents.sparkSession
-    if n == 0:
-        # empty or single-token corpus: no adjacency edges, no graph —
-        # return an empty (word, rank_q) frame instead of dividing by 0
-        return parent.createDataFrame([], "word string, rank_q bigint")
-    tele = (3 * 1_000_000) // (20 * n)
-    # r11 bounded driver finish (the graph family's
-    # ITER_DRIVER_FINISH_* idiom): a vocabulary graph under the caps
-    # iterates in exact Python integers — `//` on these non-negative
-    # ranks IS Spark's DIV — killing the per-round lazy-checkpoint
-    # planning and broadcast-build jobs; over the caps, the r10 child
-    # session runs unchanged. The corpus-scale bigram count above is
-    # distributed either way.
-    from .graph import ITER_DRIVER_FINISH_EDGES, ITER_DRIVER_FINISH_NODES
-
-    if n <= ITER_DRIVER_FINISH_NODES:
-        erows = edges_cached.limit(ITER_DRIVER_FINISH_EDGES + 1).collect()
-        if len(erows) <= ITER_DRIVER_FINISH_EDGES:
-            ow: dict = {}
-            for r in erows:
-                ow[r["src"]] = ow.get(r["src"], 0) + r["w"]
-            words = [r["word"] for r in nodes_cached.collect()]
-            edges_cached.unpersist()
-            nodes_cached.unpersist()
-            rank = {w: 1_000_000 // n for w in words}
-            for _ in range(iters):
-                acc: dict = {}
-                for r in erows:
-                    c = rank[r["src"]] * r["w"] // ow[r["src"]]
-                    acc[r["dst"]] = acc.get(r["dst"], 0) + c
-                rank = {
-                    w: tele + 17 * acc.get(w, 0) // 20 for w in words
-                }
-            top = sorted(rank.items(), key=lambda kv: (-kv[1], kv[0]))[
-                :top_k
-            ]
-            return parent.createDataFrame(
-                top, "word string, rank_q bigint"
-            )
-    # r10: iterations in a right-sized child session (AQE off below
-    # cluster width — the graph-family _iteration_session idiom; 24
-    # AQE stage-jobs per call measured before). The vocabulary graph
-    # is node-scale, so the node count sizes it.
-    child = _iteration_session(parent, n)
-    edges = _in_session(edges_cached, child)
-    nodes = _in_session(nodes_cached, child)
-    out_w = edges.groupBy("src").agg(F.sum("w").alias("ow"))
-    ranks = nodes.withColumn("r", F.lit(1_000_000 // n).cast("bigint"))
-    for _ in range(iters):
-        contribs = (
-            edges.join(out_w, "src")
-            .join(
-                F.broadcast(ranks.select(F.col("word").alias("src"), "r")),
-                "src",
-            )
-            .withColumn("c", F.expr("CAST((r * w) DIV ow AS BIGINT)"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("s"))
+    with collect_if_small(
+        adjacency_edges(documents, text_col),
+        G.ITER_DRIVER_FINISH_EDGES,
+        ["src", "dst"],
+    ) as (erows, edges):
+        if erows is not None:
+            words = {w for s, d, _ in erows for w in (s, d)}
+            n = len(words)
+            if n == 0:
+                # empty or single-token corpus: no adjacency edges, no
+                # graph — an empty frame instead of dividing by 0
+                return parent.createDataFrame([], "word string, rank_q bigint")
+            if n <= G.ITER_DRIVER_FINISH_NODES:
+                tele = (3 * 1_000_000) // (20 * n)
+                ow: dict = {}
+                for s, _, w in erows:
+                    ow[s] = ow.get(s, 0) + w
+                rank = {w: 1_000_000 // n for w in words}
+                for _ in range(iters):
+                    acc: dict = {}
+                    for s, d, w in erows:
+                        acc[d] = acc.get(d, 0) + rank[s] * w // ow[s]
+                    rank = {w: tele + 17 * acc.get(w, 0) // 20 for w in words}
+                top = sorted(rank.items(), key=lambda kv: (-kv[1], kv[0]))
+                return parent.createDataFrame(
+                    top[:top_k], "word string, rank_q bigint"
+                )
+        nodes = truncate_lineage(
+            edges.select(F.col("src").alias("word"))
+            .unionByName(edges.select(F.col("dst").alias("word")))
+            .distinct()
         )
-        ranks = (
-            nodes.join(
-                contribs.select(F.col("dst").alias("word"), "s"), "word", "left"
+        n = nodes.count()  # >= 1: the edge set is over its cap
+        tele = (3 * 1_000_000) // (20 * n)
+        # r10: iterations in a right-sized child session (AQE off below
+        # cluster width — the graph-family _iteration_session idiom; 24
+        # AQE stage-jobs per call measured before). The vocabulary graph
+        # is node-scale, so the node count sizes it.
+        child = G._iteration_session(parent, n)
+        edges = G._in_session(edges, child)
+        nodes = G._in_session(nodes, child)
+        out_w = edges.groupBy("src").agg(F.sum("w").alias("ow"))
+        ranks = nodes.withColumn("r", F.lit(1_000_000 // n).cast("bigint"))
+        for _ in range(iters):
+            contribs = (
+                edges.join(out_w, "src")
+                .join(
+                    F.broadcast(ranks.select(F.col("word").alias("src"), "r")),
+                    "src",
+                )
+                .withColumn("c", F.expr("CAST((r * w) DIV ow AS BIGINT)"))
+                .groupBy("dst")
+                .agg(F.sum("c").alias("s"))
             )
-            .withColumn(
-                "r",
-                F.lit(tele).cast("bigint")
-                + F.expr("CAST((17 * COALESCE(s, 0)) DIV 20 AS BIGINT)"),
+            ranks = (
+                nodes.join(
+                    contribs.select(F.col("dst").alias("word"), "s"),
+                    "word",
+                    "left",
+                )
+                .withColumn(
+                    "r",
+                    F.lit(tele).cast("bigint")
+                    + F.expr("CAST((17 * COALESCE(s, 0)) DIV 20 AS BIGINT)"),
+                )
+                .select("word", "r")
             )
-            .select("word", "r")
+            # r10: cut the lineage each round (the pagerank idiom) — the
+            # broadcast of round i otherwise re-plans/re-executes rounds
+            # 1..i-1 as nested subplans (~80 Exchanges in the final plan)
+            ranks = truncate_lineage(ranks, eager=False)
+        # the top-k is materialized while the edge cache is still live
+        out = truncate_lineage(
+            ranks.select("word", F.col("r").alias("rank_q"))
+            .orderBy(F.desc("rank_q"), F.asc("word"))
+            .limit(top_k)
         )
-        # r10: cut the lineage each round (the pagerank idiom) — the
-        # broadcast of round i otherwise re-plans/re-executes rounds
-        # 1..i-1 as nested subplans (~80 Exchanges in the final plan)
-        from .lineage import truncate_lineage
-
-        ranks = truncate_lineage(ranks, eager=False)
-    out = (
-        ranks.select("word", F.col("r").alias("rank_q"))
-        .orderBy(F.desc("rank_q"), F.asc("word"))
-        .limit(top_k)
-    )
     # hand the top-k back to the caller's session (the SCC idiom)
-    return _in_session(out, parent)
+    return G._in_session(out, parent)

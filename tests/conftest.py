@@ -25,3 +25,14 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture()
+def checkpoint_dir(spark, tmp_path):
+    """Reliable checkpoints for the test (ext/lineage.py): they write
+    files and persist no RDD."""
+    d = str(tmp_path / "ckpt")
+    spark.sparkContext.setCheckpointDir(d)
+    yield d
+    # clear: None maps to a JVM null -> Option(null) == None
+    spark.sparkContext._jsc.sc().setCheckpointDir(None)

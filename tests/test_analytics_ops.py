@@ -1989,3 +1989,31 @@ def test_iterative_driver_finish_matches_distributed(spark, monkeypatch):
     assert pr_drv == pr_dist
     assert ppr_drv == ppr_dist
     assert sssp_drv == sssp_dist
+
+
+def test_hits_driver_finish_matches_distributed(spark, monkeypatch):
+    """hits_bipartite's driver finisher (exact Python Σ score·w, then
+    the distributed half's IEEE double normalization) must match the
+    distributed half-rounds bit for bit — including weights large
+    enough that the Σ passes 2^53 and the double conversion rounds."""
+    rng = random.Random(29)
+    for wmax in (9, 4 * 10**9):
+        edges = sorted(
+            {
+                (rng.randrange(15), 100 + rng.randrange(12), rng.randint(1, wmax))
+                for _ in range(60)
+            }
+        )
+        edf = spark.createDataFrame(edges, "src long, dst long, w long")
+
+        def run():
+            hubs, auth = G.hits_bipartite(edf, rounds=2)
+            return sorted(map(tuple, hubs.collect())), sorted(
+                map(tuple, auth.collect())
+            )
+
+        drv = run()
+        with monkeypatch.context() as m:
+            m.setattr(G, "ITER_DRIVER_FINISH_EDGES", 0)
+            dist = run()
+        assert drv == dist and len(drv[0]) > 0 and len(drv[1]) > 0

@@ -6,20 +6,10 @@ from __future__ import annotations
 
 import os
 
-import pytest
 from pyspark.sql import functions as F
 
 from monzo_data_pipeline_spark.ext.dedup_fuzzy import near_dup_clusters
 from monzo_data_pipeline_spark.ext.lineage import truncate_lineage
-
-
-@pytest.fixture()
-def checkpoint_dir(spark, tmp_path):
-    d = str(tmp_path / "ckpt")
-    spark.sparkContext.setCheckpointDir(d)
-    yield d
-    # clear: None maps to a JVM null -> Option(null) == None
-    spark.sparkContext._jsc.sc().setCheckpointDir(None)
 
 
 def _pairs(spark):
