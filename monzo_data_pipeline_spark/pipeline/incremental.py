@@ -86,11 +86,16 @@ def merge_gold_state(wh: Warehouse, new_silver_rows: DataFrame) -> None:
 
 
 def gold_from_state(wh: Warehouse) -> DataFrame:
-    """Finalize: state → the same schema build_gold materializes
-    (total_spend, avg_spend as double)."""
+    """Finalize: state → exactly the schema build_gold materializes
+    (total_spend as its exact decimal sum, avg_spend as that sum in
+    double ÷ count)."""
+    # build_gold's SUM over MONEY_DECIMAL is decimal(28,2) (Spark widens
+    # a decimal sum's precision by 10); folded state sums widen further,
+    # so the total is cast back
+    total = F.col("total_dec").cast("decimal(28,2)")
     return wh.read(GOLD_STATE).select(
         "year",
         "month",
-        F.col("total_dec").cast("double").alias("total_spend"),
-        (F.col("total_dec").cast("double") / F.col("n")).alias("avg_spend"),
+        total.alias("total_spend"),
+        (total.cast("double") / F.col("n")).alias("avg_spend"),
     )

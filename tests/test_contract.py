@@ -4,6 +4,7 @@ different cwd (the mapInPandas-closure bug class)."""
 
 from __future__ import annotations
 
+import json
 import os
 import subprocess
 import sys
@@ -101,6 +102,41 @@ print("OK")
     )
     assert out.returncode == 0, out.stderr[-2000:]
     assert "OK" in out.stdout
+
+
+def test_driver_jit_profile_survives_caller_java_options(tmp_path):
+    """get_spark's driver JIT profile rides in
+    spark.driver.defaultJavaOptions, so a caller's own
+    spark.driver.extraJavaOptions (the benchmark passes one) is added
+    to it rather than replacing it. Both must reach the driver JVM."""
+    script = tmp_path / "probe.py"
+    script.write_text(
+        f"""
+import json, sys
+sys.path.insert(0, {REPO!r})
+from monzo_data_pipeline_spark.session import get_spark
+spark = get_spark(
+    "jit-profile",
+    extra_conf={{"spark.driver.extraJavaOptions": "-Dgraft.probe=1"}},
+)
+mx = spark.sparkContext._jvm.java.lang.management.ManagementFactory
+print(json.dumps(list(mx.getRuntimeMXBean().getInputArguments())))
+spark.stop()
+"""
+    )
+    out = subprocess.run(
+        [sys.executable, str(script)],
+        cwd=str(tmp_path),
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    args = json.loads(out.stdout.strip().splitlines()[-1])
+    assert "-XX:TieredStopAtLevel=1" in args
+    assert "-Dgraft.probe=1" in args
+    # Spark's own module-access flags are still passed
+    assert any(a.startswith("--add-opens") for a in args)
 
 
 def test_sql_api_parity(spark, sf_dir):

@@ -1,6 +1,6 @@
 """Interleaved A/B runner: times queries against the code tree given
 as argv[1] (inserted at sys.path[0], so the PATCHED tree's modules are
-the ones imported — unlike profile_r11.py, which pins its own repo).
+the ones imported).
 
 Usage: python tools/ab_run.py <repo_root> <runs> <query> [query ...]
 Prints one JSON line per query: jobs, spin, noop_s list, topandas min.
