@@ -46,6 +46,17 @@ table format; production would use Delta/Iceberg (SCALE_DESIGN.md §3)
 — the point here is that the ENGINE's pipeline code (medallion.py
 stages) runs unchanged against either, because the transaction handle
 exposes the same read/append/overwrite/exists surface as Warehouse.
+
+`run_pipeline_atomic` is delta-driven. Its delta is the run's new
+bronze rows (anti-joined against bronze, persisted once). The
+invariant that makes the delta enough: every committed run leaves
+every bronze key in silver, and silver ids ⊆ bronze ids. So a key new
+to silver can only come from this run's delta, and the delta's ids are
+new to silver too. Silver folds the delta only, gold folds it through
+the mergeable state of `incremental.py`, and row counts come from the
+manifest's per-dir ``num_rows`` (`AtomicWarehouse.rows`).
+`tests/test_pipeline.py` pins the result to `medallion.run_pipeline`'s
+full recompute over nine runs.
 """
 
 from __future__ import annotations
@@ -63,13 +74,23 @@ MANIFEST = "_manifest.json"
 MANIFEST_DIR = "_manifests"
 
 _STATS_TYPES = (int, float, str)  # JSON-exact, totally ordered per type
+ROWS_KEY = "__rows__"  # per-dir row count in the manifest's stats
 
 
 class ConflictError(Exception):
     """Another writer committed since this transaction began."""
 
 
-def _dir_stats(abs_dir: str) -> dict[str, list]:
+def _footers(abs_dir: str):
+    """Footer metadata of every part file in a data directory."""
+    import pyarrow.parquet as pq
+
+    for name in sorted(os.listdir(abs_dir)):
+        if name.endswith(".parquet"):
+            yield pq.ParquetFile(os.path.join(abs_dir, name)).metadata
+
+
+def _dir_stats(abs_dir: str) -> dict:
     """Per-directory column min/max, aggregated over every part file's
     row-group footer stats — computed ONCE at write time (footers are
     hot in page cache) and recorded in the manifest, the Delta/Iceberg
@@ -77,15 +98,14 @@ def _dir_stats(abs_dir: str) -> dict[str, list]:
     without touching data OR footers. Columns whose stats are missing
     anywhere, or whose min/max are not JSON-exact scalars (timestamps,
     decimals, binaries), are omitted — absence means "cannot prune",
-    never "absent"."""
-    import pyarrow.parquet as pq
-
+    never "absent". The directory's row count (footer ``num_rows``)
+    is recorded under ``ROWS_KEY``, so `AtomicWarehouse.rows` needs no
+    Spark job."""
     acc: dict[str, object] = {}
     poison = object()
-    for name in sorted(os.listdir(abs_dir)):
-        if not name.endswith(".parquet"):
-            continue
-        md = pq.ParquetFile(os.path.join(abs_dir, name)).metadata
+    n_rows = 0
+    for md in _footers(abs_dir):
+        n_rows += md.num_rows
         for rg in range(md.num_row_groups):
             row_group = md.row_group(rg)
             for j in range(row_group.num_columns):
@@ -116,7 +136,9 @@ def _dir_stats(abs_dir: str) -> dict[str, list]:
                     acc[cname] = [mn, mx]
                 else:
                     acc[cname] = [min(cur[0], mn), max(cur[1], mx)]
-    return {c: v for c, v in acc.items() if v is not poison and v is not None}
+    out = {c: v for c, v in acc.items() if v is not poison and v is not None}
+    out[ROWS_KEY] = n_rows
+    return out
 
 
 def _may_contain(stats: dict | None, col: str, values: list) -> bool:
@@ -249,6 +271,8 @@ def _bloom_may_contain(stats: dict | None, col: str, values: list) -> bool:
 
 class AtomicWarehouse:
     """Manifest-pointer parquet store with multi-table transactions.
+    `rows(table)` answers a table's row count from the manifest, with
+    no Spark job.
 
     Single-op `append`/`overwrite` auto-wrap in a one-table
     transaction, so the class is drop-in for medallion.Warehouse;
@@ -303,6 +327,24 @@ class AtomicWarehouse:
     def overwrite(self, df: DataFrame, table: str) -> None:
         with self.transaction() as txn:
             txn.overwrite(df, table)
+
+    def rows(self, table: str) -> int:
+        """The table's row count from the manifest: the footer
+        ``num_rows`` each data dir recorded when it was written. No
+        Spark job and no data IO. A dir committed before counts were
+        recorded falls back to its parquet footers (pyarrow)."""
+        man = self.manifest()
+        dirs = man["tables"].get(table)
+        if not dirs:
+            raise FileNotFoundError(f"table {table!r} not in manifest")
+        stats = man.get("stats", {})
+        total = 0
+        for rel in dirs:
+            n = stats.get(rel, {}).get(ROWS_KEY)
+            if n is None:
+                n = sum(md.num_rows for md in _footers(self._abs(rel)))
+            total += n
+        return total
 
     # -- manifest-stat pruning --------------------------------------------
     def pruned_dirs(self, table: str, col: str, values: list) -> tuple[list, list]:
@@ -814,8 +856,11 @@ def run_pipeline_atomic(
     transaction, so bronze, all silver tables, and gold flip to the
     new snapshot together — or, on any failure, not at all.
 
-    The stages are medallion.py's, unmodified: the transaction handle
-    is interface-compatible with Warehouse.
+    The stages are medallion.py's, run delta-driven (the module
+    docstring's delta invariant): silver and gold fold only this run's
+    new bronze rows, so a run's cost follows its batch, not the
+    warehouse's age. Row counts come from the manifest (`rows`), not
+    from count jobs.
     """
     from .medallion import (
         BRONZE_TX,
@@ -835,22 +880,25 @@ def run_pipeline_atomic(
         logger = RunLogger(run_id, run_ts, jsonl_path=run_log_jsonl)
 
     with wh.transaction() as txn:
-        appended = load_bronze(txn, batch)
-        if logger:
-            logger.log("bronze", "merged", appended=appended)
-        transform_silver(txn, inserted_at=run_ts)
-        if logger:
-            logger.log("silver", "transformed")
-        build_gold(txn)
+        appended, delta = load_bronze(txn, batch, keep_delta=True)
+        try:
+            if logger:
+                logger.log("bronze", "merged", appended=appended)
+            new_silver = transform_silver(txn, inserted_at=run_ts, delta=delta)
+            if logger:
+                logger.log("silver", "transformed")
+            build_gold(txn, new_silver=new_silver)
+        finally:
+            delta.unpersist()
         if logger:
             logger.log("gold", "built")
             # A28: the run log commits WITH the data — one pointer swap
             logger.flush(spark, txn)
     return {
         "bronze_appended": appended,
-        "bronze_total": wh.read(BRONZE_TX).count(),
-        "silver_tx": wh.read(SILVER_TX).count(),
-        "silver_counterparties": wh.read(SILVER_CP).count(),
-        "silver_merchants": wh.read(SILVER_ME).count(),
-        "gold_rows": wh.read(GOLD_MONTHLY).count(),
+        "bronze_total": wh.rows(BRONZE_TX),
+        "silver_tx": wh.rows(SILVER_TX),
+        "silver_counterparties": wh.rows(SILVER_CP),
+        "silver_merchants": wh.rows(SILVER_ME),
+        "gold_rows": wh.rows(GOLD_MONTHLY),
     }

@@ -1,6 +1,6 @@
 """Incremental gold maintenance: mergeable partial-aggregate state.
 
-`build_gold` (medallion.py) recomputes the monthly aggregate from ALL
+`build_gold` (medallion.py) without a delta rebuilds gold from ALL
 of silver each run — correct, and fine at reference scale (≤200 new
 rows/run, /root/reference/src/utils/api/api_client.py:158), but at
 100 TB a full-history rescan per incremental batch is the single worst
@@ -27,6 +27,8 @@ which are themselves mergeable state.
 Exactness: state totals are DECIMAL (functions/deterministic.py), so
 incremental and full-recompute gold are bit-identical regardless of
 how history was batched — asserted by tests/test_incremental.py.
+`build_gold(new_silver=...)`, which `atomic.run_pipeline_atomic`
+calls, folds each run's new silver rows through this state.
 """
 
 from __future__ import annotations

@@ -14,6 +14,27 @@ minus its bugs and its SQLite-file-through-S3 shuffling:
     consistency; real multi-table transactions need Delta/Iceberg —
     SURVEY.md §7.5).
 
+Delta-driven runs. `load_bronze(keep_delta=True)` hands back the run's
+delta: the batch's rows whose ids are new to bronze, persisted once.
+Silver is insert-or-ignore (SCD 0) and every committed run leaves every
+bronze key present in silver, with silver ids ⊆ bronze ids. So a key
+new to silver can only come from the delta, and every delta id is new
+to silver. `transform_silver(delta=...)` therefore folds the delta
+alone: counterparties and merchants are still anti-joined against
+silver's keys (they recur across runs), while the fact rows append as
+they are. `build_gold(new_silver=...)` folds the appended fact rows
+into the mergeable state of `incremental.py`. Without those arguments
+the stages recompute from full bronze / silver, which is what
+`run_pipeline` over a plain `Warehouse` does and what the delta path
+is tested against (`atomic.run_pipeline_atomic` is the delta caller).
+
+First-wins order is total. A re-delivered id can arrive twice in one
+batch with only ``settled`` changed, and a merchant can appear with two
+addresses under one (name, category). Ordering on non-unique columns
+would leave the survivor to physical row order, so each first-wins
+sort ends with every remaining column (`BRONZE_TIE_BREAK`,
+`MERCHANT_ORDER`); `sql_path.py` uses the same order.
+
 Storage layout: one parquet directory per table under a warehouse
 root. At 100 TB, bronze_transactions would add
 ``.partitionBy(ingest_date)`` so incremental loads touch one
@@ -60,6 +81,25 @@ _MERCHANT_COLS = [
 ]
 
 
+# bronze first-wins within one batch: earliest retrieval, then
+# creation, then the unsettled version (NULL sorts first, and the first
+# delivery of a transaction carries no ``settled``); the rest of the
+# columns make the order total
+_BRONZE_STAMPS = ["date_retrieved", "created", "settled"]
+BRONZE_TIE_BREAK = _BRONZE_STAMPS + [
+    f.name
+    for f in BRONZE_TRANSACTIONS_SCHEMA.fields
+    if f.name not in _BRONZE_STAMPS + ["id"]
+]
+# merchants first-wins per id: name, category, then every other
+# attribute, so two addresses under one (name, category) cannot tie
+MERCHANT_ORDER = ["name", "category"] + [
+    c.removeprefix("merchant_")
+    for c in _MERCHANT_COLS
+    if c not in ("merchant_id", "merchant_name", "merchant_category")
+]
+
+
 class Warehouse:
     """Parquet-backed table store (the catalog of the pipeline)."""
 
@@ -83,11 +123,15 @@ class Warehouse:
         df.write.mode("append").parquet(self.path(table))
 
 
-def load_bronze(wh: Warehouse, batch: DataFrame) -> int:
+def load_bronze(
+    wh: Warehouse, batch: DataFrame, keep_delta: bool = False
+) -> int | tuple[int, DataFrame]:
     """A11+A14 — idempotent bronze append: only ids not already present
     land; within-batch duplicates collapse first (first-wins by
-    date_retrieved, id). Returns rows appended."""
-    batch = first_wins_dedup(batch, ["id"], ["date_retrieved", "created"])
+    `BRONZE_TIE_BREAK`). Returns rows appended. With ``keep_delta``
+    returns ``(rows appended, delta)``: the appended rows, still
+    persisted for the delta-driven stages; the caller unpersists."""
+    batch = first_wins_dedup(batch, ["id"], BRONZE_TIE_BREAK)
     if wh.exists(BRONZE_TX):
         existing = wh.read(BRONZE_TX)
         new_rows = anti_join_new_rows(batch, existing, ["id"])
@@ -100,8 +144,12 @@ def load_bronze(wh: Warehouse, batch: DataFrame) -> int:
         n = new_rows.count()
         if n:
             wh.append(new_rows, BRONZE_TX)
-    finally:
+    except BaseException:
         new_rows.unpersist()
+        raise
+    if keep_delta:
+        return n, new_rows
+    new_rows.unpersist()
     return n
 
 
@@ -136,15 +184,22 @@ def latest_pots(wh: Warehouse) -> DataFrame:
     ).drop("__neg_ts")
 
 
-def transform_silver(wh: Warehouse, inserted_at: str) -> None:
+def transform_silver(
+    wh: Warehouse, inserted_at: str, delta: DataFrame | None = None
+) -> DataFrame | None:
     """A15-A18 — bronze → silver, set-based.
 
     Reference: transform_bronze_to_silver.sql:1-59. INSERT OR IGNORE
     becomes: first-wins dedup over bronze ∪ existing-silver keyspace,
     then left-anti append (only genuinely new keys land, existing rows
     are never overwritten — SCD type 0).
+
+    With ``delta`` (this run's new bronze rows, see the module
+    docstring) only the delta is folded, its fact rows are appended
+    without an anti-join, and those appended rows are returned for
+    `build_gold`. Without it all of bronze is read and None returned.
     """
-    bronze = wh.read(BRONZE_TX)
+    bronze = wh.read(BRONZE_TX) if delta is None else delta
 
     # counterparties: DISTINCT over both-keys-NOT-NULL (sql:1-8)
     cps = distinct_entities(
@@ -168,7 +223,7 @@ def transform_silver(wh: Warehouse, inserted_at: str) -> None:
         ["id"] + [c.removeprefix("merchant_") for c in _MERCHANT_COLS if c != "merchant_id"],
         not_null=["id"],
     )
-    merch = first_wins_dedup(merch, ["id"], ["name", "category"])
+    merch = first_wins_dedup(merch, ["id"], MERCHANT_ORDER)
     _merge_append(wh, merch, SILVER_ME, ["id"])
 
     # fact: 14-col projection + money cast + audit stamp (sql:37-59);
@@ -192,14 +247,33 @@ def transform_silver(wh: Warehouse, inserted_at: str) -> None:
         "counterparty_sort_code",
         "merchant_id",
     ).withColumn("inserted_at", F.lit(inserted_at).cast("timestamp"))
+    if delta is not None:
+        # delta ids are unique and new to silver: nothing to dedup or ignore
+        wh.append(fact, SILVER_TX)
+        return fact
     fact = first_wins_dedup(fact, ["id"], ["created"])
     _merge_append(wh, fact, SILVER_TX, ["id"])
+    return None
 
 
-def build_gold(wh: Warehouse) -> None:
+def build_gold(wh: Warehouse, new_silver: DataFrame | None = None) -> None:
     """B1 — the dormant gold_monthly_spending transform
     (create_gold_layer.sql:1-6), materialized: spend = outflows
-    (amount < 0), summed exactly in decimal."""
+    (amount < 0), summed exactly in decimal.
+
+    With ``new_silver`` (the fact rows this run appended) gold is
+    folded incrementally: the rows merge into the mergeable state of
+    `incremental.py` and gold is finalized from it, bit-identical to
+    the full recompute. A warehouse with no state yet builds it once
+    from all of silver, which already holds ``new_silver``."""
+    if new_silver is not None:
+        from .incremental import GOLD_STATE, gold_from_state, merge_gold_state
+
+        if not wh.exists(GOLD_STATE):
+            new_silver = wh.read(SILVER_TX)
+        merge_gold_state(wh, new_silver)
+        wh.overwrite(gold_from_state(wh), GOLD_MONTHLY)
+        return
     tx = wh.read(SILVER_TX)
     gold = (
         tx.filter(F.col("amount") < 0)
@@ -231,8 +305,8 @@ def _merge_append(wh: Warehouse, rows: DataFrame, table: str, keys: list[str]) -
     if wh.exists(table):
         rows = anti_join_new_rows(rows, wh.read(table), keys).persist()
         try:
-            rows.count()
-            wh.append(rows, table)
+            if rows.count():
+                wh.append(rows, table)
         finally:
             rows.unpersist()
     else:

@@ -27,6 +27,7 @@ from .medallion import (
     SILVER_ME,
     SILVER_TX,
     Warehouse,
+    MERCHANT_ORDER,
     _MERCHANT_COLS,
     _merge_append,
 )
@@ -83,6 +84,8 @@ def _silver_script(inserted_at: str) -> str:
         f"{c} AS {'id' if c == 'merchant_id' else c.removeprefix('merchant_')}"
         for c in _MERCHANT_COLS
     )
+    # the DataFrame path's total first-wins order (medallion.MERCHANT_ORDER)
+    merchant_order = ", ".join(f"{c} ASC" for c in MERCHANT_ORDER)
     return f"""
     -- counterparties: DISTINCT, both keys NOT NULL (sql:1-8)
     CREATE OR REPLACE TEMP VIEW silver_cps_sqlpath AS
@@ -103,7 +106,7 @@ def _silver_script(inserted_at: str) -> str:
     CREATE OR REPLACE TEMP VIEW silver_merchants_sqlpath AS
     SELECT * EXCEPT (__rn) FROM (
         SELECT *, row_number() OVER (PARTITION BY id
-                                     ORDER BY name ASC, category ASC) AS __rn
+                                     ORDER BY {merchant_order}) AS __rn
         FROM (
             SELECT DISTINCT {merchant_aliases}
             FROM bronze_tx

@@ -44,3 +44,20 @@ def checkpoint_dir(spark, tmp_path):
     yield d
     # clear: None maps to a JVM null -> Option(null) == None
     spark.sparkContext._jsc.sc().setCheckpointDir(None)
+
+
+@pytest.fixture()
+def jobs_in(spark):
+    """``jobs_in(group, fn)`` runs ``fn()`` under Spark job group
+    ``group`` and returns ``(fn(), ids of the jobs it ran)``."""
+    sc = spark.sparkContext
+
+    def run(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

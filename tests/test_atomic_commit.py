@@ -663,3 +663,89 @@ def test_bloom_survives_compaction_and_vacuum(spark, tmp_path):
     ).count() == 1
     wh.vacuum(min_age_seconds=0)
     assert wh.read("tx").count() == 900
+
+
+
+def test_manifest_row_counts_match_reads(spark, tmp_path):
+    """Every write path records its dir's footer num_rows, so rows()
+    equals a counted read after each of them."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from monzo_data_pipeline_spark.pipeline.atomic import compact_table
+    from monzo_data_pipeline_spark.pipeline.erasure import erase_keys_atomic
+
+    wh = AtomicWarehouse(spark, str(tmp_path / "wh"))
+
+    def check(table):
+        assert wh.rows(table) == wh.read(table).count(), table
+
+    wh.append(_df(spark, range(10), "user_id"), "t")
+    check("t")
+    wh.append(_df(spark, range(10, 25), "user_id"), "t")
+    check("t")
+    wh.overwrite(_df(spark, range(7), "user_id"), "o")
+    check("o")
+    with wh.transaction() as txn:
+        txn.replace_dirs("t", drop=txn.tables["t"][:1], df=_df(spark, [99], "user_id"))
+    check("t")
+    src = tmp_path / "src"
+    src.mkdir()
+    pq.write_table(pa.table({"user_id": list(range(100, 104))}), str(src / "p.parquet"))
+    with wh.transaction() as txn:
+        txn.append_parquet_dir(str(src), "t")
+    check("t")
+    compact_table(wh, "t")
+    check("t")
+    erase_keys_atomic(wh, _df(spark, [3, 11, 101], "user_id"), "user_id", ["t", "o"])
+    check("t")
+    check("o")
+    assert wh.rows("t") == 15 + 1 + 4 - 2
+
+
+def test_manifest_row_counts_fall_back_to_footers_without_a_job(spark, tmp_path, jobs_in):
+    """A manifest committed before counts were recorded (its stats
+    carry min/max but no row count) is counted from parquet footers,
+    with no Spark job."""
+    import json
+
+    from monzo_data_pipeline_spark.pipeline.atomic import MANIFEST, ROWS_KEY
+
+    wh = AtomicWarehouse(spark, str(tmp_path / "wh"))
+    wh.append(_df(spark, range(30)), "t")
+    wh.append(_df(spark, range(5)), "t")
+    man = wh.manifest()
+    for st in man["stats"].values():
+        del st[ROWS_KEY]
+    with open(os.path.join(wh.root, MANIFEST), "w") as f:
+        json.dump(man, f)
+
+    n, jobs = jobs_in("rows-fallback", lambda: wh.rows("t"))
+    assert n == 35 and jobs == []
+    with pytest.raises(FileNotFoundError):
+        wh.rows("missing")
+
+
+def test_persisted_shuffled_frame_lands_as_one_file(spark, tmp_path):
+    """get_spark lets AQE re-plan cached plans: a persisted frame
+    that went through a shuffle is written at the advisory partition
+    size (one small file here), not as shuffle.partitions files."""
+    from pyspark.sql import functions as F
+
+    wh = AtomicWarehouse(spark, str(tmp_path / "wh"))
+    df = (
+        spark.range(2000)
+        .groupBy((F.col("id") % 200).alias("k"))
+        .agg(F.count(F.lit(1)).alias("n"))
+        .persist()
+    )
+    try:
+        assert df.count() == 200
+        with wh.transaction() as txn:
+            txn.append(df, "t")
+    finally:
+        df.unpersist()
+    (rel,) = wh.manifest()["tables"]["t"]
+    files = [n for n in os.listdir(wh._abs(rel)) if n.endswith(".parquet")]
+    assert len(files) == 1
+    assert wh.rows("t") == 200

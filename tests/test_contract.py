@@ -134,6 +134,9 @@ spark.stop()
     assert out.returncode == 0, out.stderr[-2000:]
     args = json.loads(out.stdout.strip().splitlines()[-1])
     assert "-XX:TieredStopAtLevel=1" in args
+    # C1 only would otherwise size the code cache as a non-tiered VM
+    # (48 MB), which a long session fills
+    assert "-XX:ReservedCodeCacheSize=240m" in args
     assert "-Dgraft.probe=1" in args
     # Spark's own module-access flags are still passed
     assert any(a.startswith("--add-opens") for a in args)

@@ -5,12 +5,13 @@ leaves every table identical)."""
 
 from __future__ import annotations
 
-from datetime import datetime
+from datetime import datetime, timedelta
 
 import pytest
 
 from monzo_data_pipeline_spark.pipeline import ingest as ING
 from monzo_data_pipeline_spark.pipeline import medallion as MED
+from monzo_data_pipeline_spark.schemas import BRONZE_TRANSACTIONS_SCHEMA
 
 
 @pytest.fixture()
@@ -134,3 +135,145 @@ def test_split_sql_script_respects_quotes_and_comments():
     stmts = split_sql_script(script)
     assert len(stmts) == 3
     assert "'a;b'" in stmts[0] and "SELECT 2" in stmts[2]
+
+
+_EPOCH = datetime(2025, 1, 1)
+
+
+def _tx(i: int, first_run: int, retrieved: datetime, settled: bool) -> dict:
+    """One bronze row of transaction ``i`` first delivered in run
+    ``first_run``; a re-delivery repeats it with only ``settled`` and
+    ``date_retrieved`` changed. Each run brings one new merchant and one
+    new counterparty, and every merchant is seen with two addresses
+    under one (name, category)."""
+    created = _EPOCH + timedelta(days=9 * first_run, hours=5 * i)
+    amount = -(137 * i + 11 * first_run + 99) if i % 4 else 50 + i
+    merch = f"m{i % 5}" if i < 20 else f"n{first_run}"
+    has_cp = i % 3 == 0
+    return {
+        "id": f"tx_{first_run}_{i}",
+        "description": f"payment {i}",
+        "amount": amount,
+        "currency": "GBP",
+        "created": created,
+        "category": "general",
+        "notes": "",
+        "is_load": False,
+        "settled": created + timedelta(hours=1) if settled else None,
+        "local_amount": amount,
+        "local_currency": "GBP",
+        "counterparty_name": f"cp{i % 4}-{first_run % 2}" if has_cp else None,
+        "counterparty_account_num": (
+            (1000 + i % 4 if i < 24 else 2000 + first_run) if has_cp else None
+        ),
+        "counterparty_sort_code": 400000 if has_cp else None,
+        "merchant_id": merch if i % 3 else None,
+        "merchant_name": f"M {merch}",
+        "merchant_category": "groceries",
+        "merchant_logo": "",
+        "merchant_emoji": "",
+        "merchant_online": False,
+        "merchant_atm": False,
+        "merchant_address": f"{(first_run + i) % 2} High St",
+        "merchant_city": "London",
+        "merchant_postcode": "E1 6AN",
+        "merchant_country": "GBR",
+        "merchant_latitude": 51.5,
+        "merchant_longitude": -0.1,
+        "merchant_google_places_id": "",
+        "merchant_suggested_tags": ["tag_a"],
+        "merchant_foursquare_id": "",
+        "merchant_website": "",
+        "date_retrieved": retrieved,
+    }
+
+
+def _run_ts(run: int) -> datetime:
+    return _EPOCH + timedelta(days=9 * run + 8)
+
+
+def _feed(spark, run: int):
+    """Run ``run``'s bronze batch: 30 fresh ids (every third unsettled),
+    two of them re-delivered settled within the batch, late settles of
+    the previous run's unsettled ids, and a re-delivery from two runs
+    back."""
+    ts = _run_ts(run)
+    rows = [_tx(i, run, ts, settled=i % 3 != 0) for i in range(30)]
+    rows += [_tx(i, run, ts, settled=True) for i in (0, 3)]
+    if run >= 1:
+        rows += [_tx(i, run - 1, ts, settled=True) for i in (0, 6, 9)]
+    if run >= 2:
+        rows.append(_tx(1, run - 2, ts, settled=True))
+    names = [f.name for f in BRONZE_TRANSACTIONS_SCHEMA.fields]
+    return spark.createDataFrame(
+        [tuple(r[n] for n in names) for r in rows], BRONZE_TRANSACTIONS_SCHEMA
+    )
+
+
+def _table_rows(wh, table):
+    df = wh.read(table)
+    return df.schema, sorted(map(str, df.collect()))
+
+
+_TABLES = (MED.BRONZE_TX, MED.SILVER_TX, MED.SILVER_CP, MED.SILVER_ME, MED.GOLD_MONTHLY)
+
+
+def test_first_wins_survivor_independent_of_row_order(spark, tmp_path):
+    """Ties in a first-wins sort (an id re-delivered within one batch
+    with only ``settled`` changed; one merchant under two addresses)
+    must not leave the survivor to physical row order: the same bronze
+    rows in two orders give identical bronze and silver."""
+    from pyspark.sql import functions as F
+
+    base = _feed(spark, 0)
+    order = ["id", "settled", "merchant_address"]
+    batches = (
+        base.repartition(1).sortWithinPartitions(*[F.col(c).asc() for c in order]),
+        base.repartition(1).sortWithinPartitions(*[F.col(c).desc() for c in order]),
+    )
+    got = []
+    for k, batch in enumerate(batches):
+        wh = MED.Warehouse(spark, str(tmp_path / f"wh{k}"))
+        MED.load_bronze(wh, batch)
+        MED.transform_silver(wh, inserted_at=_run_ts(0).isoformat())
+        got.append([_table_rows(wh, t) for t in _TABLES[:4]])
+    assert got[0] == got[1]
+    # the first delivery (unsettled) of a re-delivered id wins
+    (row,) = (
+        MED.Warehouse(spark, str(tmp_path / "wh0"))
+        .read(MED.BRONZE_TX)
+        .filter("id = 'tx_0_0'")
+        .collect()
+    )
+    assert row.settled is None
+
+
+def test_delta_driven_atomic_run_matches_full_recompute(spark, tmp_path, jobs_in):
+    """run_pipeline_atomic folds each run's delta; medallion.run_pipeline
+    recomputes silver and gold from full bronze over a plain Warehouse.
+    Over nine runs with re-deliveries and late settles every table is
+    equal (schema and rows, decimal total_spend uncast), the returned
+    counts agree, and a run's Spark job count does not grow with the
+    warehouse."""
+    from monzo_data_pipeline_spark.pipeline.atomic import (
+        AtomicWarehouse,
+        run_pipeline_atomic,
+    )
+
+    full = MED.Warehouse(spark, str(tmp_path / "full"))
+    delta = AtomicWarehouse(spark, str(tmp_path / "delta"))
+    jobs = {}
+    for run in range(1, 10):
+        batch = _feed(spark, run - 1)
+        ts = _run_ts(run - 1).isoformat()
+        want = MED.run_pipeline(spark, full, batch, ts)
+        got, ids = jobs_in(
+            f"delta-run-{run}", lambda: run_pipeline_atomic(spark, delta, batch, ts)
+        )
+        jobs[run] = len(ids)
+        assert got == want, run
+        assert got["bronze_appended"] > 0
+    for table in _TABLES:
+        assert _table_rows(delta, table) == _table_rows(full, table), table
+    assert dict(delta.read(MED.GOLD_MONTHLY).dtypes)["total_spend"] == "decimal(28,2)"
+    assert jobs[8] == jobs[2], jobs
