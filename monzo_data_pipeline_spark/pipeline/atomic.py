@@ -3,9 +3,8 @@
 The reference loads transactions, balance, and pots inside ONE SQLite
 transaction — a single `conn.commit()` makes all three tables visible
 together (/root/reference/src/load/load.py:271,277). Plain parquet
-directories have no such boundary: medallion.Warehouse orders writes
-(dims before fact) but a crash mid-run exposes a half-updated
-warehouse.
+directories (medallion.Warehouse) have no such boundary: a crash
+mid-run exposes a half-updated warehouse.
 
 This module is the plain-parquet answer — the same design Delta Lake
 and Iceberg use, reduced to its core:
@@ -47,16 +46,19 @@ table format; production would use Delta/Iceberg (SCALE_DESIGN.md §3)
 stages) runs unchanged against either, because the transaction handle
 exposes the same read/append/overwrite/exists surface as Warehouse.
 
-`run_pipeline_atomic` is delta-driven. Its delta is the run's new
-bronze rows (anti-joined against bronze, persisted once). The
-invariant that makes the delta enough: every committed run leaves
-every bronze key in silver, and silver ids ⊆ bronze ids. So a key new
-to silver can only come from this run's delta, and the delta's ids are
-new to silver too. Silver folds the delta only, gold folds it through
-the mergeable state of `incremental.py`, and row counts come from the
-manifest's per-dir ``num_rows`` (`AtomicWarehouse.rows`).
-`tests/test_pipeline.py` pins the result to `medallion.run_pipeline`'s
-full recompute over nine runs.
+`run_pipeline_atomic` is the one medallion run, and it is
+delta-driven. Its delta is the run's new bronze rows (anti-joined
+against bronze, persisted once). The invariant that makes the delta
+enough: every committed run leaves every bronze key in silver, and
+silver ids ⊆ bronze ids. So a key new to silver can only come from
+this run's delta, and the delta's ids are new to silver too. Silver
+folds the delta only, gold folds it through the mergeable state of
+`incremental.py`, and row counts come from the manifest's per-dir
+``num_rows`` (`AtomicWarehouse.rows`). A run with an empty delta
+writes no silver or gold data. `tests/test_pipeline.py` pins the
+result over nine runs to an independent full recompute: the SQL
+front end's silver (`sql_path.transform_silver_sql`) and an
+exact-decimal gold aggregate.
 """
 
 from __future__ import annotations
@@ -275,7 +277,7 @@ class AtomicWarehouse:
     no Spark job.
 
     Single-op `append`/`overwrite` auto-wrap in a one-table
-    transaction, so the class is drop-in for medallion.Warehouse;
+    transaction, so it has medallion.Warehouse's surface;
     `transaction()` groups any number of writes across any number of
     tables into one atomic visibility switch.
     """
@@ -859,19 +861,14 @@ def run_pipeline_atomic(
     The stages are medallion.py's, run delta-driven (the module
     docstring's delta invariant): silver and gold fold only this run's
     new bronze rows, so a run's cost follows its batch, not the
-    warehouse's age. Row counts come from the manifest (`rows`), not
-    from count jobs.
+    warehouse's age. An empty delta cannot hold a key new to silver,
+    so such a run skips silver and gold. Row counts come from the
+    manifest (`rows`), not from count jobs; a table not yet written
+    counts 0. The stages are looked up on the medallion module at call
+    time, so a caller that patches them (tracing, fault injection)
+    sees every stage.
     """
-    from .medallion import (
-        BRONZE_TX,
-        GOLD_MONTHLY,
-        SILVER_CP,
-        SILVER_ME,
-        SILVER_TX,
-        build_gold,
-        load_bronze,
-        transform_silver,
-    )
+    from . import medallion
 
     logger = None
     if run_id is not None:
@@ -880,25 +877,29 @@ def run_pipeline_atomic(
         logger = RunLogger(run_id, run_ts, jsonl_path=run_log_jsonl)
 
     with wh.transaction() as txn:
-        appended, delta = load_bronze(txn, batch, keep_delta=True)
+        appended, delta = medallion.load_bronze(txn, batch)
         try:
             if logger:
                 logger.log("bronze", "merged", appended=appended)
-            new_silver = transform_silver(txn, inserted_at=run_ts, delta=delta)
-            if logger:
-                logger.log("silver", "transformed")
-            build_gold(txn, new_silver=new_silver)
+            if appended:
+                new_silver = medallion.transform_silver(txn, run_ts, delta)
+                if logger:
+                    logger.log("silver", "transformed")
+                medallion.build_gold(txn, new_silver)
+                if logger:
+                    logger.log("gold", "built")
         finally:
             delta.unpersist()
         if logger:
-            logger.log("gold", "built")
             # A28: the run log commits WITH the data — one pointer swap
             logger.flush(spark, txn)
-    return {
-        "bronze_appended": appended,
-        "bronze_total": wh.rows(BRONZE_TX),
-        "silver_tx": wh.rows(SILVER_TX),
-        "silver_counterparties": wh.rows(SILVER_CP),
-        "silver_merchants": wh.rows(SILVER_ME),
-        "gold_rows": wh.rows(GOLD_MONTHLY),
+    tables = {
+        "bronze_total": medallion.BRONZE_TX,
+        "silver_tx": medallion.SILVER_TX,
+        "silver_counterparties": medallion.SILVER_CP,
+        "silver_merchants": medallion.SILVER_ME,
+        "gold_rows": medallion.GOLD_MONTHLY,
+    }
+    return {"bronze_appended": appended} | {
+        key: wh.rows(t) if wh.exists(t) else 0 for key, t in tables.items()
     }

@@ -1,14 +1,13 @@
 """Incremental gold maintenance: mergeable partial-aggregate state.
 
-`build_gold` (medallion.py) without a delta rebuilds gold from ALL
-of silver each run — correct, and fine at reference scale (≤200 new
-rows/run, /root/reference/src/utils/api/api_client.py:158), but at
-100 TB a full-history rescan per incremental batch is the single worst
-cost in the pipeline. The standard fix is the same trick Spark's own
-partial aggregation uses inside one job, lifted to *between* jobs:
-keep the gold table as mergeable STATE (per-group exact-decimal SUM +
-COUNT — the algebraic decomposition of sum/avg), and fold each new
-batch in:
+Gold is never rebuilt from all of silver. A full-history rescan per
+incremental batch would be the single worst cost of the pipeline at
+100 TB, while the reference adds ≤200 rows a run (its
+src/utils/api/api_client.py:158). The standard fix is
+the same trick Spark's own partial aggregation uses inside one job,
+lifted to *between* jobs: keep the gold table as mergeable STATE
+(per-group exact-decimal SUM + COUNT — the algebraic decomposition of
+sum/avg), and fold each new batch in:
 
     state ⊕ partial(batch)  →  re-agg over (|state| + |batch-groups|)
                                rows, never over full history
@@ -25,26 +24,36 @@ forms are the sketches in approx_aggregates (HLL++, KLL quantiles),
 which are themselves mergeable state.
 
 Exactness: state totals are DECIMAL (functions/deterministic.py), so
-incremental and full-recompute gold are bit-identical regardless of
-how history was batched — asserted by tests/test_incremental.py.
-`build_gold(new_silver=...)`, which `atomic.run_pipeline_atomic`
-calls, folds each run's new silver rows through this state.
+folded gold is bit-identical to an exact-decimal full recompute
+regardless of how history was batched — asserted by
+tests/test_incremental.py and tests/test_pipeline.py.
+
+Writers: `medallion.build_gold` (inside `atomic.run_pipeline_atomic`'s
+transaction) and `streaming.ingest.stream_silver_to_gold` (one
+transaction per micro-batch, with its epoch ledger). Both hand in an
+`AtomicWarehouse` or its transaction, where an overwrite lands in a
+fresh data directory: the state is read from the old directory while
+the new one is written, so the fold needs no persist or count job.
 """
 
 from __future__ import annotations
 
+from typing import TYPE_CHECKING
+
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions.deterministic import MONEY_DECIMAL
-from .medallion import Warehouse
+
+if TYPE_CHECKING:
+    from .atomic import AtomicWarehouse, _Transaction
 
 GOLD_STATE = "gold_monthly_state"
 
 
 def partial_state(new_silver_rows: DataFrame) -> DataFrame:
     """Partial (map-side analog) aggregate of one batch: exact-decimal
-    spend total + row count per (year, month). Spend = outflows,
-    matching build_gold."""
+    spend total + row count per (year, month). Spend = outflows
+    (amount < 0), as in create_gold_layer.sql."""
     return (
         new_silver_rows.filter(F.col("amount") < 0)
         .groupBy(
@@ -58,42 +67,36 @@ def partial_state(new_silver_rows: DataFrame) -> DataFrame:
     )
 
 
-def merge_gold_state(wh: Warehouse, new_silver_rows: DataFrame) -> None:
+def merge_gold_state(
+    wh: AtomicWarehouse | _Transaction, new_silver_rows: DataFrame
+) -> None:
     """Fold a new silver batch into the gold state (state ⊕ delta).
 
     DECIMAL sums are associative/commutative, so any batching of
-    history folds to the same state.
+    history folds to the same state. ``wh`` is an `AtomicWarehouse` or
+    its transaction: the overwrite goes to a fresh directory, never
+    the one the state is read from.
     """
-    delta = partial_state(new_silver_rows)
+    folded = partial_state(new_silver_rows)
     if wh.exists(GOLD_STATE):
-        state = wh.read(GOLD_STATE)
-        merged = (
-            state.unionByName(delta)
+        folded = (
+            wh.read(GOLD_STATE)
+            .unionByName(folded)
             .groupBy("year", "month")
             .agg(
                 F.sum("total_dec").alias("total_dec"),
                 F.sum("n").alias("n"),
             )
         )
-        # state is read and rewritten in one job; persist decouples the
-        # read from the overwrite (same pattern as medallion._merge_append)
-        merged = merged.persist()
-        try:
-            merged.count()
-            wh.overwrite(merged, GOLD_STATE)
-        finally:
-            merged.unpersist()
-    else:
-        wh.overwrite(delta, GOLD_STATE)
+    wh.overwrite(folded, GOLD_STATE)
 
 
-def gold_from_state(wh: Warehouse) -> DataFrame:
-    """Finalize: state → exactly the schema build_gold materializes
-    (total_spend as its exact decimal sum, avg_spend as that sum in
-    double ÷ count)."""
-    # build_gold's SUM over MONEY_DECIMAL is decimal(28,2) (Spark widens
-    # a decimal sum's precision by 10); folded state sums widen further,
-    # so the total is cast back
+def gold_from_state(wh: AtomicWarehouse | _Transaction) -> DataFrame:
+    """Finalize: state → gold_monthly_spending (total_spend as the
+    exact decimal sum, avg_spend as that sum in double ÷ count)."""
+    # a full recompute's SUM over silver's decimal(18,2) amounts is
+    # decimal(28,2) (Spark widens a decimal sum's precision by 10);
+    # folded state sums widen further, so the total is cast back
     total = F.col("total_dec").cast("decimal(28,2)")
     return wh.read(GOLD_STATE).select(
         "year",

@@ -1,4 +1,4 @@
-"""Medallion pipeline: bronze → silver → gold over parquet tables.
+"""Medallion pipeline stages: bronze → silver → gold over parquet tables.
 
 Mirrors the reference's run shape (/root/reference/src/main.py:19-85)
 minus its bugs and its SQLite-file-through-S3 shuffling:
@@ -6,27 +6,27 @@ minus its bugs and its SQLite-file-through-S3 shuffling:
     replacing the per-row existence probe (load.py:39-45);
   * silver is A15-A18 composed: distinct entity extraction,
     deterministic first-wins dedup, projection+cast+stamp;
-  * gold is the dormant B1 monthly aggregate, implemented;
-  * a failed transform FAILS the run — the reference's exception
-    swallow (transform.py:13-16) is a bug, not a semantic
-    (SURVEY.md §7.4);
-  * write order: dims before fact (best-effort cross-table
-    consistency; real multi-table transactions need Delta/Iceberg —
-    SURVEY.md §7.5).
+  * gold is the dormant B1 monthly aggregate, implemented as mergeable
+    state (`incremental.py`);
+  * a failed stage FAILS the run — the reference's exception swallow
+    (transform.py:13-16) is a bug, not a semantic (SURVEY.md §7.4);
+  * one run is one commit: `atomic.run_pipeline_atomic` runs the three
+    stages inside one `AtomicWarehouse` transaction, so every table
+    changes together, like the reference's single `conn.commit()`
+    (load.py:271,277).
 
-Delta-driven runs. `load_bronze(keep_delta=True)` hands back the run's
-delta: the batch's rows whose ids are new to bronze, persisted once.
-Silver is insert-or-ignore (SCD 0) and every committed run leaves every
-bronze key present in silver, with silver ids ⊆ bronze ids. So a key
-new to silver can only come from the delta, and every delta id is new
-to silver. `transform_silver(delta=...)` therefore folds the delta
-alone: counterparties and merchants are still anti-joined against
-silver's keys (they recur across runs), while the fact rows append as
-they are. `build_gold(new_silver=...)` folds the appended fact rows
-into the mergeable state of `incremental.py`. Without those arguments
-the stages recompute from full bronze / silver, which is what
-`run_pipeline` over a plain `Warehouse` does and what the delta path
-is tested against (`atomic.run_pipeline_atomic` is the delta caller).
+The run is delta-driven. `load_bronze` returns the run's delta: the
+batch's rows whose ids are new to bronze, persisted once. Silver is
+insert-or-ignore (SCD 0) and every committed run leaves every bronze
+key present in silver, with silver ids ⊆ bronze ids. So a key new to
+silver can only come from the delta, and every delta id is new to
+silver. `transform_silver` therefore folds the delta alone:
+counterparties and merchants are still anti-joined against silver's
+keys (they recur across runs), while the fact rows append as they are.
+`build_gold` folds the appended fact rows into the gold state. The
+full recomputes these folds are tested against are
+`sql_path.transform_silver_sql` for silver and an exact-decimal
+aggregate over all of silver for gold (`tests/`).
 
 First-wins order is total. A re-delivered id can arrive twice in one
 batch with only ``settled`` changed, and a merchant can appear with two
@@ -45,12 +45,16 @@ is unchanged.
 from __future__ import annotations
 
 import os
+from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.dedup import anti_join_new_rows, distinct_entities, first_wins_dedup
 from ..schemas import BRONZE_TRANSACTIONS_SCHEMA
+
+if TYPE_CHECKING:
+    from .atomic import AtomicWarehouse, _Transaction
 
 BRONZE_TX = "bronze_transactions"
 BRONZE_BALANCE = "bronze_balance"
@@ -101,7 +105,10 @@ MERCHANT_ORDER = ["name", "category"] + [
 
 
 class Warehouse:
-    """Parquet-backed table store (the catalog of the pipeline)."""
+    """Plain parquet table store: one directory per table, writes
+    visible as they land, no transactions. The index, IVM and erasure
+    helpers write through it; the medallion run writes through
+    `atomic.AtomicWarehouse`, which has the same surface."""
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
@@ -123,14 +130,12 @@ class Warehouse:
         df.write.mode("append").parquet(self.path(table))
 
 
-def load_bronze(
-    wh: Warehouse, batch: DataFrame, keep_delta: bool = False
-) -> int | tuple[int, DataFrame]:
+def load_bronze(wh: Warehouse, batch: DataFrame) -> tuple[int, DataFrame]:
     """A11+A14 — idempotent bronze append: only ids not already present
     land; within-batch duplicates collapse first (first-wins by
-    `BRONZE_TIE_BREAK`). Returns rows appended. With ``keep_delta``
-    returns ``(rows appended, delta)``: the appended rows, still
-    persisted for the delta-driven stages; the caller unpersists."""
+    `BRONZE_TIE_BREAK`). Returns ``(rows appended, delta)``: the
+    appended rows, still persisted for the delta-driven stages; the
+    caller unpersists the delta."""
     batch = first_wins_dedup(batch, ["id"], BRONZE_TIE_BREAK)
     if wh.exists(BRONZE_TX):
         existing = wh.read(BRONZE_TX)
@@ -147,10 +152,7 @@ def load_bronze(
     except BaseException:
         new_rows.unpersist()
         raise
-    if keep_delta:
-        return n, new_rows
-    new_rows.unpersist()
-    return n
+    return n, new_rows
 
 
 def load_snapshots(
@@ -184,26 +186,20 @@ def latest_pots(wh: Warehouse) -> DataFrame:
     ).drop("__neg_ts")
 
 
-def transform_silver(
-    wh: Warehouse, inserted_at: str, delta: DataFrame | None = None
-) -> DataFrame | None:
-    """A15-A18 — bronze → silver, set-based.
+def transform_silver(wh: Warehouse, inserted_at: str, delta: DataFrame) -> DataFrame:
+    """A15-A18 — bronze → silver, set-based, folding this run's
+    ``delta`` (its new bronze rows, see the module docstring).
 
     Reference: transform_bronze_to_silver.sql:1-59. INSERT OR IGNORE
-    becomes: first-wins dedup over bronze ∪ existing-silver keyspace,
-    then left-anti append (only genuinely new keys land, existing rows
-    are never overwritten — SCD type 0).
-
-    With ``delta`` (this run's new bronze rows, see the module
-    docstring) only the delta is folded, its fact rows are appended
-    without an anti-join, and those appended rows are returned for
-    `build_gold`. Without it all of bronze is read and None returned.
+    becomes: first-wins dedup of the delta's entities, then left-anti
+    append against silver's keys (only genuinely new keys land,
+    existing rows are never overwritten — SCD type 0). The delta's
+    fact rows are new to silver by the delta invariant, so they append
+    without an anti-join and are returned for `build_gold`.
     """
-    bronze = wh.read(BRONZE_TX) if delta is None else delta
-
     # counterparties: DISTINCT over both-keys-NOT-NULL (sql:1-8)
     cps = distinct_entities(
-        bronze.select(
+        delta.select(
             F.col("counterparty_account_num").alias("account_num"),
             F.col("counterparty_sort_code").alias("sort_code"),
             F.col("counterparty_name").alias("name"),
@@ -216,7 +212,7 @@ def transform_silver(
 
     # merchants: DISTINCT over merchant_id NOT NULL (sql:10-35)
     merch = distinct_entities(
-        bronze.select(
+        delta.select(
             *[F.col(c).alias(c.removeprefix("merchant_") if c != "merchant_id" else "id")
               for c in _MERCHANT_COLS]
         ),
@@ -229,7 +225,7 @@ def transform_silver(
     # fact: 14-col projection + money cast + audit stamp (sql:37-59);
     # bronze pence (long) → silver pounds decimal(18,2), NOT the
     # reference's lossy INTEGER→REAL (SURVEY.md §7.1)
-    fact = bronze.select(
+    fact = delta.select(
         "id",
         "description",
         (F.col("amount").cast("decimal(18,2)") / 100).cast("decimal(18,2)").alias("amount"),
@@ -247,52 +243,27 @@ def transform_silver(
         "counterparty_sort_code",
         "merchant_id",
     ).withColumn("inserted_at", F.lit(inserted_at).cast("timestamp"))
-    if delta is not None:
-        # delta ids are unique and new to silver: nothing to dedup or ignore
-        wh.append(fact, SILVER_TX)
-        return fact
-    fact = first_wins_dedup(fact, ["id"], ["created"])
-    _merge_append(wh, fact, SILVER_TX, ["id"])
-    return None
+    # delta ids are unique and new to silver: nothing to dedup or ignore
+    wh.append(fact, SILVER_TX)
+    return fact
 
 
-def build_gold(wh: Warehouse, new_silver: DataFrame | None = None) -> None:
+def build_gold(wh: AtomicWarehouse | _Transaction, new_silver: DataFrame) -> None:
     """B1 — the dormant gold_monthly_spending transform
     (create_gold_layer.sql:1-6), materialized: spend = outflows
     (amount < 0), summed exactly in decimal.
 
-    With ``new_silver`` (the fact rows this run appended) gold is
-    folded incrementally: the rows merge into the mergeable state of
-    `incremental.py` and gold is finalized from it, bit-identical to
-    the full recompute. A warehouse with no state yet builds it once
-    from all of silver, which already holds ``new_silver``."""
-    if new_silver is not None:
-        from .incremental import GOLD_STATE, gold_from_state, merge_gold_state
+    ``new_silver`` (the fact rows this run appended) merges into the
+    mergeable state of `incremental.py` and gold is finalized from it,
+    bit-identical to a full recompute. A warehouse with no state yet
+    builds it once from all of silver, which already holds
+    ``new_silver``."""
+    from .incremental import GOLD_STATE, gold_from_state, merge_gold_state
 
-        if not wh.exists(GOLD_STATE):
-            new_silver = wh.read(SILVER_TX)
-        merge_gold_state(wh, new_silver)
-        wh.overwrite(gold_from_state(wh), GOLD_MONTHLY)
-        return
-    tx = wh.read(SILVER_TX)
-    gold = (
-        tx.filter(F.col("amount") < 0)
-        .groupBy(
-            F.year("created").alias("year"),
-            F.month("created").alias("month"),
-        )
-        .agg(
-            F.sum(-F.col("amount")).alias("total_spend"),
-            # engine davg policy (functions/deterministic.py): exact
-            # decimal sum ÷ count in double — not F.avg's decimal
-            # scale+4 rounding — so incremental state (pipeline/
-            # incremental.py) folds to bit-identical gold
-            (F.sum(-F.col("amount")).cast("double") / F.count(F.lit(1))).alias(
-                "avg_spend"
-            ),
-        )
-    )
-    wh.overwrite(gold, GOLD_MONTHLY)
+    if not wh.exists(GOLD_STATE):
+        new_silver = wh.read(SILVER_TX)
+    merge_gold_state(wh, new_silver)
+    wh.overwrite(gold_from_state(wh), GOLD_MONTHLY)
 
 
 def _merge_append(wh: Warehouse, rows: DataFrame, table: str, keys: list[str]) -> None:
@@ -312,21 +283,3 @@ def _merge_append(wh: Warehouse, rows: DataFrame, table: str, keys: list[str]) -
     else:
         wh.overwrite(rows, table)
 
-
-def run_pipeline(
-    spark: SparkSession, wh: Warehouse, batch: DataFrame, run_ts: str
-) -> dict[str, int]:
-    """One pipeline run (the reference's lambda_handler shape):
-    bronze merge → silver transform → gold build. Any stage failure
-    propagates — no exception swallowing."""
-    appended = load_bronze(wh, batch)
-    transform_silver(wh, inserted_at=run_ts)
-    build_gold(wh)
-    return {
-        "bronze_appended": appended,
-        "bronze_total": wh.read(BRONZE_TX).count(),
-        "silver_tx": wh.read(SILVER_TX).count(),
-        "silver_counterparties": wh.read(SILVER_CP).count(),
-        "silver_merchants": wh.read(SILVER_ME).count(),
-        "gold_rows": wh.read(GOLD_MONTHLY).count(),
-    }

@@ -74,9 +74,9 @@ def get_spark(
         ``persist()``-ed shuffled frame is coalesced to
         ``advisoryPartitionSizeInBytes`` instead of keeping
         ``shuffle.partitions`` partitions. Every persisted frame that is
-        then written (``load_bronze``, ``_merge_append``,
-        ``merge_gold_state``) lands as one file per 64 MB, not 32 tiny
-        files per write that every later scan must open. Spark's
+        then written (``load_bronze``, ``_merge_append``) lands as one
+        file per 64 MB, not 32 tiny files per write that every later
+        scan must open. Spark's
         documented trade (the config's description, off by default):
         a query that reads the cached data may then need an extra
         shuffle, because the cache no longer promises its original

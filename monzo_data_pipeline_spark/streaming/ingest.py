@@ -10,13 +10,17 @@ streaming loads — the unified-API payoff.
 
 Exactly-once posture: load_bronze's anti-join makes replayed
 micro-batches no-ops (id-level idempotence), so restart/replay
-semantics don't depend on sink transactionality.
+semantics don't depend on sink transactionality. The gold-state fold
+is not idempotent, so `stream_silver_to_gold` commits each fold
+together with its epoch-ledger row in one `AtomicWarehouse`
+transaction.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+from ..pipeline.atomic import AtomicWarehouse
 from ..pipeline.medallion import Warehouse, load_bronze
 
 
@@ -31,7 +35,8 @@ def stream_wire_to_bronze(
     from ..pipeline.ingest import flatten_bronze
 
     def merge_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        load_bronze(wh, flatten_bronze(batch_df, ingest_ts))
+        _, delta = load_bronze(wh, flatten_bronze(batch_df, ingest_ts))
+        delta.unpersist()
 
     return (
         wire_stream.writeStream.foreachBatch(merge_batch)
@@ -43,7 +48,7 @@ def stream_wire_to_bronze(
 
 def stream_silver_to_gold(
     silver_stream: DataFrame,
-    wh: Warehouse,
+    wh: AtomicWarehouse,
     checkpoint_dir: str,
 ):
     """Maintain the incremental gold state (pipeline/incremental.py)
@@ -56,7 +61,9 @@ def stream_silver_to_gold(
     (`gold_epochs` table) and skips epochs it has already folded — the
     standard transactional-foreachBatch pattern, valid because a
     deterministic file source re-forms identical micro-batches for
-    identical epoch ids.
+    identical epoch ids. The fold and its ledger row commit in one
+    transaction, so a crash between them cannot leave an epoch folded
+    but unrecorded (and folded again on replay).
     """
     from pyspark.sql import functions as F
 
@@ -68,11 +75,12 @@ def stream_silver_to_gold(
             seen = {r["epoch_id"] for r in wh.read("gold_epochs").collect()}
             if epoch_id in seen:
                 return
-        merge_gold_state(wh, batch_df)
         ledger = spark.createDataFrame(
             [(int(epoch_id),)], "epoch_id long"
         ).withColumn("folded", F.lit(True))
-        wh.append(ledger, "gold_epochs")
+        with wh.transaction() as txn:
+            merge_gold_state(txn, batch_df)
+            txn.append(ledger, "gold_epochs")
 
     return (
         silver_stream.writeStream.foreachBatch(fold_batch)

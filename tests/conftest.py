@@ -61,3 +61,27 @@ def jobs_in(spark):
         return out, list(sc.statusTracker().getJobIdsForGroup(group))
 
     return run
+
+
+@pytest.fixture(scope="session")
+def exact_gold():
+    """``exact_gold(silver)`` recomputes gold_monthly_spending from all
+    of silver's fact rows: outflows (amount < 0) summed exactly in
+    decimal per (year, month), ``avg_spend`` that sum in double ÷
+    count (the engine's davg policy, functions/deterministic.py). The
+    independent full recompute the incremental gold fold
+    (pipeline/incremental.py) must match bit for bit."""
+    from pyspark.sql import functions as F
+
+    def recompute(silver):
+        spend = -F.col("amount")
+        return (
+            silver.filter(F.col("amount") < 0)
+            .groupBy(F.year("created").alias("year"), F.month("created").alias("month"))
+            .agg(
+                F.sum(spend).alias("total_spend"),
+                (F.sum(spend).cast("double") / F.count(F.lit(1))).alias("avg_spend"),
+            )
+        )
+
+    return recompute

@@ -26,7 +26,7 @@ from monzo_data_pipeline_spark.pipeline.config import (  # noqa: E402
 from monzo_data_pipeline_spark.pipeline.runlog import RUN_LOG_TABLE  # noqa: E402
 
 
-def _batch(spark):
+def _batch(spark, day: int = 1):
     from monzo_data_pipeline_spark.pipeline.ingest import (
         cursor_windows,
         fetch_transactions_distributed,
@@ -34,7 +34,7 @@ def _batch(spark):
         make_fake_fetch,
     )
 
-    windows = cursor_windows(datetime(2025, 1, 1), datetime(2025, 1, 2), 24)
+    windows = cursor_windows(datetime(2025, 1, day), datetime(2025, 1, day + 1), 24)
     wire = fetch_transactions_distributed(spark, make_fake_fetch(), windows)
     return flatten_bronze(wire, "2025-01-03T00:00:00")
 
@@ -101,33 +101,47 @@ def test_run_log_commits_with_data(spark, tmp_path):
     assert wh.manifest()["version"] == 1
 
 
-def test_failed_run_ships_no_log_rows(spark, tmp_path, monkeypatch):
-    """A crash after bronze but before commit: the transactional log
-    has no trace of the run (the reference's upload-after-the-fact
-    gap, closed); the local jsonl mirror still shows progress."""
+_STAGES = ["load_bronze", "transform_silver", "build_gold"]
+
+
+@pytest.mark.parametrize("stage", _STAGES)
+def test_failed_run_ships_no_log_rows(spark, tmp_path, monkeypatch, stage):
+    """A crash in any stage before commit: the error propagates, the
+    run commits nothing and the transactional log has no trace of it
+    (the reference's upload-after-the-fact gap, closed); the local
+    jsonl mirror still shows how far it got. The run looks its stages
+    up on `medallion` at call time, so patching them there reaches it
+    (the benchmark's per-layer spans rely on the same lookup)."""
     wh = AtomicWarehouse(spark, str(tmp_path / "wh"))
     # seed v1 so the log table exists
     run_pipeline_atomic(
         spark, wh, _batch(spark), "2025-01-03T00:00:00", run_id="run_1"
     )
     n_before = wh.read(RUN_LOG_TABLE).count()
+    version = wh.manifest()["version"]
 
     def boom(*a, **kw):
-        raise RuntimeError("silver exploded")
+        raise RuntimeError(f"{stage} exploded")
 
     from monzo_data_pipeline_spark.pipeline import medallion
 
-    monkeypatch.setattr(medallion, "transform_silver", boom)
+    monkeypatch.setattr(medallion, stage, boom)
     jsonl = str(tmp_path / "run2.jsonl")
-    with pytest.raises(RuntimeError, match="silver exploded"):
+    # a fresh day: new bronze ids, so every stage runs
+    with pytest.raises(RuntimeError, match=f"{stage} exploded"):
         run_pipeline_atomic(
             spark,
             wh,
-            _batch(spark),
+            _batch(spark, day=2),
             "2025-01-04T00:00:00",
             run_id="run_2",
             run_log_jsonl=jsonl,
         )
+    assert wh.manifest()["version"] == version  # nothing committed
     assert wh.read(RUN_LOG_TABLE).count() == n_before  # nothing shipped
     assert wh.read(RUN_LOG_TABLE).filter("run_id = 'run_2'").count() == 0
-    assert os.path.exists(jsonl)  # but the operator can see how far it got
+    # but the operator can see how far it got
+    logged = ["bronze", "silver"][: _STAGES.index(stage)]
+    seen = [json.loads(x)["stage"] for x in open(jsonl)] if logged else []
+    assert os.path.exists(jsonl) == bool(logged)
+    assert seen == logged

@@ -1,5 +1,6 @@
-"""Incremental gold maintenance: state ⊕ delta must equal a full
-recompute, bit-for-bit, however history is batched."""
+"""Incremental gold maintenance: state ⊕ delta must equal the
+exact-decimal full recompute (the ``exact_gold`` fixture), bit-for-bit,
+however history is batched."""
 
 from __future__ import annotations
 
@@ -11,11 +12,12 @@ from pyspark.sql import functions as F
 from monzo_data_pipeline_spark.pipeline import incremental as INC
 from monzo_data_pipeline_spark.pipeline import ingest as ING
 from monzo_data_pipeline_spark.pipeline import medallion as MED
+from monzo_data_pipeline_spark.pipeline.atomic import AtomicWarehouse
 
 
 @pytest.fixture()
 def warehouse(spark, tmp_path):
-    return MED.Warehouse(spark, str(tmp_path / "wh"))
+    return AtomicWarehouse(spark, str(tmp_path / "wh"))
 
 
 def _silver_batch(spark, start_day: int, n_windows: int, seed_tag: str):
@@ -43,7 +45,14 @@ def _gold(df):
     return df.schema, sorted(map(tuple, df.collect()))
 
 
-def test_incremental_equals_full_recompute(spark, warehouse):
+def _recomputed(wh, exact_gold, silver):
+    """Gold recomputed from all of ``silver``, written and read back
+    like the pipeline's gold table."""
+    wh.overwrite(exact_gold(silver), MED.GOLD_MONTHLY)
+    return _gold(wh.read(MED.GOLD_MONTHLY))
+
+
+def test_incremental_equals_full_recompute(spark, warehouse, exact_gold):
     b1 = _silver_batch(spark, 1, 3, "1")
     b2 = _silver_batch(spark, 4, 2, "2")
     b3 = _silver_batch(spark, 6, 4, "3")
@@ -54,10 +63,7 @@ def test_incremental_equals_full_recompute(spark, warehouse):
     incr = _gold(INC.gold_from_state(warehouse))
 
     # full-recompute path over the concatenated history
-    full_rows = b1.unionByName(b2).unionByName(b3)
-    warehouse.overwrite(full_rows, MED.SILVER_TX)
-    MED.build_gold(warehouse)
-    full = _gold(warehouse.read(MED.GOLD_MONTHLY))
+    full = _recomputed(warehouse, exact_gold, b1.unionByName(b2).unionByName(b3))
 
     assert incr == full
     assert len(incr[1]) > 0
@@ -68,42 +74,76 @@ def test_state_is_batching_invariant(spark, warehouse):
     b1 = _silver_batch(spark, 1, 2, "1")
     b2 = _silver_batch(spark, 3, 2, "2")
 
-    wh_a = MED.Warehouse(spark, warehouse.root + "_a")
+    wh_a = AtomicWarehouse(spark, warehouse.root + "_a")
     INC.merge_gold_state(wh_a, b1)
     INC.merge_gold_state(wh_a, b2)
 
-    wh_b = MED.Warehouse(spark, warehouse.root + "_b")
+    wh_b = AtomicWarehouse(spark, warehouse.root + "_b")
     INC.merge_gold_state(wh_b, b1.unionByName(b2))
 
     assert _gold(INC.gold_from_state(wh_a)) == _gold(INC.gold_from_state(wh_b))
 
 
-def test_streaming_gold_equals_batch_and_survives_replay(spark, warehouse, tmp_path):
+def _stream_gold(spark, wh, silver, tmp_path, ckpt):
+    """Drain ``silver``'s parquet drops (one file per micro-batch)
+    through `stream_silver_to_gold` under checkpoint ``ckpt``."""
+    from monzo_data_pipeline_spark.streaming.ingest import stream_silver_to_gold
+
+    stream = (
+        spark.readStream.schema(silver.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(tmp_path / "silver_drops"))
+    )
+    q = stream_silver_to_gold(stream, wh, str(tmp_path / ckpt))
+    q.awaitTermination(120)
+
+
+def _drops(spark, tmp_path):
+    silver = _silver_batch(spark, 1, 4, "1").cache()
+    silver.repartition(3).write.parquet(str(tmp_path / "silver_drops"))
+    return silver
+
+
+def test_streaming_gold_equals_batch_and_survives_replay(
+    spark, warehouse, tmp_path, exact_gold
+):
     """Silver rows streamed through foreachBatch fold to the same gold
     as a batch recompute; a full replay (fresh checkpoint, same files)
     folds nothing twice thanks to the epoch ledger."""
-    from monzo_data_pipeline_spark.streaming.ingest import stream_silver_to_gold
-
-    silver = _silver_batch(spark, 1, 4, "1").cache()
-    drops = str(tmp_path / "silver_drops")
-    silver.repartition(3).write.parquet(drops)
-
-    def run(ckpt):
-        stream = (
-            spark.readStream.schema(silver.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(drops)
-        )
-        q = stream_silver_to_gold(stream, warehouse, str(tmp_path / ckpt))
-        q.awaitTermination(120)
-
-    run("ckpt1")
+    silver = _drops(spark, tmp_path)
+    _stream_gold(spark, warehouse, silver, tmp_path, "ckpt1")
     incr = _gold(INC.gold_from_state(warehouse))
-
-    warehouse.overwrite(silver, MED.SILVER_TX)
-    MED.build_gold(warehouse)
-    assert incr == _gold(warehouse.read(MED.GOLD_MONTHLY))
+    assert incr == _recomputed(warehouse, exact_gold, silver)
 
     # full replay with a fresh checkpoint: ledger skips every epoch
-    run("ckpt2")
+    _stream_gold(spark, warehouse, silver, tmp_path, "ckpt2")
     assert _gold(INC.gold_from_state(warehouse)) == incr
+
+
+def test_streaming_gold_fold_commits_with_its_epoch(
+    spark, warehouse, tmp_path, monkeypatch, exact_gold
+):
+    """The fold and its `gold_epochs` ledger row commit together: when
+    recording an epoch fails, its fold does not land either, so the
+    replay (fresh checkpoint) folds every epoch exactly once."""
+    from monzo_data_pipeline_spark.pipeline import atomic
+
+    silver = _drops(spark, tmp_path)
+    append = atomic._Transaction.append
+    failed = []
+
+    def flaky(txn, df, table):
+        if table == "gold_epochs" and not failed:
+            failed.append(table)
+            raise OSError("ledger write lost")
+        return append(txn, df, table)
+
+    monkeypatch.setattr(atomic._Transaction, "append", flaky)
+    with pytest.raises(Exception):
+        _stream_gold(spark, warehouse, silver, tmp_path, "ckpt1")
+    assert failed
+
+    _stream_gold(spark, warehouse, silver, tmp_path, "ckpt2")
+    assert _gold(INC.gold_from_state(warehouse)) == _recomputed(
+        warehouse, exact_gold, silver
+    )

@@ -11,12 +11,26 @@ import pytest
 
 from monzo_data_pipeline_spark.pipeline import ingest as ING
 from monzo_data_pipeline_spark.pipeline import medallion as MED
+from monzo_data_pipeline_spark.pipeline import sql_path as SQLP
+from monzo_data_pipeline_spark.pipeline.atomic import AtomicWarehouse, run_pipeline_atomic
+from monzo_data_pipeline_spark.pipeline.incremental import GOLD_STATE
 from monzo_data_pipeline_spark.schemas import BRONZE_TRANSACTIONS_SCHEMA
 
 
 @pytest.fixture()
 def warehouse(spark, tmp_path):
-    return MED.Warehouse(spark, str(tmp_path / "wh"))
+    return AtomicWarehouse(spark, str(tmp_path / "wh"))
+
+
+def _silver_through_delta(wh, batch, inserted_at):
+    """Bronze and silver as `run_pipeline_atomic` runs them: silver
+    folds the delta `load_bronze` hands back, in one transaction."""
+    with wh.transaction() as txn:
+        _, delta = MED.load_bronze(txn, batch)
+        try:
+            MED.transform_silver(txn, inserted_at, delta)
+        finally:
+            delta.unpersist()
 
 
 def _batch(spark, n_windows=3):
@@ -43,7 +57,7 @@ def test_distributed_ingest_shape(spark):
 
 def test_pipeline_end_to_end_and_idempotence(spark, warehouse):
     batch = _batch(spark)
-    stats1 = MED.run_pipeline(spark, warehouse, batch, run_ts="2025-01-05T00:00:00")
+    stats1 = run_pipeline_atomic(spark, warehouse, batch, run_ts="2025-01-05T00:00:00")
     assert stats1["bronze_appended"] > 0
     assert stats1["silver_tx"] == stats1["bronze_total"]
     assert stats1["silver_merchants"] > 0
@@ -51,7 +65,7 @@ def test_pipeline_end_to_end_and_idempotence(spark, warehouse):
     assert stats1["gold_rows"] > 0
 
     # same batch again → nothing changes anywhere (A11/A17 property)
-    stats2 = MED.run_pipeline(spark, warehouse, batch, run_ts="2025-02-01T00:00:00")
+    stats2 = run_pipeline_atomic(spark, warehouse, batch, run_ts="2025-02-01T00:00:00")
     assert stats2["bronze_appended"] == 0
     for k in ("bronze_total", "silver_tx", "silver_counterparties", "silver_merchants", "gold_rows"):
         assert stats2[k] == stats1[k], k
@@ -86,11 +100,11 @@ def test_balance_and_pots_snapshot_log(spark, warehouse):
 
 def test_incremental_batch_appends_only_new(spark, warehouse):
     b1 = _batch(spark, n_windows=2)
-    MED.run_pipeline(spark, warehouse, b1, run_ts="2025-01-05T00:00:00")
+    run_pipeline_atomic(spark, warehouse, b1, run_ts="2025-01-05T00:00:00")
     n1 = warehouse.read(MED.BRONZE_TX).count()
 
     b2 = _batch(spark, n_windows=3)  # superset: windows 1-2 overlap
-    stats = MED.run_pipeline(spark, warehouse, b2, run_ts="2025-01-06T00:00:00")
+    stats = run_pipeline_atomic(spark, warehouse, b2, run_ts="2025-01-06T00:00:00")
     n2 = warehouse.read(MED.BRONZE_TX).count()
     assert stats["bronze_appended"] == n2 - n1 > 0
 
@@ -103,15 +117,14 @@ def test_incremental_batch_appends_only_new(spark, warehouse):
 
 def test_sql_path_transform_matches_dataframe_path(spark, tmp_path):
     """SURVEY §3.2: the SQL-script front end and the DataFrame path
-    must produce byte-identical silver layers from the same bronze."""
-    from monzo_data_pipeline_spark.pipeline import sql_path as SQLP
-
+    must produce byte-identical silver layers from the same bronze: the
+    DataFrame path folding the run's delta, the SQL path recomputing
+    from all of bronze."""
     batch = _batch(spark)
-    wh_df = MED.Warehouse(spark, str(tmp_path / "wh_df"))
+    wh_df = AtomicWarehouse(spark, str(tmp_path / "wh_df"))
     wh_sql = MED.Warehouse(spark, str(tmp_path / "wh_sql"))
-    for wh in (wh_df, wh_sql):
-        MED.load_bronze(wh, batch)
-    MED.transform_silver(wh_df, inserted_at="2025-01-05T00:00:00")
+    _silver_through_delta(wh_df, batch, "2025-01-05T00:00:00")
+    MED.load_bronze(wh_sql, batch)[1].unpersist()
     SQLP.transform_silver_sql(wh_sql, inserted_at="2025-01-05T00:00:00")
 
     for table in (MED.SILVER_TX, MED.SILVER_CP, MED.SILVER_ME):
@@ -204,6 +217,10 @@ def _feed(spark, run: int):
         rows += [_tx(i, run - 1, ts, settled=True) for i in (0, 6, 9)]
     if run >= 2:
         rows.append(_tx(1, run - 2, ts, settled=True))
+    return _frame(spark, rows)
+
+
+def _frame(spark, rows: list[dict]):
     names = [f.name for f in BRONZE_TRANSACTIONS_SCHEMA.fields]
     return spark.createDataFrame(
         [tuple(r[n] for n in names) for r in rows], BRONZE_TRANSACTIONS_SCHEMA
@@ -231,42 +248,56 @@ def test_first_wins_survivor_independent_of_row_order(spark, tmp_path):
         base.repartition(1).sortWithinPartitions(*[F.col(c).asc() for c in order]),
         base.repartition(1).sortWithinPartitions(*[F.col(c).desc() for c in order]),
     )
-    got = []
+    got, whs = [], []
     for k, batch in enumerate(batches):
-        wh = MED.Warehouse(spark, str(tmp_path / f"wh{k}"))
-        MED.load_bronze(wh, batch)
-        MED.transform_silver(wh, inserted_at=_run_ts(0).isoformat())
+        wh = AtomicWarehouse(spark, str(tmp_path / f"wh{k}"))
+        _silver_through_delta(wh, batch, _run_ts(0).isoformat())
         got.append([_table_rows(wh, t) for t in _TABLES[:4]])
+        whs.append(wh)
     assert got[0] == got[1]
     # the first delivery (unsettled) of a re-delivered id wins
-    (row,) = (
-        MED.Warehouse(spark, str(tmp_path / "wh0"))
-        .read(MED.BRONZE_TX)
-        .filter("id = 'tx_0_0'")
-        .collect()
-    )
+    (row,) = whs[0].read(MED.BRONZE_TX).filter("id = 'tx_0_0'").collect()
     assert row.settled is None
 
 
-def test_delta_driven_atomic_run_matches_full_recompute(spark, tmp_path, jobs_in):
-    """run_pipeline_atomic folds each run's delta; medallion.run_pipeline
-    recomputes silver and gold from full bronze over a plain Warehouse.
+def _full_recompute(wh, batch, ts, exact_gold):
+    """The reference run over a plain `Warehouse`: bronze through
+    `load_bronze`, silver recomputed from all of bronze by the SQL front
+    end, gold recomputed exactly from all of silver, and every count
+    read off the table itself."""
+    appended, delta = MED.load_bronze(wh, batch)
+    delta.unpersist()
+    SQLP.transform_silver_sql(wh, inserted_at=ts)
+    wh.overwrite(exact_gold(wh.read(MED.SILVER_TX)), MED.GOLD_MONTHLY)
+    counts = {
+        "bronze_total": MED.BRONZE_TX,
+        "silver_tx": MED.SILVER_TX,
+        "silver_counterparties": MED.SILVER_CP,
+        "silver_merchants": MED.SILVER_ME,
+        "gold_rows": MED.GOLD_MONTHLY,
+    }
+    return {"bronze_appended": appended} | {
+        key: wh.read(t).count() for key, t in counts.items()
+    }
+
+
+def test_delta_driven_atomic_run_matches_full_recompute(
+    spark, tmp_path, jobs_in, exact_gold
+):
+    """run_pipeline_atomic folds each run's delta; the reference
+    recomputes silver (`sql_path.transform_silver_sql`) and gold
+    (exact-decimal aggregate) from full bronze over a plain Warehouse.
     Over nine runs with re-deliveries and late settles every table is
     equal (schema and rows, decimal total_spend uncast), the returned
     counts agree, and a run's Spark job count does not grow with the
     warehouse."""
-    from monzo_data_pipeline_spark.pipeline.atomic import (
-        AtomicWarehouse,
-        run_pipeline_atomic,
-    )
-
     full = MED.Warehouse(spark, str(tmp_path / "full"))
     delta = AtomicWarehouse(spark, str(tmp_path / "delta"))
     jobs = {}
     for run in range(1, 10):
         batch = _feed(spark, run - 1)
         ts = _run_ts(run - 1).isoformat()
-        want = MED.run_pipeline(spark, full, batch, ts)
+        want = _full_recompute(full, batch, ts, exact_gold)
         got, ids = jobs_in(
             f"delta-run-{run}", lambda: run_pipeline_atomic(spark, delta, batch, ts)
         )
@@ -277,3 +308,34 @@ def test_delta_driven_atomic_run_matches_full_recompute(spark, tmp_path, jobs_in
         assert _table_rows(delta, table) == _table_rows(full, table), table
     assert dict(delta.read(MED.GOLD_MONTHLY).dtypes)["total_spend"] == "decimal(28,2)"
     assert jobs[8] == jobs[2], jobs
+
+
+def test_run_without_new_bronze_rows_stages_no_silver_or_gold(spark, warehouse):
+    """A run whose batch brings no new bronze id cannot hold a key new
+    to silver, so it skips silver and gold: a first run over an empty
+    batch commits and counts zero, and a run of re-deliveries only
+    (late settles of committed ids) stages no silver or gold dir."""
+    keys = (
+        "bronze_appended",
+        "bronze_total",
+        "silver_tx",
+        "silver_counterparties",
+        "silver_merchants",
+        "gold_rows",
+    )
+    derived = {MED.SILVER_TX, MED.SILVER_CP, MED.SILVER_ME, MED.GOLD_MONTHLY, GOLD_STATE}
+    empty = spark.createDataFrame([], BRONZE_TRANSACTIONS_SCHEMA)
+    stats = run_pipeline_atomic(spark, warehouse, empty, _run_ts(0).isoformat())
+    assert stats == dict.fromkeys(keys, 0)
+    assert warehouse.manifest()["version"] == 1
+    assert not derived & set(warehouse.manifest()["tables"])
+
+    first = run_pipeline_atomic(spark, warehouse, _feed(spark, 0), _run_ts(0).isoformat())
+    assert first["bronze_appended"] > 0
+    before = warehouse.manifest()["tables"]
+    late = _frame(spark, [_tx(i, 0, _run_ts(1), settled=True) for i in range(30)])
+    again = run_pipeline_atomic(spark, warehouse, late, _run_ts(1).isoformat())
+    assert again == first | {"bronze_appended": 0}
+    after = warehouse.manifest()["tables"]
+    for table in derived:
+        assert after[table] == before[table], table
