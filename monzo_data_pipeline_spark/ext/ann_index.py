@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..pipeline.medallion import Warehouse
+from ..session import local_frame
 from .similarity import ivf_assign, quantized_dot
 
 
@@ -62,8 +63,8 @@ def build_ivf_index(
     # centroid rule under the builder's K), so a search must read K
     # from the artifact, never guess it
     spark = emb.sparkSession
-    spark.createDataFrame(
-        [(int(n_centroids),)], "n_centroids int"
+    local_frame(
+        spark, [(int(n_centroids),)], "n_centroids int"
     ).coalesce(1).write.mode("overwrite").parquet(
         wh.path(table + "__meta")
     )
@@ -224,13 +225,15 @@ def build_ivfpq_index(
         "overwrite"
     ).partitionBy("cell").parquet(wh.path(table))
     spark = emb.sparkSession
-    spark.createDataFrame(
+    local_frame(
+        spark,
         [(int(s), int(c), [float(x) for x in v]) for s, c, v in cbs],
         "sub int, cell int, centroid array<double>",
     ).coalesce(1).write.mode("overwrite").parquet(
         wh.path(table + "__codebook")
     )
-    spark.createDataFrame(
+    local_frame(
+        spark,
         [(int(n_centroids), int(m), int(ksub))],
         "n_centroids int, m int, ksub int",
     ).coalesce(1).write.mode("overwrite").parquet(

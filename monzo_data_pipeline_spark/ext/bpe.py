@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.text import tokens
+from ..session import local_frame
 
 MERGES_SCHEMA = T.StructType(
     [
@@ -146,7 +147,7 @@ def _train(
                 rows.append((step, a, b, a + b, int(cnt)))
                 pat, rep = f"|{a}||{b}|", f"|{a}{b}|"
                 voc = [(s.replace(pat, rep), n) for s, n in voc]
-            return rows, spark.createDataFrame(voc, "s string, n bigint")
+            return rows, local_frame(spark, voc, "s string, n bigint")
         # distributed fallback: cut the lineage once up front (the
         # first pair count materializes it from the cache) and then
         # per rewrite step
@@ -180,7 +181,7 @@ def bpe_merges(
     rows, assembled on the driver like kmeans centroids. Stops early
     if the corpus runs out of pairs."""
     rows, _ = _train(documents, text_col, n_merges)
-    return documents.sparkSession.createDataFrame(rows, MERGES_SCHEMA)
+    return local_frame(documents.sparkSession, rows, MERGES_SCHEMA)
 
 
 def bpe_merges_oracle_sql(n_merges: int = 6) -> str:

@@ -27,6 +27,8 @@ from monzo_data_pipeline_spark.ext.lineage import (
 )
 from pyspark.sql import functions as F
 
+from ..operators.projection import quote_ident
+
 N_MINHASH = 64  # signature length
 LSH_BANDS = 16  # 16 bands x 4 rows: P(candidate) = 1-(1-s^4)^16
 
@@ -861,33 +863,27 @@ def simhash(
         F.col(id_col),
         F.explode(F.split(F.trim(F.lower(F.col(text_col))), r"\s+")).alias("tok"),
     )
-    # Expression-construction note (r10): the 64 accumulators and the
-    # 64-term pack are built as SQL STRINGS (one py4j round-trip per
-    # expr, one JVM-side parse) instead of ~8 Column-API calls each —
-    # the Column chains cost ~1.4 s of DRIVER time per plan build,
-    # re-paid on every run of the query. Identical expressions after
-    # parsing (pinned by tests/test_neardup_oracle_parity.py + gate).
+    # Expression-construction note: the 64 accumulators and the 64-term
+    # pack are one SQL statement over the token frame, parsed once on
+    # the JVM side. Built as Column chains they cost ~1.4 s of DRIVER
+    # time per plan build, and as 64 ``F.expr`` aliases still ~900 py4j
+    # round trips, re-paid on every run of the query. Identical
+    # expressions after parsing (pinned by
+    # tests/test_neardup_oracle_parity.py + gate).
     if hash_family == "xxhash":
         toks = toks.withColumn("h", F.xxhash64("tok"))
-        bit_sums = [
-            F.expr(
-                f"SUM(CASE WHEN (shiftright(h, {j}) & 1) = 1"
-                " THEN 1 ELSE -1 END)"
-            ).alias(f"b{j}")
-            for j in range(64)
-        ]
+        bit = "(shiftright(h, {j}) & 1) = 1"
     else:
         toks = toks.withColumn(
             "h", F.pmod(_poly_hash62(F.col("tok")), F.lit(2147483647))
         )
-        bit_sums = [
-            F.expr(
-                f"SUM(CASE WHEN ({_AFFINE_A[j]} * h + {_AFFINE_B[j]})"
-                " % 2147483647 > 1073741823 THEN 1 ELSE -1 END)"
-            ).alias(f"b{j}")
-            for j in range(64)
-        ]
-    agg = toks.groupBy(id_col).agg(*bit_sums)
+        bit = "({a} * h + {b}) % 2147483647 > 1073741823"
+    bit_sums = ", ".join(
+        "SUM(CASE WHEN "
+        + bit.format(j=j, a=_AFFINE_A[j], b=_AFFINE_B[j])
+        + f" THEN 1 ELSE -1 END) AS b{j}"
+        for j in range(64)
+    )
     # pack sign bits into one signed 64-bit value (bit 63 is the sign bit:
     # 1<<63 as signed long is LONG_MIN, added explicitly)
     packed = " + ".join(
@@ -901,7 +897,12 @@ def simhash(
         + " ELSE CAST(0 AS BIGINT) END)"
         for j in range(64)
     )
-    return agg.select(id_col, F.expr(packed).cast("long").alias("simhash"))
+    key = quote_ident(id_col)
+    return docs.sparkSession.sql(
+        f"SELECT {key}, CAST({packed} AS BIGINT) AS simhash FROM "
+        f"(SELECT {key}, {bit_sums} FROM {{toks}} GROUP BY {key})",
+        toks=toks,
+    )
 
 
 def simhash_near_dup_pairs(

@@ -35,6 +35,8 @@ from monzo_data_pipeline_spark.ext.lineage import (
 )
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 # rank fixed-point scale: 10^9 keeps rank·weight < 2^63 for graphs
 # with total scaled mass ≤ ~9·10^12 per node and edge weights ≤ 10^6
 RANK_SCALE = 1_000_000_000
@@ -1202,7 +1204,7 @@ def strongly_connected_components(
     parent = edges.sparkSession
     n_edges = e_all.count()  # the one job that materializes e_all
     if n_edges == 0:
-        return parent.createDataFrame([], "node long, scc long")
+        return local_frame(parent, [], "node long, scc long")
     # child session: shuffle parallelism ∝ |E|, AQE off below cluster
     # width (see _iteration_session — ~240 AQE stage-jobs per SCC call
     # measured at entity scale vs ONE classic job per stability check)
@@ -1342,8 +1344,8 @@ def strongly_connected_components(
                         adj.setdefault(s, []).append(d)
                     node_ids = [r["__n"] for r in nodes.collect()]
                     comp = _tarjan_min_scc(node_ids, adj)
-                    got_lit = child.createDataFrame(
-                        list(comp.items()), "__n long, __scc long"
+                    got_lit = local_frame(
+                        child, comp.items(), "__n long, __scc long"
                     )
                     assigned = lazy(assigned.unionByName(got_lit))
                     break

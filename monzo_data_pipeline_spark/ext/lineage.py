@@ -29,11 +29,12 @@ from __future__ import annotations
 
 from collections.abc import Iterable, Iterator, Sequence
 from contextlib import contextmanager
-from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..operators.projection import quote_ident
+from ..session import local_frame
 
 
 def truncate_lineage(df: DataFrame, eager: bool = True) -> DataFrame:
@@ -83,7 +84,7 @@ def collect_if_small(
         every path — anything returned from inside the block must not
         still read it lazily (checkpoint or collect it first).
     """
-    not_null = reduce(lambda a, b: a & b, [F.col(k).isNotNull() for k in keys])
+    not_null = " AND ".join(f"{quote_ident(k)} IS NOT NULL" for k in keys)
     cached = df.filter(not_null).persist()
     try:
         tbl = cached.limit(cap + 1).toArrow()
@@ -108,4 +109,4 @@ def keyed_frame(
     schema = T.StructType(
         [T.StructField(key_col, key_type), T.StructField(value_col, value_type)]
     )
-    return spark.createDataFrame(list(items), schema)
+    return local_frame(spark, items, schema)

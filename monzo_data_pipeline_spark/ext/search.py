@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions.text import tokens
+from ..session import local_frame
 from .lineage import collect_if_small, truncate_lineage
 
 # BM25 constants as exact rationals: k1 = 6/5 (1.2), b = 1.
@@ -389,7 +390,7 @@ def textrank_keywords(
             if n == 0:
                 # empty or single-token corpus: no adjacency edges, no
                 # graph — an empty frame instead of dividing by 0
-                return parent.createDataFrame([], "word string, rank_q bigint")
+                return local_frame(parent, [], "word string, rank_q bigint")
             if n <= G.ITER_DRIVER_FINISH_NODES:
                 tele = (3 * 1_000_000) // (20 * n)
                 ow: dict = {}
@@ -402,9 +403,7 @@ def textrank_keywords(
                         acc[d] = acc.get(d, 0) + rank[s] * w // ow[s]
                     rank = {w: tele + 17 * acc.get(w, 0) // 20 for w in words}
                 top = sorted(rank.items(), key=lambda kv: (-kv[1], kv[0]))
-                return parent.createDataFrame(
-                    top[:top_k], "word string, rank_q bigint"
-                )
+                return local_frame(parent, top[:top_k], "word string, rank_q bigint")
         nodes = truncate_lineage(
             edges.select(F.col("src").alias("word"))
             .unionByName(edges.select(F.col("dst").alias("word")))

@@ -21,6 +21,7 @@ import numpy as np
 from pyspark.sql import functions as F
 
 from ..operators.partitioning import fan_out
+from ..session import local_frame
 
 QUANT = 1000000.0
 
@@ -442,7 +443,7 @@ def kmeans_fit(
         # lineage — one extra scan, vs leaking a cached frame into a
         # caller that has no unpersist handle
         emb_q.unpersist()
-    centroids = spark.createDataFrame(cent_rows, cent_schema)
+    centroids = local_frame(spark, cent_rows, cent_schema)
     return _assign_literal(emb_q, cent_rows, id_col, vec_col), centroids
 
 

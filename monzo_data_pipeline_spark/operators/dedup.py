@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .projection import quote_ident
+
 
 def anti_join_new_rows(incoming: DataFrame, existing: DataFrame, keys: list[str]) -> DataFrame:
     """A11 — rows of `incoming` whose key is absent from `existing`.
@@ -39,9 +41,9 @@ def distinct_entities(
     runs map-side before the shuffle.
     """
     out = df
-    for c in not_null or []:
-        out = out.filter(F.col(c).isNotNull())
-    return out.select(*columns).distinct()
+    if not_null:
+        out = out.filter(" AND ".join(f"{quote_ident(c)} IS NOT NULL" for c in not_null))
+    return out.selectExpr(*map(quote_ident, columns)).distinct()
 
 
 def first_wins_dedup(
@@ -55,12 +57,11 @@ def first_wins_dedup(
     deterministic form is a row_number window ordered by the arrival
     stamp (+ tiebreaks) — SURVEY.md §7 hard-part 2.
     """
-    w = Window.partitionBy(*keys).orderBy(*[F.col(c).asc() for c in order_by])
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
+    rn = F.expr(
+        f"row_number() OVER (PARTITION BY {', '.join(map(quote_ident, keys))} "
+        f"ORDER BY {', '.join(map(quote_ident, order_by))})"
     )
+    return df.withColumn("__rn", rn).filter("__rn = 1").drop("__rn")
 
 
 def exact_dedup_stats(df: DataFrame, key_cols: list[str]) -> DataFrame:

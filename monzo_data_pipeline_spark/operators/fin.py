@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 
 def _cents(price) -> "F.Column":
     """Exact integer cents from a double price: floor(p·100 + 0.5) —
@@ -510,9 +512,7 @@ def benford_screen(df: DataFrame, amount_col: str) -> DataFrame:
         eager=False,
     )
     spine = F.broadcast(
-        df.sparkSession.createDataFrame(
-            _BENFORD_PPM, "digit int, expected_ppm bigint"
-        )
+        local_frame(df.sparkSession, _BENFORD_PPM, "digit int, expected_ppm bigint")
     )
     total = F.broadcast(
         counts.agg(F.sum("__n").cast("long").alias("__tot"))

@@ -17,6 +17,18 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
+def quote_ident(name: str) -> str:
+    """``name`` as a backtick-quoted SQL identifier, for plans built
+    from SQL text (``selectExpr``, ``F.expr``)."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def quote_literal(value: str) -> str:
+    """``value`` as a SQL string literal (the text ``F.lit(value)``
+    prints as SQL)."""
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
 def flatten_struct(df: DataFrame, struct_col: str, prefix: str | None = None) -> DataFrame:
     """A7 — flatten one level of a struct column into prefixed top-level columns.
 
@@ -31,9 +43,12 @@ def flatten_struct(df: DataFrame, struct_col: str, prefix: str | None = None) ->
     if struct_col not in struct_fields:
         raise KeyError(f"no column {struct_col!r} in {df.columns}")
     fields = df.schema[struct_col].dataType.names
-    keep = [F.col(c) for c in df.columns if c != struct_col]
-    flat = [F.col(f"{struct_col}.{f}").alias(f"{prefix}{f}") for f in fields]
-    return df.select(*keep, *flat)
+    keep = [quote_ident(c) for c in df.columns if c != struct_col]
+    flat = [
+        f"{quote_ident(struct_col)}.{quote_ident(f)} AS {quote_ident(prefix + f)}"
+        for f in fields
+    ]
+    return df.selectExpr(*keep, *flat)
 
 
 def flatten_transaction_wire(df: DataFrame) -> DataFrame:

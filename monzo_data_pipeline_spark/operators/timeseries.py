@@ -32,6 +32,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.deterministic import davg
+from ..session import local_frame
 
 
 def resample_gap_fill(
@@ -425,7 +426,8 @@ def seasonal_decompose_monthly(
 
     m = truncate_lineage(m)
     spark = df.sparkSession
-    offsets = spark.createDataFrame(
+    offsets = local_frame(
+        spark,
         [(o, 1 if abs(o) == 6 else 2) for o in range(-6, 7)],
         "__off int, __w int",
     )

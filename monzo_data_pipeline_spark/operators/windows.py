@@ -389,9 +389,10 @@ def exact_ntile_multi(
     Contract (all engine callers comply): value columns are
     integer-typed (cast to long losslessly — the stack needs one
     common type) and NON-NULL — a NULL value has no position in the
-    ntile order (the stacked pass drops such rows defensively rather
-    than let a NULL bucket key crash the driver sort — r11, advisory
-    fix); tiebreak columns share one type across specs and are
+    ntile order, so a NULL in the value column of a spec with
+    ``n_buckets > 1`` raises ``ValueError`` (it lands in the NULL
+    order bucket, which the per-(spec, bucket) collect reports: no
+    extra job); tiebreak columns share one type across specs and are
     unique + non-null per the ntile contract.
     """
     if not specs:
@@ -430,8 +431,7 @@ def exact_ntile_multi(
     from .rankstats import _order_bucket
 
     pc0 = (
-        stk.filter(F.col("__v").isNotNull())
-        .groupBy("__si", "__v")
+        stk.groupBy("__si", "__v")
         .agg(F.count(F.lit(1)).alias("__cnt"))
         .withColumn("__b", _order_bucket("__v"))
         .persist()
@@ -443,6 +443,12 @@ def exact_ntile_multi(
         for r in (
             pc0.groupBy("__si", "__b").agg(F.sum("__cnt").alias("t")).collect()
         ):
+            if r["__b"] is None:
+                vc = next(vc for i, _, vc, _, _ in live if i == r["__si"])
+                raise ValueError(
+                    f"exact_ntile_multi: value column {vc!r} holds NULL; "
+                    "a NULL has no position in the ntile order"
+                )
             btot.setdefault(r["__si"], {})[r["__b"]] = r["t"]
         stats = {i: {"n": sum(bs.values())} for i, bs in btot.items()}
         # per-spec boundary row ranks from ntile's size law

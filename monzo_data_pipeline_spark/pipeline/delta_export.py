@@ -44,6 +44,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import local_frame
 from .atomic import MANIFEST_DIR, AtomicWarehouse
 
 DELTA_LOG_DIR = "_delta_log"
@@ -242,7 +243,7 @@ def read_delta_table(
         raise ValueError(f"no metaData action in {table_dir}/_delta_log")
     schema = StructType.fromJson(json.loads(schema_json))
     if not live:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     return spark.read.schema(schema).parquet(
         *[os.path.join(table_dir, p) for p in live]
     )

@@ -36,6 +36,7 @@ import shutil
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from .medallion import Warehouse
 
 
@@ -166,7 +167,7 @@ def erase_keys_pruned(
     spark = ids.sparkSession
     key_vals = [r[0] for r in ids.select(key).distinct().collect()]
     erase_set = F.broadcast(
-        spark.createDataFrame([(k,) for k in key_vals], ids.select(key).schema)
+        local_frame(spark, [(k,) for k in key_vals], ids.select(key).schema)
     )
     report: dict[str, dict] = {}
     for table in tables:
@@ -450,7 +451,7 @@ def erase_keys_atomic_pruned(
     spark = ids.sparkSession
     key_vals = [r[0] for r in ids.select(key).distinct().collect()]
     erase_set = F.broadcast(
-        spark.createDataFrame([(k,) for k in key_vals], ids.select(key).schema)
+        local_frame(spark, [(k,) for k in key_vals], ids.select(key).schema)
     )
     report: dict[str, dict] = {}
     with wh.transaction() as txn:

@@ -55,14 +55,11 @@ def partial_state(new_silver_rows: DataFrame) -> DataFrame:
     spend total + row count per (year, month). Spend = outflows
     (amount < 0), as in create_gold_layer.sql."""
     return (
-        new_silver_rows.filter(F.col("amount") < 0)
-        .groupBy(
-            F.year("created").alias("year"),
-            F.month("created").alias("month"),
-        )
+        new_silver_rows.filter("amount < 0")
+        .groupBy(F.expr("year(created) AS year"), F.expr("month(created) AS month"))
         .agg(
-            F.sum((-F.col("amount")).cast(MONEY_DECIMAL)).alias("total_dec"),
-            F.count(F.lit(1)).alias("n"),
+            F.expr(f"sum(CAST(-amount AS {MONEY_DECIMAL})) AS total_dec"),
+            F.expr("count(1) AS n"),
         )
     )
 
@@ -83,10 +80,7 @@ def merge_gold_state(
             wh.read(GOLD_STATE)
             .unionByName(folded)
             .groupBy("year", "month")
-            .agg(
-                F.sum("total_dec").alias("total_dec"),
-                F.sum("n").alias("n"),
-            )
+            .agg(F.expr("sum(total_dec) AS total_dec"), F.expr("sum(n) AS n"))
         )
     wh.overwrite(folded, GOLD_STATE)
 
@@ -97,10 +91,10 @@ def gold_from_state(wh: AtomicWarehouse | _Transaction) -> DataFrame:
     # a full recompute's SUM over silver's decimal(18,2) amounts is
     # decimal(28,2) (Spark widens a decimal sum's precision by 10);
     # folded state sums widen further, so the total is cast back
-    total = F.col("total_dec").cast("decimal(28,2)")
-    return wh.read(GOLD_STATE).select(
+    total = "CAST(total_dec AS DECIMAL(28,2))"
+    return wh.read(GOLD_STATE).selectExpr(
         "year",
         "month",
-        total.alias("total_spend"),
-        (total.cast("double") / F.col("n")).alias("avg_spend"),
+        f"{total} AS total_spend",
+        f"CAST({total} AS DOUBLE) / n AS avg_spend",
     )

@@ -27,10 +27,14 @@ from datetime import datetime, timedelta
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from ..operators.projection import flatten_transaction_wire
+from ..operators.projection import (
+    flatten_transaction_wire,
+    quote_ident,
+    quote_literal,
+)
 from ..schemas import BRONZE_TRANSACTIONS_SCHEMA, TRANSACTION_WIRE_SCHEMA
+from ..session import local_frame
 
 # (cursor window) -> list of wire-format transaction dicts
 FetchFn = Callable[[str, str], list[dict]]
@@ -65,7 +69,7 @@ def fetch_transactions_distributed(
     Output is the WIRE schema (nested structs); flatten_bronze() below
     applies A7.
     """
-    win_df = spark.createDataFrame(windows, "w_since string, w_before string")
+    win_df = local_frame(spark, windows, "w_since string, w_before string")
     # more windows than default partitions → one task each, full fan-out
     win_df = win_df.repartition(max(len(windows), 1))
 
@@ -86,10 +90,12 @@ def flatten_bronze(wire: DataFrame, ingest_ts: str) -> DataFrame:
     """A7+A12: wire structs → 32-column bronze layout + date_retrieved
     stamp (parameterized, never current_timestamp — SURVEY.md §7.3)."""
     flat = flatten_transaction_wire(wire)
-    flat = flat.withColumn("date_retrieved", F.lit(ingest_ts).cast("timestamp"))
-    return flat.select(
+    return flat.selectExpr(
         *[
-            F.col(f.name).cast(f.dataType).alias(f.name)
+            f"CAST({quote_literal(ingest_ts)} AS TIMESTAMP) AS date_retrieved"
+            if f.name == "date_retrieved"
+            else f"CAST({quote_ident(f.name)} AS {f.dataType.simpleString()}) "
+            f"AS {quote_ident(f.name)}"
             for f in BRONZE_TRANSACTIONS_SCHEMA.fields
         ]
     )
@@ -141,7 +147,7 @@ def balance_snapshot_df(spark: SparkSession, balance: dict, ingest_ts: str) -> D
 
     row = dict(balance)
     row["date_retrieved"] = datetime.fromisoformat(ingest_ts)
-    return spark.createDataFrame([row], schema=BRONZE_BALANCE_SCHEMA)
+    return local_frame(spark, [row], BRONZE_BALANCE_SCHEMA)
 
 
 def pots_snapshot_df(spark: SparkSession, pots: list[dict], ingest_ts: str) -> DataFrame:
@@ -153,7 +159,7 @@ def pots_snapshot_df(spark: SparkSession, pots: list[dict], ingest_ts: str) -> D
     stamped = [
         {**p, "date_retrieved": datetime.fromisoformat(ingest_ts)} for p in pots
     ]
-    df = spark.createDataFrame(stamped, schema=BRONZE_POTS_SCHEMA)
+    df = local_frame(spark, stamped, BRONZE_POTS_SCHEMA)
     return default_fill(
         df,
         {

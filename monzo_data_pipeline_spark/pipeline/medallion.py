@@ -51,6 +51,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.dedup import anti_join_new_rows, distinct_entities, first_wins_dedup
+from ..operators.projection import quote_ident, quote_literal
 from ..schemas import BRONZE_TRANSACTIONS_SCHEMA
 
 if TYPE_CHECKING:
@@ -199,10 +200,10 @@ def transform_silver(wh: Warehouse, inserted_at: str, delta: DataFrame) -> DataF
     """
     # counterparties: DISTINCT over both-keys-NOT-NULL (sql:1-8)
     cps = distinct_entities(
-        delta.select(
-            F.col("counterparty_account_num").alias("account_num"),
-            F.col("counterparty_sort_code").alias("sort_code"),
-            F.col("counterparty_name").alias("name"),
+        delta.selectExpr(
+            "counterparty_account_num AS account_num",
+            "counterparty_sort_code AS sort_code",
+            "counterparty_name AS name",
         ),
         ["account_num", "sort_code", "name"],
         not_null=["account_num", "sort_code"],
@@ -211,12 +212,15 @@ def transform_silver(wh: Warehouse, inserted_at: str, delta: DataFrame) -> DataF
     _merge_append(wh, cps, SILVER_CP, ["account_num", "sort_code"])
 
     # merchants: DISTINCT over merchant_id NOT NULL (sql:10-35)
+    merch_cols = ["id"] + [c.removeprefix("merchant_") for c in _MERCHANT_COLS[1:]]
     merch = distinct_entities(
-        delta.select(
-            *[F.col(c).alias(c.removeprefix("merchant_") if c != "merchant_id" else "id")
-              for c in _MERCHANT_COLS]
+        delta.selectExpr(
+            *[
+                f"{quote_ident(c)} AS {quote_ident(m)}"
+                for c, m in zip(_MERCHANT_COLS, merch_cols)
+            ]
         ),
-        ["id"] + [c.removeprefix("merchant_") for c in _MERCHANT_COLS if c != "merchant_id"],
+        merch_cols,
         not_null=["id"],
     )
     merch = first_wins_dedup(merch, ["id"], MERCHANT_ORDER)
@@ -225,24 +229,23 @@ def transform_silver(wh: Warehouse, inserted_at: str, delta: DataFrame) -> DataF
     # fact: 14-col projection + money cast + audit stamp (sql:37-59);
     # bronze pence (long) → silver pounds decimal(18,2), NOT the
     # reference's lossy INTEGER→REAL (SURVEY.md §7.1)
-    fact = delta.select(
+    fact = delta.selectExpr(
         "id",
         "description",
-        (F.col("amount").cast("decimal(18,2)") / 100).cast("decimal(18,2)").alias("amount"),
+        "CAST(CAST(amount AS DECIMAL(18,2)) / 100 AS DECIMAL(18,2)) AS amount",
         "currency",
         "created",
         "category",
         "notes",
         "is_load",
         "settled",
-        (F.col("local_amount").cast("decimal(18,2)") / 100)
-        .cast("decimal(18,2)")
-        .alias("local_amount"),
+        "CAST(CAST(local_amount AS DECIMAL(18,2)) / 100 AS DECIMAL(18,2)) AS local_amount",
         "local_currency",
         "counterparty_account_num",
         "counterparty_sort_code",
         "merchant_id",
-    ).withColumn("inserted_at", F.lit(inserted_at).cast("timestamp"))
+        f"CAST({quote_literal(inserted_at)} AS TIMESTAMP) AS inserted_at",
+    )
     # delta ids are unique and new to silver: nothing to dedup or ignore
     wh.append(fact, SILVER_TX)
     return fact

@@ -34,6 +34,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from ..session import local_frame
+
 RUN_LOG_TABLE = "ops_run_log"
 RUN_LOG_SCHEMA = (
     "run_id string, seq int, stage string, event string, "
@@ -90,7 +92,7 @@ class RunLogger:
         transaction handle — they commit iff the run commits."""
         from pyspark.sql import functions as F
 
-        df = spark.createDataFrame(
-            [e + (None,) for e in self.events], RUN_LOG_SCHEMA
+        df = local_frame(
+            spark, [e + (None,) for e in self.events], RUN_LOG_SCHEMA
         ).withColumn("run_ts", F.lit(self.run_ts).cast("timestamp"))
         txn.append(df, RUN_LOG_TABLE)

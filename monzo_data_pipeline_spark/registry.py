@@ -40,6 +40,7 @@ from .operators import setops as SO
 from .operators import sketches as SK
 from .operators import timeseries as TS
 from .operators import windows as WN
+from .session import local_frame
 
 
 @dataclass(frozen=True)
@@ -530,7 +531,7 @@ _FX_VALUES = ", ".join(f"('{s}', {r})" for s, r in _FX_RATES)
 )
 def q_broadcast_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer")
-    rates = spark.createDataFrame(_FX_RATES, "c_mktsegment string, rate double")
+    rates = local_frame(spark, _FX_RATES, "c_mktsegment string, rate double")
     return JN.enrich_with_rates(cust, rates, "c_acctbal", "c_mktsegment").select(
         "c_custkey", "c_mktsegment", "rate", "base_amount"
     )
@@ -3449,7 +3450,8 @@ def q_interval_band_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Overlapping + unaligned on purpose: 'whale' nests inside 'premium'
     # and 'promo_target' straddles 'budget'/'mid' — shapes a partition-
     # based bucketing cannot express, but the cell rewrite handles.
-    bands = spark.createDataFrame(
+    bands = local_frame(
+        spark,
         [
             ("budget", 1000.0, 60000.0),
             ("mid", 60000.0, 180000.0),

@@ -10,13 +10,45 @@ The reference has no session concept — it opens a sqlite3 connection
 per run (/root/reference/src/load/load.py:250). Here one SparkSession
 is shared across the whole query suite (BASELINE.md: reuse the
 session to amortize JVM startup).
+
+Two rules keep the driver's traffic with that JVM small. A run of this
+engine is short, so its per-run driver overhead is most of its cost.
+
+  * **Driver rows enter as Arrow, through `local_frame`.**
+    ``spark.createDataFrame(<python list>)`` builds an RDD of pickled
+    rows, and every action that scans it runs Python worker tasks, one
+    per default-parallelism slice. Each task costs about 0.2 s of
+    worker CPU, even for one row. Most of it is
+    ``importlib.invalidate_caches()`` in the worker's set-up, which
+    under Python 3.11 re-reads the central directory of each of the 16
+    zip importers on the worker's path: 0.16 s per call, measured
+    inside a worker (4 vCPU, local[4]; a 1-row frame's collect cost
+    0.79 s of worker CPU and 0.29 s of wall time, against 0 s and
+    0.03 s as a `local_frame`). `local_frame` hands Spark one Arrow
+    table instead, which it plans as a ``LocalRelation``; no Python
+    task runs. The two ``mapInPandas`` fetch tasks of an ingest run
+    (`pipeline.ingest.fetch_transactions_distributed`) still pay the
+    set-up by design: the fetch is Python code.
+  * **Plans enter as SQL text.** In PySpark 4 each Column-API call is
+    at least one py4j round trip, and releasing the JVM object it made
+    is another. A 40-column ``F.col(c).alias(...)`` projection measured
+    1,214 round trips; the same projection through ``selectExpr`` took
+    45 (one per expression string) and through one ``spark.sql``
+    statement 12. So projections, windows and aggregates over many
+    columns are built as ``selectExpr`` / ``F.expr`` / SQL strings,
+    with identifiers quoted by `operators.projection.quote_ident`. A
+    steady-state ingest run went from about 6,300 round trips to about
+    650 (``tests/test_pipeline.py`` pins a budget of 1,300).
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable
+from zoneinfo import ZoneInfo
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType, TimestampType, _parse_datatype_string
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
 
@@ -166,3 +198,48 @@ def get_spark(
     if ckpt and not spark.sparkContext._jsc.sc().getCheckpointDir().isDefined():
         spark.sparkContext.setCheckpointDir(ckpt)
     return spark
+
+
+def local_frame(
+    spark: SparkSession,
+    rows: Iterable[tuple | dict],
+    schema: StructType | str,
+) -> DataFrame:
+    """Driver-side rows as a JVM local relation: the one way rows held
+    in Python enter a plan (see the module docstring).
+
+    ``rows`` are tuples in ``schema`` order or dicts keyed by field
+    name (a missing key is NULL); ``schema`` is a ``StructType`` or a
+    DDL string. The rows become one ``pyarrow.Table`` typed from the
+    schema, and Spark plans it as a ``LocalRelation``: no Python task
+    runs when the frame is scanned. A naive ``datetime`` is read in the
+    session time zone (UTC under `get_spark`), an aware one as the
+    instant it names.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    rows = list(rows)
+    if rows and isinstance(rows[0], dict):
+        columns = [[r.get(n) for r in rows] for n in schema.names]
+    else:
+        columns = [list(c) for c in zip(*rows)] or [[] for _ in schema.names]
+    arrays = []
+    for field, values in zip(schema.fields, columns):
+        if isinstance(field.dataType, TimestampType) and any(
+            v is not None and v.tzinfo is not None for v in values
+        ):
+            zone = ZoneInfo(spark.conf.get("spark.sql.session.timeZone"))
+            values = [
+                v.astimezone(zone).replace(tzinfo=None)
+                if v is not None and v.tzinfo is not None
+                else v
+                for v in values
+            ]
+        arrays.append(
+            pa.array(values, type=to_arrow_type(field.dataType, timestamp_utc=False))
+        )
+    table = pa.Table.from_arrays(arrays, names=schema.names)
+    return spark.createDataFrame(table, schema)

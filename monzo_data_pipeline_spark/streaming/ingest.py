@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame
 
 from ..pipeline.atomic import AtomicWarehouse
 from ..pipeline.medallion import Warehouse, load_bronze
+from ..session import local_frame
 
 
 def stream_wire_to_bronze(
@@ -75,8 +76,8 @@ def stream_silver_to_gold(
             seen = {r["epoch_id"] for r in wh.read("gold_epochs").collect()}
             if epoch_id in seen:
                 return
-        ledger = spark.createDataFrame(
-            [(int(epoch_id),)], "epoch_id long"
+        ledger = local_frame(
+            spark, [(int(epoch_id),)], "epoch_id long"
         ).withColumn("folded", F.lit(True))
         with wh.transaction() as txn:
             merge_gold_state(txn, batch_df)

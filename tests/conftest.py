@@ -3,6 +3,7 @@ amortized), sf0.001 testdata paths."""
 
 from __future__ import annotations
 
+import gc
 import os
 import sys
 
@@ -59,6 +60,35 @@ def jobs_in(spark):
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
         return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run
+
+
+@pytest.fixture()
+def py4j_calls():
+    """``py4j_calls(fn)`` returns ``(fn(), py4j round trips it made)``:
+    every ``ClientServerConnection.send_command`` while ``fn`` runs, on
+    any thread, so the release of the JVM objects ``fn`` dropped counts
+    too (the garbage collector runs before and after)."""
+    from py4j.clientserver import ClientServerConnection
+
+    send = ClientServerConnection.send_command
+    calls = [0]
+
+    def counted(self, command):
+        calls[0] += 1
+        return send(self, command)
+
+    def run(fn):
+        gc.collect()
+        calls[0] = 0
+        ClientServerConnection.send_command = counted
+        try:
+            out = fn()
+            gc.collect()
+        finally:
+            ClientServerConnection.send_command = send
+        return out, calls[0]
 
     return run
 

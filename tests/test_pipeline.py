@@ -55,6 +55,27 @@ def test_distributed_ingest_shape(spark):
     assert any(r.settled is None for r in rows)
 
 
+def test_steady_ingest_run_py4j_budget(spark, warehouse, py4j_calls):
+    """Plans enter the JVM as SQL text and driver rows as Arrow, so a
+    steady-state ingest request (fetch, flatten, `run_pipeline_atomic`
+    into a warehouse that already holds two runs) crosses py4j at most
+    1,300 times. Built column by column, the same request made about
+    6,300 round trips."""
+    fetch = ING.make_fake_fetch(n_per_window=50, dup_every=10)
+    for run in range(3):
+        day = datetime(2025, 1, 1) + timedelta(days=2 * run)
+        windows = ING.cursor_windows(day, day + timedelta(days=2), window_hours=24)
+        ts = (day + timedelta(days=3)).isoformat()
+
+        def request():
+            wire = ING.fetch_transactions_distributed(spark, fetch, windows)
+            return run_pipeline_atomic(spark, warehouse, ING.flatten_bronze(wire, ts), ts)
+
+        stats, calls = py4j_calls(request)
+    assert stats["bronze_appended"] > 0
+    assert calls <= 1300, calls
+
+
 def test_pipeline_end_to_end_and_idempotence(spark, warehouse):
     batch = _batch(spark)
     stats1 = run_pipeline_atomic(spark, warehouse, batch, run_ts="2025-01-05T00:00:00")

@@ -320,6 +320,30 @@ def test_exact_ntile_multi_empty_and_validation(spark):
     assert exact_ntile_multi(df2, []).columns == df2.columns
 
 
+def test_exact_ntile_multi_rejects_null_values(spark, jobs_in):
+    """A NULL value has no position in the ntile order: it raises,
+    naming the column, instead of leaving its row out of the buckets.
+    The check reads the per-(spec, bucket) collect, so it adds no job:
+    a failing call runs fewer eager jobs than a clean one."""
+    import pytest as _pt
+
+    from monzo_data_pipeline_spark.operators.windows import exact_ntile_multi
+
+    rows = [(i, i, i if i != 5 else None) for i in range(1, 9)]
+    df = spark.createDataFrame(rows, "id bigint, a bigint, b bigint")
+    specs = [(4, "a", "id", "a_nt"), (4, "b", "id", "b_nt")]
+    with _pt.raises(ValueError, match="'b' holds NULL"):
+        jobs_in("ntile-null", lambda: exact_ntile_multi(df, specs))
+    failed = spark.sparkContext.statusTracker().getJobIdsForGroup("ntile-null")
+    # the same input with the NULL filled runs that collect and more
+    clean = df.fillna(0, subset=["b"])
+    _, ok = jobs_in("ntile-clean", lambda: exact_ntile_multi(clean, specs))
+    assert 0 < len(failed) < len(ok)
+    # an ntile(1) spec needs no order: NULLs there are fine
+    out = exact_ntile_multi(df, [(1, "b", "id", "b_nt")]).collect()
+    assert {r.b_nt for r in out} == {1}
+
+
 def test_exact_ntile_multi_rejects_fractional_value_columns(spark):
     import pytest as _pt
 
