@@ -2626,8 +2626,8 @@ def register(_register) -> None:
         "audit arithmetic survived the round trip; the per-FILE "
         "physical rectangles are asserted in tests/"
         "test_erasure_layout.py — pipeline/erasure.py::"
-        "erase_keys_pruned(preserve_layout=True), operators/"
-        "layout.py)",
+        "erase_keys(preserve_layout=True) over an AtomicWarehouse, "
+        "operators/layout.py)",
         zorder_layout_sql(
             "(SELECT * FROM orders WHERE o_custkey % 97 <> 0)",
             "o_custkey",
@@ -2637,10 +2637,13 @@ def register(_register) -> None:
     def q_zorder_erasure_layout(
         spark: SparkSession, sf_dir: str
     ) -> DataFrame:
+        import os
+        import shutil
+
         from .ext.shared import shared_artifact
         from .operators.layout import zorder_layout_stats
-        from .pipeline.erasure import erase_keys_pruned
-        from .pipeline.medallion import Warehouse
+        from .pipeline.atomic import AtomicWarehouse
+        from .pipeline.erasure import erase_keys
         from .sources.io import write_zordered
 
         def build(path: str) -> None:
@@ -2652,29 +2655,28 @@ def register(_register) -> None:
             o = load_table(spark, sf_dir, "orders").select(
                 "o_custkey", F.expr(_ZORDER_Y).alias("__price_cents")
             )
-            wh = Warehouse(spark, path)
-            write_zordered(
-                o,
-                wh.path("orders_z"),
-                "o_custkey",
-                "__price_cents",
-                n_files=16,
-            )
+            wh = AtomicWarehouse(spark, path)
+            src = os.path.join(path, "orders_z", "_zordered")
+            write_zordered(o, src, "o_custkey", "__price_cents", n_files=16)
+            with wh.transaction() as txn:
+                txn.append_parquet_dir(src, "orders_z", link=True)
+            shutil.rmtree(src)
             ids = (
                 o.filter(F.col("o_custkey") % 97 == 0)
                 .select("o_custkey")
                 .distinct()
             )
-            erase_keys_pruned(
+            erase_keys(
                 wh, ids, "o_custkey", ["orders_z"], preserve_layout=True
             )
 
         ws = shared_artifact(
             spark, f"zorder_erasure_warehouse::{sf_dir}", build
         )
-        wh = Warehouse(spark, ws)
         return zorder_layout_stats(
-            wh.read("orders_z"), "o_custkey", "__price_cents"
+            AtomicWarehouse(spark, ws).read("orders_z"),
+            "o_custkey",
+            "__price_cents",
         )
 
     # ------------------------------------------------------------------
@@ -3634,11 +3636,11 @@ def register(_register) -> None:
         search-many serving contract of ext/ann_index.py)."""
         from .ext.ann_index import build_ivf_index
         from .ext.shared import shared_artifact
-        from .pipeline.medallion import Warehouse
+        from .pipeline.atomic import AtomicWarehouse
 
         def build(path: str) -> None:
             build_ivf_index(
-                Warehouse(spark, path),
+                AtomicWarehouse(spark, path),
                 load_table(spark, sf_dir, "embeddings"),
             )
 
@@ -3649,8 +3651,8 @@ def register(_register) -> None:
     @_register(
         "ivf_index_search",
         "C3 scale path (r8/r9: IVF index as a PERSISTED artifact — "
-        "the assignment table written partitionBy(cell) into a "
-        "session-memoized scratch warehouse once (build-once/search-"
+        "the assignment table written partitionBy(cell) and staged "
+        "into a session-memoized AtomicWarehouse once (build-once/search-"
         "many: the partition layout IS the inverted-list structure; "
         "the memo holds the INDEX, not any answer), and every call "
         "runs the real search: the 1-row query broadcast onto the "
@@ -3690,16 +3692,17 @@ def register(_register) -> None:
         spark: SparkSession, sf_dir: str
     ) -> DataFrame:
         from .ext.ann_index import search_ivf_index
-        from .pipeline.medallion import Warehouse
+        from .pipeline.atomic import AtomicWarehouse
 
-        wh = Warehouse(spark, _ivf_index_workspace(spark, sf_dir))
+        wh = AtomicWarehouse(spark, _ivf_index_workspace(spark, sf_dir))
         return search_ivf_index(spark, wh, query_id=0, k=5)
 
     @_register(
         "ivf_index_multiprobe",
         "C3 scale path (r8/r9: multi-probe search on the PERSISTED "
-        "index — the centroid vectors live in the index (its first K "
-        "rows, the builder's rule; the session memo holds the INDEX "
+        "index, read through its AtomicWarehouse — the centroid vectors "
+        "live in the index (its first K rows, the builder's rule; the "
+        "session memo holds the INDEX "
         "artifact, not any answer), every call ranks them as a K-row "
         "broadcast and DPP prunes the partitioned scan to the top-3 "
         "cell directories; bit-identical to the fresh "
@@ -3743,9 +3746,9 @@ def register(_register) -> None:
         spark: SparkSession, sf_dir: str
     ) -> DataFrame:
         from .ext.ann_index import search_ivf_index_multiprobe
-        from .pipeline.medallion import Warehouse
+        from .pipeline.atomic import AtomicWarehouse
 
-        wh = Warehouse(spark, _ivf_index_workspace(spark, sf_dir))
+        wh = AtomicWarehouse(spark, _ivf_index_workspace(spark, sf_dir))
         return search_ivf_index_multiprobe(
             spark, wh, query_id=0, k=5, n_probe=3
         )
@@ -3763,11 +3766,11 @@ def register(_register) -> None:
         against the returned path)."""
         from .ext.ann_index import build_ivfpq_index
         from .ext.shared import shared_artifact
-        from .pipeline.medallion import Warehouse
+        from .pipeline.atomic import AtomicWarehouse
 
         def build(path: str) -> None:
             build_ivfpq_index(
-                Warehouse(spark, path),
+                AtomicWarehouse(spark, path),
                 load_table(spark, sf_dir, "embeddings"),
                 n_centroids=16,
                 m=8,
@@ -3786,7 +3789,8 @@ def register(_register) -> None:
         "C3 scale path (r10: IVF-PQ COMPOSITE persisted index — the "
         "actual 100 TB ANN shape (FAISS IVFADC): PQ codes keyed by "
         "IVF cell in ONE partitionBy(cell) artifact with the m×ksub "
-        "codebook and builder params persisted beside it; a search "
+        "codebook and builder params committed beside it in one "
+        "AtomicWarehouse transaction; a search "
         "ranks the K in-index centroids, DPP-prunes the scan to the "
         "top-n_probe cell directories, ADC-scores candidates from "
         "codes alone via a driver-built integer lookup literal, and "
@@ -3812,9 +3816,9 @@ def register(_register) -> None:
         spark: SparkSession, sf_dir: str
     ) -> DataFrame:
         from .ext.ann_index import search_ivfpq_index
-        from .pipeline.medallion import Warehouse
+        from .pipeline.atomic import AtomicWarehouse
 
-        wh = Warehouse(spark, _ivfpq_index_workspace(spark, sf_dir))
+        wh = AtomicWarehouse(spark, _ivfpq_index_workspace(spark, sf_dir))
         return search_ivfpq_index(
             spark, wh, query_id=0, k=10, n_probe=3, oversample=5
         )

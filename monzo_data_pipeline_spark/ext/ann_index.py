@@ -3,11 +3,14 @@
 `ext/similarity.py::ivf_topk` recomputes the centroid assignment per
 query; fine inside one job, wrong as a serving pattern: at 100 TB the
 assignment IS the index and must be an artifact, not a subplan. Here
-the assignment table is written to the warehouse PARTITIONED BY cell,
-so a search's probe reads ONLY the probed cell's files — the
-partition layout is the inverted-list structure of a classical IVF
-index (FAISS's coarse quantizer), expressed as plain partitioned
-parquet:
+the assignment table is written PARTITIONED BY cell and staged into an
+`atomic.AtomicWarehouse` as one data dir, so a search's probe reads
+ONLY the probed cell's files — the partition layout is the
+inverted-list structure of a classical IVF index (FAISS's coarse
+quantizer), expressed as plain partitioned parquet. An index and its
+metadata tables are written in one transaction: a failed rebuild
+leaves the previous index whole, never an index whose metadata
+describes another build.
 
   * `build_ivf_index` — assign every vector to its nearest centroid
     (same deterministic quantized-dot argmax the oracle-gated
@@ -28,16 +31,36 @@ the SAME DuckDB twin as `ivf_topk`.
 
 from __future__ import annotations
 
+import shutil
+import uuid
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..pipeline.medallion import Warehouse
+from ..pipeline.atomic import AtomicWarehouse, _Transaction
 from ..session import local_frame
+from ..sources.io import write_table
 from .similarity import ivf_assign, quantized_dot
 
 
+def _stage_cells(txn: _Transaction, rows: DataFrame, table: str) -> None:
+    """Append `rows` to `table` as one data dir partitioned by cell.
+    r10 (guide §6, output file sizing): the rows are clustered by cell
+    before the write — ivf_assign fans the assignment out, and writing
+    K cells from P partitions would fragment each cell directory into
+    ~P files, multiplying every later DPP-pruned search's open/footer
+    cost. One exchange buys one file per cell. The write lands in a
+    scratch dir beside the table's data dirs and is hardlinked in."""
+    src = txn.wh._abs(f"{table}/_cells_{uuid.uuid4().hex[:8]}")
+    write_table(rows.repartition("cell"), src, partition_by=["cell"])
+    try:
+        txn.append_parquet_dir(src, table, link=True)
+    finally:
+        shutil.rmtree(src, ignore_errors=True)
+
+
 def build_ivf_index(
-    wh: Warehouse,
+    wh: AtomicWarehouse,
     emb: DataFrame,
     table: str = "ivf_index",
     n_centroids: int = 16,
@@ -46,42 +69,34 @@ def build_ivf_index(
 ) -> None:
     """Materialize the IVF assignment as a cell-partitioned warehouse
     table (the centroid rule matches ivf_topk: first n_centroids ids,
-    quantized-dot argmax, ties to the lower cell)."""
+    quantized-dot argmax, ties to the lower cell), replacing any
+    previous build in one commit."""
     centroids = emb.filter(F.col(id_col) < n_centroids)
     assigned = ivf_assign(emb, centroids, id_col=id_col, vec_col=vec_col)
-    # r10 (guide §6, output file sizing): cluster by the partition
-    # column before the partitioned write — ivf_assign fans the
-    # assignment out, and writing K cells from P partitions would
-    # fragment each cell directory into ~P files, multiplying every
-    # later DPP-pruned search's open/footer cost. One exchange of
-    # (id, vec, cell) buys one file per cell.
-    assigned.repartition("cell").write.mode("overwrite").partitionBy(
-        "cell"
-    ).parquet(wh.path(table))
-    # persist the builder's parameters next to the index: the
-    # centroid set is DEFINED by n_centroids (vec_id < K is only the
-    # centroid rule under the builder's K), so a search must read K
-    # from the artifact, never guess it
-    spark = emb.sparkSession
-    local_frame(
-        spark, [(int(n_centroids),)], "n_centroids int"
-    ).coalesce(1).write.mode("overwrite").parquet(
-        wh.path(table + "__meta")
-    )
+    with wh.transaction() as txn:
+        txn.replace_dirs(table, txn.tables.get(table, []), None)
+        _stage_cells(txn, assigned, table)
+        # persist the builder's parameters next to the index: the
+        # centroid set is DEFINED by n_centroids (vec_id < K is only
+        # the centroid rule under the builder's K), so a search must
+        # read K from the artifact, never guess it
+        txn.overwrite(
+            local_frame(emb.sparkSession, [(int(n_centroids),)], "n_centroids int"),
+            table + "__meta",
+        )
 
 
 def _index_n_centroids(
-    spark: SparkSession, wh: Warehouse, table: str
+    spark: SparkSession, wh: AtomicWarehouse, table: str
 ) -> int:
     """The builder's n_centroids, read from the index's metadata
     table (written by build_ivf_index)."""
-    meta = spark.read.parquet(wh.path(table + "__meta"))
-    return int(meta.head()["n_centroids"])
+    return int(wh.read(table + "__meta").head()["n_centroids"])
 
 
 def search_ivf_index(
     spark: SparkSession,
-    wh: Warehouse,
+    wh: AtomicWarehouse,
     table: str = "ivf_index",
     query_id: int = 0,
     k: int = 5,
@@ -91,7 +106,7 @@ def search_ivf_index(
     """Top-k neighbors of `query_id` from the persisted index: probe
     exactly the query's cell. The broadcast 1-row query joined on the
     PARTITION column lets DPP prune the scan to one directory."""
-    assigned = spark.read.parquet(wh.path(table))
+    assigned = wh.read(table)
     q = assigned.filter(F.col(id_col) == query_id).select(
         F.col("cell").alias("q_cell"), F.col(vec_col).alias("__qvec")
     )
@@ -116,7 +131,7 @@ def search_ivf_index(
 
 def search_ivf_index_multiprobe(
     spark: SparkSession,
-    wh: Warehouse,
+    wh: AtomicWarehouse,
     table: str = "ivf_index",
     query_id: int = 0,
     k: int = 5,
@@ -146,7 +161,7 @@ def search_ivf_index_multiprobe(
             f"index {table!r} was built with n_centroids={built_k}, "
             f"search asked for {n_centroids}"
         )
-    assigned = spark.read.parquet(wh.path(table))
+    assigned = wh.read(table)
     qvec = assigned.filter(F.col(id_col) == query_id).select(
         F.col(vec_col).alias("__qvec")
     )
@@ -154,7 +169,10 @@ def search_ivf_index_multiprobe(
     probe = (
         centroids.crossJoin(F.broadcast(qvec))
         .select(
-            F.col(id_col).alias("__pcell"),
+            # in the cell column's type: a cast on the partition
+            # column's side of the join would stop DPP at a Union
+            # (an index of several data dirs)
+            F.col(id_col).cast(assigned.schema["cell"].dataType).alias("__pcell"),
             quantized_dot(vec_col, "__qvec").alias("__s"),
         )
         .orderBy(F.desc("__s"), F.asc("__pcell"))
@@ -191,7 +209,7 @@ def search_ivf_index_multiprobe(
 
 
 def build_ivfpq_index(
-    wh: Warehouse,
+    wh: AtomicWarehouse,
     emb: DataFrame,
     table: str = "ivfpq_index",
     n_centroids: int = 16,
@@ -207,11 +225,11 @@ def build_ivfpq_index(
     vector (the rerank payload; at 100 TB this column moves to a
     cold id-keyed store and only the shortlist is fetched).
 
-    Three artifacts: the cell-partitioned index table, the m×ksub
-    codebook table (bounded — the search reads it driver-side to
-    build the ADC lookup), and the builder-parameter metadata
-    (n_centroids/m/ksub are all part of the index's identity; a
-    search must read them from the artifact, never guess)."""
+    Three artifacts, committed together: the cell-partitioned index
+    table, the m×ksub codebook table (bounded — the search reads it
+    driver-side to build the ADC lookup), and the builder-parameter
+    metadata (n_centroids/m/ksub are all part of the index's identity;
+    a search must read them from the artifact, never guess)."""
     from .similarity import pq_encode, pq_fit
 
     cbs = pq_fit(
@@ -220,30 +238,31 @@ def build_ivfpq_index(
     codes = pq_encode(emb, cbs, id_col=id_col, vec_col=vec_col)
     centroids = emb.filter(F.col(id_col) < n_centroids)
     assigned = ivf_assign(emb, centroids, id_col=id_col, vec_col=vec_col)
-    # one file per cell (guide §6) — see build_ivf_index
-    assigned.join(codes, id_col).repartition("cell").write.mode(
-        "overwrite"
-    ).partitionBy("cell").parquet(wh.path(table))
     spark = emb.sparkSession
-    local_frame(
-        spark,
-        [(int(s), int(c), [float(x) for x in v]) for s, c, v in cbs],
-        "sub int, cell int, centroid array<double>",
-    ).coalesce(1).write.mode("overwrite").parquet(
-        wh.path(table + "__codebook")
-    )
-    local_frame(
-        spark,
-        [(int(n_centroids), int(m), int(ksub))],
-        "n_centroids int, m int, ksub int",
-    ).coalesce(1).write.mode("overwrite").parquet(
-        wh.path(table + "__meta")
-    )
+    with wh.transaction() as txn:
+        txn.replace_dirs(table, txn.tables.get(table, []), None)
+        _stage_cells(txn, assigned.join(codes, id_col), table)
+        txn.overwrite(
+            local_frame(
+                spark,
+                [(int(s), int(c), [float(x) for x in v]) for s, c, v in cbs],
+                "sub int, cell int, centroid array<double>",
+            ),
+            table + "__codebook",
+        )
+        txn.overwrite(
+            local_frame(
+                spark,
+                [(int(n_centroids), int(m), int(ksub))],
+                "n_centroids int, m int, ksub int",
+            ),
+            table + "__meta",
+        )
 
 
 def search_ivfpq_index(
     spark: SparkSession,
-    wh: Warehouse,
+    wh: AtomicWarehouse,
     table: str = "ivfpq_index",
     query_id: int = 0,
     k: int = 10,
@@ -273,15 +292,15 @@ def search_ivfpq_index(
 
     from .similarity import QUANT, quantized_dist_sq, quantized_dot
 
-    meta = spark.read.parquet(wh.path(table + "__meta")).head()
+    meta = wh.read(table + "__meta").head()
     n_centroids, m, ksub = (
         int(meta["n_centroids"]), int(meta["m"]), int(meta["ksub"])
     )
-    cb_rows = spark.read.parquet(wh.path(table + "__codebook")).collect()
+    cb_rows = wh.read(table + "__codebook").collect()
     cb = {(r["sub"], r["cell"]): list(r["centroid"]) for r in cb_rows}
     dsub = len(next(iter(cb.values())))
 
-    assigned = spark.read.parquet(wh.path(table))
+    assigned = wh.read(table)
     qrow = assigned.filter(F.col(id_col) == query_id).select(
         vec_col
     ).head()
@@ -318,7 +337,10 @@ def search_ivfpq_index(
     probe = (
         centroids.crossJoin(F.broadcast(qvec))
         .select(
-            F.col(id_col).alias("__pcell"),
+            # in the cell column's type: a cast on the partition
+            # column's side of the join would stop DPP at a Union
+            # (an index of several data dirs)
+            F.col(id_col).cast(assigned.schema["cell"].dataType).alias("__pcell"),
             quantized_dot(vec_col, "__qvec").alias("__s"),
         )
         .orderBy(F.desc("__s"), F.asc("__pcell"))
@@ -352,7 +374,7 @@ def search_ivfpq_index(
 
 
 def append_ivfpq_index(
-    wh: Warehouse,
+    wh: AtomicWarehouse,
     new_emb: DataFrame,
     table: str = "ivfpq_index",
     id_col: str = "vec_id",
@@ -363,10 +385,10 @@ def append_ivfpq_index(
     100 TB: quantizers are FROZEN (the persisted centroid set and PQ
     codebooks define the index's geometry; retraining them would
     silently re-shape every existing cell), new vectors are assigned
-    and encoded under them, and the rows land as an APPEND into the
-    same cell-partitioned layout — existing files are never touched,
-    searches see old+new immediately with unchanged plans (DPP still
-    prunes to probed cells).
+    and encoded under them, and the rows land as one more
+    cell-partitioned data dir of the table, committed atomically —
+    existing files are never touched, searches see old+new after the
+    commit with unchanged plans (DPP still prunes to probed cells).
 
     Equivalence contract (tested): append(half B) onto build(half A)
     ≡ encoding A∪B under A's frozen quantizers — bit-identical search
@@ -374,34 +396,31 @@ def append_ivfpq_index(
     more data; periodic re-build (re-train + rewrite) is the
     compaction analog, run when drift between the frozen quantizers
     and the data warrants it (`ann_recall_eval` is the dial)."""
-    spark = new_emb.sparkSession
-    meta = spark.read.parquet(wh.path(table + "__meta")).head()
-    n_centroids = int(meta["n_centroids"])
-    cb_rows = spark.read.parquet(wh.path(table + "__codebook")).collect()
-    cbs = [
-        (int(r["sub"]), int(r["cell"]), list(r["centroid"]))
-        for r in cb_rows
-    ]
     from .similarity import pq_encode
 
-    index = spark.read.parquet(wh.path(table))
-    centroids = index.filter(F.col(id_col) < n_centroids).select(
-        id_col, vec_col
-    )
-    dup = new_emb.join(
-        index.select(id_col), id_col, "left_semi"
-    ).limit(1).collect()
-    if dup:
-        raise ValueError(
-            f"append_ivfpq_index: id {dup[0][id_col]} already in the "
-            "index (ids are the rerank fetch key — duplicates would "
-            "double-count in every search)"
+    # read inside the transaction: the commit's version check then
+    # covers the quantizers and ids the append was computed against
+    with wh.transaction() as txn:
+        n_centroids = int(txn.read(table + "__meta").head()["n_centroids"])
+        cbs = [
+            (int(r["sub"]), int(r["cell"]), list(r["centroid"]))
+            for r in txn.read(table + "__codebook").collect()
+        ]
+        index = txn.read(table)
+        centroids = index.filter(F.col(id_col) < n_centroids).select(
+            id_col, vec_col
         )
-    assigned = ivf_assign(
-        new_emb, centroids, id_col=id_col, vec_col=vec_col
-    )
-    codes = pq_encode(new_emb, cbs, id_col=id_col, vec_col=vec_col)
-    # one file per cell per append batch (guide §6) — see build_ivf_index
-    assigned.join(codes, id_col).repartition("cell").write.mode(
-        "append"
-    ).partitionBy("cell").parquet(wh.path(table))
+        dup = new_emb.join(
+            index.select(id_col), id_col, "left_semi"
+        ).limit(1).collect()
+        if dup:
+            raise ValueError(
+                f"append_ivfpq_index: id {dup[0][id_col]} already in the "
+                "index (ids are the rerank fetch key — duplicates would "
+                "double-count in every search)"
+            )
+        assigned = ivf_assign(
+            new_emb, centroids, id_col=id_col, vec_col=vec_col
+        )
+        codes = pq_encode(new_emb, cbs, id_col=id_col, vec_col=vec_col)
+        _stage_cells(txn, assigned.join(codes, id_col), table)

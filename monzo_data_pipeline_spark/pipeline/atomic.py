@@ -1,13 +1,16 @@
-"""Cross-table transactional commit for the parquet warehouse (A14).
+"""The warehouse's one table store: parquet tables with cross-table
+transactional commits (A14).
 
 The reference loads transactions, balance, and pots inside ONE SQLite
 transaction — a single `conn.commit()` makes all three tables visible
-together (/root/reference/src/load/load.py:271,277). Plain parquet
-directories (medallion.Warehouse) have no such boundary: a crash
-mid-run exposes a half-updated warehouse.
+together (the reference's `src/load/load.py:271,277`). A plain parquet
+directory per table has no such boundary: a crash mid-run exposes a
+half-updated warehouse, and every rewrite (erasure, view-state fold,
+compaction, index rebuild) needs its own hand-made directory swap.
 
 This module is the plain-parquet answer — the same design Delta Lake
-and Iceberg use, reduced to its core:
+and Iceberg use, reduced to its core — and every table write in
+`pipeline/` and `ext/ann_index.py` goes through it:
 
   * every write lands in a FRESH data directory that no reader can
     see (`<root>/<table>/z<version>_<random>/`);
@@ -43,8 +46,18 @@ trade.
 At 100 TB this is exactly the metadata-pointer pattern of a real
 table format; production would use Delta/Iceberg (SCALE_DESIGN.md §3)
 — the point here is that the ENGINE's pipeline code (medallion.py
-stages) runs unchanged against either, because the transaction handle
-exposes the same read/append/overwrite/exists surface as Warehouse.
+stages) runs unchanged against either, because the warehouse and its
+transaction handle expose one read/append/overwrite/exists surface.
+A write returns the rows it wrote (footer ``num_rows``), so a caller
+needs no count job, and an append of 0 rows stages nothing.
+
+A data dir is flat parquet files, or ``k=v/`` partition subdirectories
+(a producer's ``partitionBy`` output staged by `append_parquet_dir`).
+Spark refuses one scan over two partitioned dirs
+(CONFLICTING_DIRECTORY_STRUCTURES), so `_read_dirs` scans flat dirs
+together and unions one scan per partitioned dir. Dynamic partition
+pruning still reaches every scan of the union when the join compares
+the partition column itself; a cast on that side stops it.
 
 `run_pipeline_atomic` is the one medallion run, and it is
 delta-driven. Its delta is the run's new bronze rows (anti-joined
@@ -63,6 +76,7 @@ exact-decimal gold aggregate.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import shutil
@@ -83,13 +97,56 @@ class ConflictError(Exception):
     """Another writer committed since this transaction began."""
 
 
+def _part_files(abs_dir: str) -> list[str]:
+    """Paths, relative to a data directory, of its parquet part files:
+    the top level and any ``k=v/`` partition subdirectories. Names
+    starting with ``_`` or ``.`` (markers, checksums, scratch) are
+    skipped, as Spark's reader skips them."""
+    out = []
+    for dirpath, dirnames, filenames in os.walk(abs_dir):
+        dirnames[:] = sorted(d for d in dirnames if not d.startswith(("_", ".")))
+        rel = os.path.relpath(dirpath, abs_dir)
+        out += [
+            os.path.normpath(os.path.join(rel, n))
+            for n in sorted(filenames)
+            if n.endswith(".parquet") and not n.startswith(("_", "."))
+        ]
+    return out
+
+
 def _footers(abs_dir: str):
     """Footer metadata of every part file in a data directory."""
     import pyarrow.parquet as pq
 
-    for name in sorted(os.listdir(abs_dir)):
-        if name.endswith(".parquet"):
-            yield pq.ParquetFile(os.path.join(abs_dir, name)).metadata
+    for rel in _part_files(abs_dir):
+        yield pq.ParquetFile(os.path.join(abs_dir, rel)).metadata
+
+
+def _link(src: str, dst: str) -> None:
+    """Hardlink a part file; copy when the link fails (EXDEV: another
+    filesystem)."""
+    try:
+        os.link(src, dst)
+    except OSError:
+        shutil.copy2(src, dst)
+
+
+def _dir_rows(abs_dir: str, stats: dict | None) -> int:
+    """A data dir's row count: the ``ROWS_KEY`` its stats recorded at
+    write time, else its parquet footers (dirs committed before counts
+    were recorded). No Spark job either way."""
+    n = (stats or {}).get(ROWS_KEY)
+    return n if n is not None else sum(md.num_rows for md in _footers(abs_dir))
+
+
+def _read_dirs(spark: SparkSession, abs_dirs: list[str]) -> DataFrame:
+    """One DataFrame over data dirs: a single scan of the flat dirs,
+    unioned with one scan per partitioned dir (Spark cannot infer one
+    partition spec across several partitioned roots)."""
+    flat = [d for d in abs_dirs if not any(os.sep in f for f in _part_files(d))]
+    scans = [spark.read.parquet(*flat)] if flat else []
+    scans += [spark.read.parquet(d) for d in abs_dirs if d not in flat]
+    return functools.reduce(DataFrame.unionByName, scans)
 
 
 def _dir_stats(abs_dir: str) -> dict:
@@ -208,11 +265,7 @@ def _dir_bloom(
 
     import pyarrow.parquet as pq
 
-    files = sorted(
-        os.path.join(abs_dir, n)
-        for n in os.listdir(abs_dir)
-        if n.endswith(".parquet")
-    )
+    files = [os.path.join(abs_dir, rel) for rel in _part_files(abs_dir)]
     out: dict[str, dict] = {}
     for col in cols:
         distinct: set = set()
@@ -249,6 +302,12 @@ def _dir_bloom(
     return out
 
 
+def _dir_may_contain(stats: dict | None, col: str, values: list) -> bool:
+    """The pruning predicate of a data dir: False only when its min/max
+    or its Bloom filter for `col` proves every value absent."""
+    return _may_contain(stats, col, values) and _bloom_may_contain(stats, col, values)
+
+
 def _bloom_may_contain(stats: dict | None, col: str, values: list) -> bool:
     """True unless the dir's Bloom filter for `col` provably excludes
     every value. Missing filter / unindexable value → True."""
@@ -277,9 +336,9 @@ class AtomicWarehouse:
     no Spark job.
 
     Single-op `append`/`overwrite` auto-wrap in a one-table
-    transaction, so it has medallion.Warehouse's surface;
-    `transaction()` groups any number of writes across any number of
-    tables into one atomic visibility switch.
+    transaction and return the rows written; `transaction()` groups
+    any number of writes across any number of tables into one atomic
+    visibility switch.
     """
 
     def __init__(
@@ -290,9 +349,10 @@ class AtomicWarehouse:
     ):
         """``bloom_cols`` maps table → key columns to Bloom-index per
         data dir at write time (see _dir_bloom). Point lookups via
-        read_pruned/pruned_dirs on those columns then skip dirs whose
-        min/max span covers the value but whose filter proves it
-        absent — the unsorted-key erasure/entity-read shape."""
+        read_pruned/pruned_dirs and `erasure.erase_keys` on those
+        columns then skip dirs whose min/max span covers the value but
+        whose filter proves it absent — the unsorted-key erasure/
+        entity-read shape."""
         self.spark = spark
         self.root = root
         self.bloom_cols = bloom_cols or {}
@@ -312,7 +372,7 @@ class AtomicWarehouse:
     def _abs(self, rel: str) -> str:
         return os.path.join(self.root, rel)
 
-    # -- Warehouse-compatible surface --------------------------------------
+    # -- table surface (shared with _Transaction) ---------------------------
     def exists(self, table: str) -> bool:
         return table in self.manifest()["tables"]
 
@@ -320,15 +380,15 @@ class AtomicWarehouse:
         dirs = self.manifest()["tables"].get(table)
         if not dirs:
             raise FileNotFoundError(f"table {table!r} not in manifest")
-        return self.spark.read.parquet(*[self._abs(d) for d in dirs])
+        return _read_dirs(self.spark, [self._abs(d) for d in dirs])
 
-    def append(self, df: DataFrame, table: str) -> None:
+    def append(self, df: DataFrame, table: str) -> int:
         with self.transaction() as txn:
-            txn.append(df, table)
+            return txn.append(df, table)
 
-    def overwrite(self, df: DataFrame, table: str) -> None:
+    def overwrite(self, df: DataFrame, table: str) -> int:
         with self.transaction() as txn:
-            txn.overwrite(df, table)
+            return txn.overwrite(df, table)
 
     def rows(self, table: str) -> int:
         """The table's row count from the manifest: the footer
@@ -340,20 +400,14 @@ class AtomicWarehouse:
         if not dirs:
             raise FileNotFoundError(f"table {table!r} not in manifest")
         stats = man.get("stats", {})
-        total = 0
-        for rel in dirs:
-            n = stats.get(rel, {}).get(ROWS_KEY)
-            if n is None:
-                n = sum(md.num_rows for md in _footers(self._abs(rel)))
-            total += n
-        return total
+        return sum(_dir_rows(self._abs(rel), stats.get(rel)) for rel in dirs)
 
     # -- manifest-stat pruning --------------------------------------------
     def pruned_dirs(self, table: str, col: str, values: list) -> tuple[list, list]:
         """Split a table's data directories into (candidates, clean) by
-        the manifest's recorded min/max for `col` — zero data or footer
-        IO. A dir is clean only if its stats provably exclude every
-        value."""
+        the manifest's recorded min/max and Bloom filter for `col` —
+        zero data or footer IO. A dir is clean only if its stats
+        provably exclude every value."""
         man = self.manifest()
         dirs = man["tables"].get(table)
         if not dirs:
@@ -361,11 +415,7 @@ class AtomicWarehouse:
         stats = man.get("stats", {})
         cand, clean = [], []
         for rel in dirs:
-            st = stats.get(rel)
-            may = _may_contain(st, col, values) and _bloom_may_contain(
-                st, col, values
-            )
-            (cand if may else clean).append(rel)
+            (cand if _dir_may_contain(stats.get(rel), col, values) else clean).append(rel)
         return cand, clean
 
     def read_pruned(self, table: str, col: str, values: list) -> DataFrame:
@@ -379,7 +429,7 @@ class AtomicWarehouse:
         if not cand:
             full = self.read(table)
             return full.limit(0)
-        return self.spark.read.parquet(*[self._abs(d) for d in cand])
+        return _read_dirs(self.spark, [self._abs(d) for d in cand])
 
     # -- transactions ------------------------------------------------------
     @contextmanager
@@ -401,7 +451,7 @@ class AtomicWarehouse:
             raise FileNotFoundError(
                 f"table {table!r} not in manifest v{version}"
             )
-        return self.spark.read.parquet(*[self._abs(d) for d in dirs])
+        return _read_dirs(self.spark, [self._abs(d) for d in dirs])
 
     def vacuum(
         self, retain_last: int = 0, min_age_seconds: float = 3600.0
@@ -574,7 +624,7 @@ class _Transaction:
         }
         self.committed = False
 
-    # same surface as Warehouse → medallion stages run unchanged
+    # the warehouse's table surface → medallion stages run unchanged
     def exists(self, table: str) -> bool:
         return table in self.tables
 
@@ -582,7 +632,7 @@ class _Transaction:
         dirs = self.tables.get(table)
         if not dirs:
             raise FileNotFoundError(f"table {table!r} not in transaction view")
-        return self.wh.spark.read.parquet(*[self.wh._abs(d) for d in dirs])
+        return _read_dirs(self.wh.spark, [self.wh._abs(d) for d in dirs])
 
     def _new_dir(self, table: str) -> str:
         rel = f"{table}/z{self.base_version + 1}_{uuid.uuid4().hex[:8]}"
@@ -602,19 +652,55 @@ class _Transaction:
                 st["__bloom__"] = bl
         self.stats[rel] = st
 
-    def append(self, df: DataFrame, table: str) -> None:
+    def _write(self, table: str, df, carry=()) -> str:
+        """Stage one fresh data dir of `table` with its stats and return
+        it. `df` is one DataFrame, or a list of them written one after
+        another (the files of the i-th named ``part-rw<i>-<j>``).
+        `carry` lists existing part files hardlinked in, byte-identical."""
         rel = self._new_dir(table)
-        df.write.mode("errorifexists").parquet(self.wh._abs(rel))
+        dst = self.wh._abs(rel)
+        if isinstance(df, DataFrame):
+            df.write.mode("errorifexists").parquet(dst)
+        else:
+            os.makedirs(dst)
+            for i, one in enumerate(df):
+                sub = os.path.join(dst, f"_rw{i}")
+                one.write.mode("errorifexists").parquet(sub)
+                for j, name in enumerate(_part_files(sub)):
+                    os.replace(
+                        os.path.join(sub, name),
+                        os.path.join(dst, f"part-rw{i:05d}-{j}.parquet"),
+                    )
+                shutil.rmtree(sub)
+        for k, src in enumerate(carry):
+            name = os.path.basename(src)
+            if os.path.exists(os.path.join(dst, name)):
+                name = f"c{k}-{name}"
+            _link(src, os.path.join(dst, name))
         self._stage_stats(rel, table)
-        self.tables[table] = self.tables.get(table, []) + [rel]
+        return rel
+
+    def append(self, df: DataFrame, table: str) -> int:
+        """Stage `df` as a new data dir of `table` and return the rows
+        it holds (footer ``num_rows``). A frame of 0 rows stages
+        nothing."""
+        rel = self._write(table, df)
+        n = self.stats[rel][ROWS_KEY]
+        if n:
+            self.tables[table] = self.tables.get(table, []) + [rel]
+        else:
+            del self.stats[rel]
+            shutil.rmtree(self.wh._abs(rel))
+        return n
 
     def append_parquet_dir(
         self, src_dir: str, table: str, link: bool = False
     ) -> str:
         """Stage ALREADY-WRITTEN parquet files (any producer — pyarrow,
-        another engine, a bulk copy) as one new data dir: the IMPORT /
-        ADD FILES analog. Lets non-Spark processes write through the
-        same transactional commit protocol.
+        another engine, a Spark ``partitionBy`` write) as one new data
+        dir: the IMPORT / ADD FILES analog. Lets other writers commit
+        through the same transactional protocol. ``k=v/`` partition
+        subdirectories are kept as they are.
 
         Files are COPIED by default: a hardlink would share inodes
         with files the producer still owns, so a later in-place
@@ -624,53 +710,48 @@ class _Transaction:
         source files are never modified in place (e.g. a staging dir
         that is deleted right after commit — deletion is safe, the
         inode survives; modification is not)."""
-        rel = self._new_dir(table)
-        dst = self.wh._abs(rel)
-        os.makedirs(dst, exist_ok=True)
-        staged = 0
-        for name in sorted(os.listdir(src_dir)):
-            if not name.endswith(".parquet"):
-                continue
-            s, d = os.path.join(src_dir, name), os.path.join(dst, name)
-            if link:
-                try:
-                    os.link(s, d)
-                except OSError:
-                    shutil.copy2(s, d)
-            else:
-                shutil.copy2(s, d)
-            staged += 1
-        if staged == 0:
+        files = _part_files(src_dir)
+        if not files:
             # committing an empty data dir would only surface later as
             # Spark's unable-to-infer-schema read error, far from the
             # typo'd path / wrong-format producer that caused it
             raise FileNotFoundError(
                 f"append_parquet_dir: no *.parquet files in {src_dir!r}"
             )
+        rel = self._new_dir(table)
+        dst = self.wh._abs(rel)
+        for f in files:
+            s, d = os.path.join(src_dir, f), os.path.join(dst, f)
+            os.makedirs(os.path.dirname(d), exist_ok=True)
+            if link:
+                _link(s, d)
+            else:
+                shutil.copy2(s, d)
         self._stage_stats(rel, table)
         self.tables[table] = self.tables.get(table, []) + [rel]
         return rel
 
-    def overwrite(self, df: DataFrame, table: str) -> None:
-        rel = self._new_dir(table)
-        df.write.mode("errorifexists").parquet(self.wh._abs(rel))
-        self._stage_stats(rel, table)
+    def overwrite(self, df: DataFrame, table: str) -> int:
+        """Stage `df` as the table's only data dir and return its rows.
+        A frame of 0 rows still stages a dir: the empty table keeps its
+        schema."""
+        rel = self._write(table, df)
         self.tables[table] = [rel]
+        return self.stats[rel][ROWS_KEY]
 
     def replace_dirs(
-        self, table: str, drop: list[str], df: DataFrame | None
+        self, table: str, drop: list[str], df, carry=()
     ) -> str | None:
         """Surgical rewrite: remove `drop` dirs from the table's list
-        and (if df is not None) add one fresh dir holding `df` —
-        untouched dirs stay listed as-is, byte-identical. The erasure
-        primitive: candidates collapse into one rewritten dir, clean
-        dirs never move."""
+        and (if df is not None) add one fresh dir holding `df` and the
+        `carry` files (see `_write`) — untouched dirs stay listed
+        as-is, byte-identical. The erasure and compaction primitive:
+        candidates collapse into one rewritten dir, clean dirs never
+        move."""
         keep = [d for d in self.tables.get(table, []) if d not in set(drop)]
         rel = None
         if df is not None:
-            rel = self._new_dir(table)
-            df.write.mode("errorifexists").parquet(self.wh._abs(rel))
-            self._stage_stats(rel, table)
+            rel = self._write(table, df, carry)
             keep = keep + [rel]
         self.tables[table] = keep
         return rel
@@ -771,7 +852,7 @@ def table_changes(
     def read_dirs(dirs: list[str]) -> DataFrame | None:
         if not dirs:
             return None
-        return wh.spark.read.parquet(*[wh._abs(d) for d in dirs])
+        return _read_dirs(wh.spark, [wh._abs(d) for d in dirs])
 
     old_df, new_df = read_dirs(old_only), read_dirs(new_only)
     if old_df is None and new_df is None:
@@ -793,9 +874,8 @@ def compact_table(
     sort_by: list[str] | None = None,
 ) -> dict:
     """Small-file compaction — the OPTIMIZE analog for the manifest
-    warehouse (`sources/io.py::compact_table` is the sibling for plain
-    parquet directories, where the swap is non-atomic). Many append
-    batches leave a table as many directories of many small files;
+    warehouse. Many append batches leave a table as many directories
+    of many small files;
     listing and per-file open costs then dominate scans at lake scale.
     This rewrites the WHOLE table as one directory of
     ~`target_file_mb` files (optionally sorted so min/max stats become
@@ -823,10 +903,9 @@ def compact_table(
         n_bytes = n_files = 0
         for rel in dirs:
             base = wh._abs(rel)
-            for name in os.listdir(base):
-                if name.endswith(".parquet"):
-                    n_files += 1
-                    n_bytes += os.path.getsize(os.path.join(base, name))
+            for name in _part_files(base):
+                n_files += 1
+                n_bytes += os.path.getsize(os.path.join(base, name))
         n_out = max(1, -(-n_bytes // (target_file_mb * 1024 * 1024)))
         df = txn.read(table)
         if sort_by:
@@ -834,9 +913,7 @@ def compact_table(
         else:
             df = df.repartition(n_out)
         new_rel = txn.replace_dirs(table, drop=dirs, df=df)
-    files_after = sum(
-        1 for n in os.listdir(wh._abs(new_rel)) if n.endswith(".parquet")
-    )
+    files_after = len(_part_files(wh._abs(new_rel)))
     return {
         "dirs_before": len(dirs),
         "files_before": n_files,

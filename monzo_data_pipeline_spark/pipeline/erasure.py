@@ -3,84 +3,41 @@
 The reference keeps personal finance data in three medallion layers of
 one SQLite file — a DELETE there is a one-liner. On an immutable
 parquet lake, erasure is a rewrite: anti-join every table that carries
-the subject key and atomically swap the rewritten files in. For an
-LLM-training corpus this is the same operator that removes opted-out
-or licensed-out documents before a training run.
+the subject key and commit the rewritten files in place of the old.
+For an LLM-training corpus this is the same operator that removes
+opted-out or licensed-out documents before a training run.
 
-Scale posture:
-  * The erase set is broadcast (it is tiny relative to the lake) and
-    the anti-join is map-side against each table scan.
-  * `erase_keys_pruned` rewrites ONLY the parquet files whose
-    row-group min/max key stats can contain an erase key — files that
-    provably exclude every key are carried over byte-identical
-    (hardlinked, never re-encoded). With the sorted/range layout
-    `sources/io.py` writes, an erasure run touches O(keys) files, not
-    the lake. On Delta/Iceberg you'd issue a metadata DELETE instead;
-    the operator interface (keys in, per-table report out) is
-    unchanged. Footer reads are a driver metadata loop here; at lake
-    scale those stats live in the commit manifest (atomic.py) and the
-    same pruning reads the manifest instead.
-  * The swap is write-temp → two atomic renames (current → .__old__,
-    tmp → current) → delete .__old__, so at every instant the table
-    path either is the old snapshot or the new one — a crash
-    mid-erasure never leaves a half-deleted or missing directory.
-    Recovery from a crash between the two renames is picking up the
-    .__old__ dir; recovery after the second rename is nothing.
+Scale posture (`erase_keys`, over an `atomic.AtomicWarehouse`):
+  * The erase set crosses the driver once and is broadcast (it is
+    tiny relative to the lake); the anti-join is map-side against each
+    table scan.
+  * Pruning runs in two steps, neither reading data. Data dirs whose
+    manifest min/max or Bloom filter proves every key absent are left
+    as they are (the Delta/Iceberg file-skipping pattern); inside the
+    remaining dirs, part files whose row-group footer stats exclude
+    every key are hardlinked into the rewritten dir byte-identical.
+    With a sorted, range or Z-order layout (`sources/io.py`) an
+    erasure touches O(keys) files, not the lake — also after
+    `atomic.compact_table` has left a table as one dir.
+  * Every table flips in ONE commit: an auditor reading at any instant
+    sees the subject everywhere or nowhere, and a crash mid-erasure
+    leaves the old snapshot whole. Old dirs remain until vacuum() —
+    complete erasure = this commit + vacuum, both idempotent.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..session import local_frame
-from .medallion import Warehouse
-
-
-def erase_keys(
-    wh: Warehouse,
-    ids: DataFrame,
-    key: str,
-    tables: list[str],
-) -> dict[str, int]:
-    """Remove every row whose `key` is in `ids` from each listed table.
-
-    Tables lacking the key column are skipped (reported as -1);
-    re-running with the same ids is a no-op. Returns rows removed per
-    table.
-    """
-    erase_set = F.broadcast(ids.select(key).distinct())
-    report: dict[str, int] = {}
-    for table in tables:
-        if not wh.exists(table):
-            continue
-        df = wh.read(table)
-        if key not in df.columns:
-            report[table] = -1
-            continue
-        kept = df.join(erase_set, key, "left_anti")
-        final = wh.path(table)
-        tmp = final + ".__erase_rewrite__"
-        old = final + ".__old__"
-        kept.write.mode("overwrite").parquet(tmp)
-        n_before = df.count()  # original files still on disk here
-        # two renames, each atomic: the table dir always exists and is
-        # always a consistent snapshot (old or new) — rmtree only ever
-        # touches the retired copy
-        if os.path.exists(old):
-            shutil.rmtree(old)  # leftover from a prior crash
-        os.replace(final, old)
-        os.replace(tmp, final)
-        shutil.rmtree(old)
-        report[table] = n_before - wh.read(table).count()
-    return report
+from .atomic import ROWS_KEY, AtomicWarehouse, _dir_may_contain, _dir_rows, _part_files
 
 
 def _files_that_may_contain(path: str, key: str, keys: list) -> tuple[list[str], list[str]]:
-    """Split a parquet table dir into (candidate, clean) part files by
+    """Split a data dir into (candidate, clean) part files by
     row-group min/max footer stats on `key`: a file is clean only if
     EVERY row group's [min, max] provably excludes EVERY erase key.
     Missing stats → candidate (never assume exclusion)."""
@@ -89,19 +46,21 @@ def _files_that_may_contain(path: str, key: str, keys: list) -> tuple[list[str],
     import pyarrow.parquet as pq
 
     # Nulls can't match any stats range (and the anti-join drops them
-    # anyway — plain erase_keys tolerates them); mixed/incomparable key
-    # types would make sorted() itself raise, so both degrade to the
-    # documented never-assume-exclusion posture instead of crashing.
+    # anyway); mixed/incomparable key types would make sorted() itself
+    # raise, so both degrade to the documented never-assume-exclusion
+    # posture instead of crashing.
     keys = [k for k in keys if k is not None]
     try:
         skeys = sorted(keys)
     except TypeError:
         skeys = None  # incomparable key mix → every file is a candidate
     candidates, clean = [], []
-    for name in sorted(os.listdir(path)):
-        if not name.endswith(".parquet"):
-            continue
+    for name in _part_files(path):
         fpath = os.path.join(path, name)
+        if os.sep in name:
+            raise ValueError(
+                f"erase_keys rewrites flat data dirs; {path!r} is partitioned"
+            )
         md = pq.ParquetFile(fpath).metadata
         may = False
         for rg in range(md.num_row_groups):
@@ -133,143 +92,93 @@ def _files_that_may_contain(path: str, key: str, keys: list) -> tuple[list[str],
     return candidates, clean
 
 
-def erase_keys_pruned(
-    wh: Warehouse,
+def erase_keys(
+    wh: AtomicWarehouse,
     ids: DataFrame,
     key: str,
     tables: list[str],
     preserve_layout: bool = False,
 ) -> dict[str, dict]:
-    """Stat-pruned erasure: identical result to `erase_keys`, but only
-    the part files whose row-group min/max stats can contain an erase
-    key are decoded and rewritten — every other file is hardlinked
-    into the new snapshot byte-identical. The atomic two-rename swap
-    is unchanged, so a crash never leaves a half-scrubbed table.
+    """Remove every row whose `key` is in `ids` from each listed table,
+    all tables in one commit. Tables absent from the warehouse are
+    skipped; re-running with the same ids removes nothing.
+
+    A table's data dirs that may hold a key (manifest min/max and
+    Bloom filter) and have part files that may hold one (footer stats)
+    collapse into ONE new dir: the clean part files hardlinked in,
+    the candidate files rewritten through the anti-join. Other dirs
+    stay listed, byte-identical.
 
     ``preserve_layout=True`` rewrites each candidate file
     INDIVIDUALLY (one file in → one filtered file out) instead of
     coalescing all candidates into one write: every surviving file's
     value range is a subset of the file it replaced, so a clustered
     layout (Z-order, range-sort) KEEPS its min/max skipping power —
-    the default bulk rewrite silently merges the candidates and
-    destroys their clustering, which on a 100 TB OPTIMIZE'd table is
-    a latent full-scan regression no correctness check sees
-    (audited by `zorder_layout_stats` per actual file in
+    the default bulk rewrite merges the candidates and destroys their
+    clustering, which on a 100 TB OPTIMIZE'd table is a latent
+    full-scan regression no correctness check sees (audited by
+    `zorder_layout_stats` per actual file in
     tests/test_erasure_layout.py). The per-file loop is bounded by
-    the stat pruning itself: candidates are the few files whose
-    stats admit an erase key, each rewritten by one tiny job.
+    the stat pruning itself: each candidate is one tiny write job.
 
-    Returns per table ``{"rows_removed": n, "files_total": t,
-    "files_rewritten": r}`` (``rows_removed`` = -1 for tables lacking
-    the key column). The erase-key set crosses the driver once — it is
-    tiny by the same contract that lets the anti-join broadcast it.
-    """
-    spark = ids.sparkSession
-    key_vals = [r[0] for r in ids.select(key).distinct().collect()]
+    Returns per table ``{"rows_removed", "dirs_total",
+    "dirs_rewritten", "files_total", "files_rewritten"}``;
+    ``rows_removed`` is -1 (and the rest 0) for a table lacking the key
+    column. Counts come from parquet footers, so no count job runs."""
+    spark = wh.spark
+    # the erase set is tiny by contract: one collect, deduplicated here
+    # (a distinct() would add a shuffle job); NULL matches nothing
+    probe = list({r[0] for r in ids.select(key).collect()} - {None})
     erase_set = F.broadcast(
-        local_frame(spark, [(k,) for k in key_vals], ids.select(key).schema)
+        local_frame(spark, [(k,) for k in probe], ids.select(key).schema)
     )
     report: dict[str, dict] = {}
-    for table in tables:
-        if not wh.exists(table):
-            continue
-        df = wh.read(table)
-        if key not in df.columns:
-            report[table] = {"rows_removed": -1, "files_total": 0, "files_rewritten": 0}
-            continue
-        final = wh.path(table)
-        candidates, clean = _files_that_may_contain(final, key, key_vals)
-        if not candidates or not key_vals:
-            report[table] = {
-                "rows_removed": 0,
-                "files_total": len(candidates) + len(clean),
-                "files_rewritten": 0,
-            }
-            continue
-        tmp = final + ".__erase_rewrite__"
-        old = final + ".__old__"
-        if os.path.exists(tmp):
-            shutil.rmtree(tmp)
-        hit = spark.read.parquet(*candidates)
-        if preserve_layout:
-            os.makedirs(tmp)
-            for i, fpath in enumerate(candidates):
-                one = spark.read.parquet(fpath)
-                sub = f"{tmp}.__rw{i}__"
-                (
-                    one.join(erase_set, key, "left_anti")
-                    .coalesce(1)
-                    .write.mode("overwrite")
-                    .parquet(sub)
-                )
-                for j, pname in enumerate(
-                    sorted(
-                        f for f in os.listdir(sub) if f.endswith(".parquet")
-                    )
-                ):
-                    os.replace(
-                        os.path.join(sub, pname),
-                        os.path.join(tmp, f"part-rw{i:05d}-{j}.parquet"),
-                    )
-                shutil.rmtree(sub)
-            kept_files = [
-                os.path.join(tmp, f)
-                for f in os.listdir(tmp)
-                if f.endswith(".parquet")
-            ]
-            n_after = (
-                spark.read.parquet(*kept_files).count() if kept_files else 0
-            )
-        else:
-            kept = hit.join(erase_set, key, "left_anti")
-            kept.write.mode("overwrite").parquet(tmp)
-            n_after = spark.read.parquet(tmp).count()
-        n_removed = hit.count() - n_after
-        # carry clean files over byte-identical (hardlink; copy when the
-        # temp dir lands on another filesystem — EXDEV)
-        for fpath in clean:
-            dst = os.path.join(tmp, os.path.basename(fpath))
-            try:
-                os.link(fpath, dst)
-            except OSError:
-                shutil.copy2(fpath, dst)
-        if os.path.exists(old):
-            shutil.rmtree(old)  # leftover from a prior crash
-        os.replace(final, old)
-        os.replace(tmp, final)
-        shutil.rmtree(old)
-        report[table] = {
-            "rows_removed": n_removed,
-            "files_total": len(candidates) + len(clean),
-            "files_rewritten": len(candidates),
-        }
-    return report
-
-
-def erase_keys_atomic(wh, ids: DataFrame, key: str, tables: list[str]) -> dict[str, int]:
-    """Erasure across ALL tables in ONE commit (AtomicWarehouse).
-
-    The per-table variant above leaves a window where table A is
-    already scrubbed but table B still holds the subject — fine for
-    eventual compliance, wrong for a consistent audit snapshot. Here
-    every rewritten table flips in the same manifest swap: an auditor
-    reading at any instant sees the subject everywhere or nowhere.
-    Old versions remain on disk until vacuum() — complete erasure =
-    this commit + vacuum, both idempotent.
-    """
-    erase_set = F.broadcast(ids.select(key).distinct())
-    report: dict[str, int] = {}
     with wh.transaction() as txn:
         for table in tables:
             if not txn.exists(table):
                 continue
-            df = txn.read(table)
-            if key not in df.columns:
-                report[table] = -1
+            if key not in txn.read(table).columns:
+                report[table] = {
+                    "rows_removed": -1,
+                    "dirs_total": 0,
+                    "dirs_rewritten": 0,
+                    "files_total": 0,
+                    "files_rewritten": 0,
+                }
                 continue
-            n_before = df.count()
-            txn.overwrite(df.join(erase_set, key, "left_anti"), table)
-            report[table] = n_before - txn.read(table).count()
+            dirs = txn.tables[table]
+            hit_dirs, cand, carry = [], [], []
+            n_files = 0
+            for rel in dirs:
+                path = wh._abs(rel)
+                if not probe or not _dir_may_contain(txn.stats.get(rel), key, probe):
+                    n_files += len(_part_files(path))
+                    continue
+                c, clean = _files_that_may_contain(path, key, probe)
+                n_files += len(c) + len(clean)
+                if c:
+                    hit_dirs.append(rel)
+                    cand += c
+                    carry += clean
+            removed = 0
+            if cand:
+                if preserve_layout:
+                    df = [
+                        spark.read.parquet(f).join(erase_set, key, "left_anti").coalesce(1)
+                        for f in cand
+                    ]
+                else:
+                    df = spark.read.parquet(*cand).join(erase_set, key, "left_anti")
+                before = sum(_dir_rows(wh._abs(d), txn.stats.get(d)) for d in hit_dirs)
+                new_rel = txn.replace_dirs(table, drop=hit_dirs, df=df, carry=carry)
+                removed = before - txn.stats[new_rel][ROWS_KEY]
+            report[table] = {
+                "rows_removed": removed,
+                "dirs_total": len(dirs),
+                "dirs_rewritten": len(hit_dirs),
+                "files_total": n_files,
+                "files_rewritten": len(cand),
+            }
     return report
 
 
@@ -429,65 +338,6 @@ def t_closeness_audit(
     if t_ppm is not None:
         out = out.filter(F.col("emd_ppm") > t_ppm)
     return out
-
-
-def erase_keys_atomic_pruned(
-    wh, ids: DataFrame, key: str, tables: list[str]
-) -> dict[str, dict]:
-    """Erasure on an AtomicWarehouse with MANIFEST-stat pruning: the
-    per-directory min/max recorded at write time (atomic.py) decides
-    which data dirs can contain a subject key — zero data or footer
-    reads for the decision, the Delta/Iceberg file-skipping pattern.
-    Candidate dirs collapse into one rewritten dir; clean dirs stay in
-    the manifest untouched (byte-identical on disk); ALL tables flip
-    in one commit. Old dirs remain until vacuum() — complete erasure =
-    this commit + vacuum, both idempotent.
-
-    Returns per table ``{"rows_removed": n, "dirs_total": t,
-    "dirs_rewritten": r}`` (-1 rows_removed for tables lacking the
-    key column)."""
-    from .atomic import _may_contain
-
-    spark = ids.sparkSession
-    key_vals = [r[0] for r in ids.select(key).distinct().collect()]
-    erase_set = F.broadcast(
-        local_frame(spark, [(k,) for k in key_vals], ids.select(key).schema)
-    )
-    report: dict[str, dict] = {}
-    with wh.transaction() as txn:
-        for table in tables:
-            if not txn.exists(table):
-                continue
-            df = txn.read(table)
-            if key not in df.columns:
-                report[table] = {
-                    "rows_removed": -1, "dirs_total": 0, "dirs_rewritten": 0,
-                }
-                continue
-            dirs = txn.tables[table]
-            cand = [
-                rel for rel in dirs
-                if _may_contain(txn.stats.get(rel), key, key_vals)
-            ]
-            if not cand or not key_vals:
-                report[table] = {
-                    "rows_removed": 0,
-                    "dirs_total": len(dirs),
-                    "dirs_rewritten": 0,
-                }
-                continue
-            hit = spark.read.parquet(*[wh._abs(d) for d in cand])
-            n_before = hit.count()
-            new_rel = txn.replace_dirs(
-                table, drop=cand, df=hit.join(erase_set, key, "left_anti")
-            )
-            n_after = spark.read.parquet(wh._abs(new_rel)).count()
-            report[table] = {
-                "rows_removed": n_before - n_after,
-                "dirs_total": len(dirs),
-                "dirs_rewritten": len(cand),
-            }
-    return report
 
 
 def pseudonymize_columns(df: DataFrame, cols: list[str], salt: str) -> DataFrame:

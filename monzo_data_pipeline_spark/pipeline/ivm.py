@@ -37,7 +37,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from .medallion import Warehouse
+from .atomic import AtomicWarehouse
 
 
 def join_view_delta(
@@ -113,61 +113,22 @@ def merge_agg_state(
 
 
 def maintain_view_state(
-    wh: Warehouse, table: str, partial: DataFrame, keys: list[str]
+    wh: AtomicWarehouse, table: str, partial: DataFrame, keys: list[str]
 ) -> None:
     """Persisted fold: merge one batch's partial aggregate into the
-    warehouse view-state table (create on first batch). The merged
-    state is fully materialized to a STAGING path first — the write
-    job reads the live files, so no executor loss or cache eviction
-    can ever recompute against a half-deleted source (the
-    read-modify-overwrite hazard of persist()+count()+overwrite) —
-    then swapped in with two metadata renames. The swap window is
-    rename-only (no data job inside it) and CRASH-RECOVERABLE: if a
-    driver died between the retire and promote renames, the next call
-    finds the live path missing with `.__retired__` present and
-    renames the full history back before merging — the partial batch
-    is re-applied, never mistaken for the first batch (r10 fix). For
-    exactly-once across a driver crash inside the window, use the
-    streaming lane's versioned-dir scheme (streaming/sketches.py) or
-    wrap in pipeline/atomic.py's transactional commit."""
-    spark = partial.sparkSession
-    live = wh.path(table).rstrip("/")
-    stage, retired = live + ".__stage__", live + ".__retired__"
-    jvm0 = spark._jvm
-    fs0 = jvm0.org.apache.hadoop.fs.Path(live).getFileSystem(
-        spark._jsc.hadoopConfiguration()
-    )
-    if not wh.exists(table):
-        if fs0.exists(jvm0.org.apache.hadoop.fs.Path(retired)):
-            # crashed mid-swap: restore the retired full history
-            # instead of silently re-initializing from one partial
-            if not fs0.rename(
-                jvm0.org.apache.hadoop.fs.Path(retired),
-                jvm0.org.apache.hadoop.fs.Path(live),
-            ):
-                raise IOError(
-                    f"found retired view state at {retired} but the "
-                    f"live path {live} is missing and the recovery "
-                    "rename failed — refusing to re-initialize"
-                )
-        else:
-            wh.overwrite(merge_agg_state(None, partial, keys), table)
-            return
-    merged = merge_agg_state(wh.read(table), partial, keys)
-    merged.write.mode("overwrite").parquet(stage)
-    fs = fs0
-
-    def _p(s: str):
-        return jvm0.org.apache.hadoop.fs.Path(s)
-
-    fs.delete(_p(retired), True)
-    if not fs.rename(_p(live), _p(retired)):
-        raise IOError(f"could not retire live state at {live}")
-    if not fs.rename(_p(stage), _p(live)):
-        # put the old state back rather than leave the view headless
-        fs.rename(_p(retired), _p(live))
-        raise IOError(f"could not promote staged state to {live}")
-    fs.delete(_p(retired), True)
+    warehouse view-state table (create on first batch) with one
+    `overwrite`. The merged state is written to a fresh data dir while
+    the committed state it reads stays in place, and the manifest
+    swap makes it visible: a crash at any point leaves the previous
+    state whole, never a half-folded or missing one. Exactly-once
+    across a crash is the caller's: re-running a batch whose commit
+    landed folds it twice (the streaming lane's epoch ledger,
+    `streaming/ingest.py::stream_silver_to_gold`, is the pattern)."""
+    # read inside the transaction: the commit's version check then
+    # covers the state the fold was computed from
+    with wh.transaction() as txn:
+        state = txn.read(table) if txn.exists(table) else None
+        txn.overwrite(merge_agg_state(state, partial, keys), table)
 
 
 def negate_partial(partial: DataFrame, keys: list[str]) -> DataFrame:

@@ -35,19 +35,20 @@ would leave the survivor to physical row order, so each first-wins
 sort ends with every remaining column (`BRONZE_TIE_BREAK`,
 `MERCHANT_ORDER`); `sql_path.py` uses the same order.
 
-Storage layout: one parquet directory per table under a warehouse
-root. At 100 TB, bronze_transactions would add
-``.partitionBy(ingest_date)`` so incremental loads touch one
-partition and time-range queries prune directories; the merge logic
-is unchanged.
+Storage: every stage reads and writes through `atomic.AtomicWarehouse`
+or one of its transactions — a table is the list of data dirs its
+manifest names, and each append stages a fresh dir. A write returns
+the rows it wrote (footer counts), so no stage runs a count job. At
+100 TB, bronze_transactions would add ``.partitionBy(ingest_date)`` so
+incremental loads touch one partition and time-range queries prune
+directories; the merge logic is unchanged.
 """
 
 from __future__ import annotations
 
-import os
 from typing import TYPE_CHECKING
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.dedup import anti_join_new_rows, distinct_entities, first_wins_dedup
@@ -105,33 +106,7 @@ MERCHANT_ORDER = ["name", "category"] + [
 ]
 
 
-class Warehouse:
-    """Plain parquet table store: one directory per table, writes
-    visible as they land, no transactions. The index, IVM and erasure
-    helpers write through it; the medallion run writes through
-    `atomic.AtomicWarehouse`, which has the same surface."""
-
-    def __init__(self, spark: SparkSession, root: str):
-        self.spark = spark
-        self.root = root
-
-    def path(self, table: str) -> str:
-        return os.path.join(self.root, table)
-
-    def exists(self, table: str) -> bool:
-        return os.path.exists(self.path(table))
-
-    def read(self, table: str) -> DataFrame:
-        return self.spark.read.parquet(self.path(table))
-
-    def overwrite(self, df: DataFrame, table: str) -> None:
-        df.write.mode("overwrite").parquet(self.path(table))
-
-    def append(self, df: DataFrame, table: str) -> None:
-        df.write.mode("append").parquet(self.path(table))
-
-
-def load_bronze(wh: Warehouse, batch: DataFrame) -> tuple[int, DataFrame]:
+def load_bronze(wh: AtomicWarehouse | _Transaction, batch: DataFrame) -> tuple[int, DataFrame]:
     """A11+A14 — idempotent bronze append: only ids not already present
     land; within-batch duplicates collapse first (first-wins by
     `BRONZE_TIE_BREAK`). Returns ``(rows appended, delta)``: the
@@ -143,13 +118,12 @@ def load_bronze(wh: Warehouse, batch: DataFrame) -> tuple[int, DataFrame]:
         new_rows = anti_join_new_rows(batch, existing, ["id"])
     else:
         new_rows = batch
-    # persist: the batch lineage may be a remote fetch (ingest.py) and the
-    # append both re-reads the target dir and re-executes lineage otherwise
+    # persist: the batch lineage may be a remote fetch (ingest.py) and
+    # the later stages would re-execute it; the append's write job fills
+    # the cache and its footers give the count
     new_rows = new_rows.persist()
     try:
-        n = new_rows.count()
-        if n:
-            wh.append(new_rows, BRONZE_TX)
+        n = wh.append(new_rows, BRONZE_TX)
     except BaseException:
         new_rows.unpersist()
         raise
@@ -157,7 +131,7 @@ def load_bronze(wh: Warehouse, batch: DataFrame) -> tuple[int, DataFrame]:
 
 
 def load_snapshots(
-    wh: Warehouse, balance: DataFrame | None, pots: DataFrame | None
+    wh: AtomicWarehouse | _Transaction, balance: DataFrame | None, pots: DataFrame | None
 ) -> None:
     """A12/A13 — unconditional snapshot appends (no keys, no dedup:
     bronze_balance/bronze_pots are append-only time series, reference
@@ -168,7 +142,7 @@ def load_snapshots(
         wh.append(pots, BRONZE_POTS)
 
 
-def latest_balance(wh: Warehouse) -> DataFrame:
+def latest_balance(wh: AtomicWarehouse | _Transaction) -> DataFrame:
     """A24 — the notebook's latest-snapshot read (ORDER BY
     date_retrieved DESC LIMIT 1)."""
     from ..operators.filters import latest_snapshot
@@ -176,7 +150,7 @@ def latest_balance(wh: Warehouse) -> DataFrame:
     return latest_snapshot(wh.read(BRONZE_BALANCE), "date_retrieved")
 
 
-def latest_pots(wh: Warehouse) -> DataFrame:
+def latest_pots(wh: AtomicWarehouse | _Transaction) -> DataFrame:
     """A24 generalized — latest snapshot per pot id (rank window)."""
     return first_wins_dedup(
         wh.read(BRONZE_POTS).withColumn(
@@ -187,7 +161,9 @@ def latest_pots(wh: Warehouse) -> DataFrame:
     ).drop("__neg_ts")
 
 
-def transform_silver(wh: Warehouse, inserted_at: str, delta: DataFrame) -> DataFrame:
+def transform_silver(
+    wh: AtomicWarehouse | _Transaction, inserted_at: str, delta: DataFrame
+) -> DataFrame:
     """A15-A18 — bronze → silver, set-based, folding this run's
     ``delta`` (its new bronze rows, see the module docstring).
 
@@ -269,20 +245,14 @@ def build_gold(wh: AtomicWarehouse | _Transaction, new_silver: DataFrame) -> Non
     wh.overwrite(gold_from_state(wh), GOLD_MONTHLY)
 
 
-def _merge_append(wh: Warehouse, rows: DataFrame, table: str, keys: list[str]) -> None:
-    """INSERT OR IGNORE analog: append only keys absent from target.
-
-    The anti-join reads the same path the append writes to; the file
-    index is snapshotted when `read` plans, and persist() decouples
-    execution from the write so the merge set is computed exactly once.
-    """
+def _merge_append(
+    wh: AtomicWarehouse | _Transaction, rows: DataFrame, table: str, keys: list[str]
+) -> int:
+    """INSERT OR IGNORE analog: append only keys absent from target;
+    returns the rows appended. The anti-join reads the committed data
+    dirs and the append stages a fresh one, so nothing reads what it
+    writes, and an empty result stages no dir."""
     if wh.exists(table):
-        rows = anti_join_new_rows(rows, wh.read(table), keys).persist()
-        try:
-            if rows.count():
-                wh.append(rows, table)
-        finally:
-            rows.unpersist()
-    else:
-        wh.overwrite(rows, table)
+        return wh.append(anti_join_new_rows(rows, wh.read(table), keys), table)
+    return wh.overwrite(rows, table)
 

@@ -21,12 +21,12 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .atomic import AtomicWarehouse
 from .medallion import (
     BRONZE_TX,
     SILVER_CP,
     SILVER_ME,
     SILVER_TX,
-    Warehouse,
     MERCHANT_ORDER,
     _MERCHANT_COLS,
     _merge_append,
@@ -136,9 +136,10 @@ def _silver_script(inserted_at: str) -> str:
     """
 
 
-def transform_silver_sql(wh: Warehouse, inserted_at: str) -> None:
-    """A15-A18 through the §3.2 SQL front end; writes the same
-    INSERT-OR-IGNORE merge as the DataFrame path."""
+def transform_silver_sql(wh: AtomicWarehouse, inserted_at: str) -> None:
+    """A15-A18 through the §3.2 SQL front end, recomputed from all of
+    bronze; writes the same INSERT-OR-IGNORE merge as the DataFrame
+    path, one commit per silver table."""
     spark = wh.spark
     wh.read(BRONZE_TX).createOrReplaceTempView("bronze_tx")
     execute_sql_script(spark, _silver_script(inserted_at))

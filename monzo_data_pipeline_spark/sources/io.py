@@ -111,55 +111,6 @@ def write_table(
     writer.save(path)
 
 
-def compact_table(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType,
-    target_file_bytes: int = 256 * 1024 * 1024,
-    fmt: str = "parquet",
-) -> dict[str, int]:
-    """Small-file compaction: rewrite a table directory into
-    ~target_file_bytes files.
-
-    Streaming/incremental sinks accumulate thousands of small files
-    (one+ per micro-batch); at 100 TB the file LISTING alone becomes a
-    driver bottleneck and tiny row groups defeat the vectorized
-    reader. Standard maintenance: size the output file count from the
-    on-disk bytes, rewrite, swap. (Table formats do this as OPTIMIZE /
-    rewrite_data_files; on plain parquet directories the swap is the
-    non-atomic step — at scale, compact per PARTITION directory so the
-    window is one partition, or use a table format.)
-
-    Returns {"files_before", "files_after", "bytes"}.
-    """
-    import math
-    import os
-    import shutil
-
-    def dir_stats(p: str) -> tuple[int, int]:
-        n, b = 0, 0
-        for root, _dirs, files in os.walk(p):
-            for f in files:
-                if not f.startswith(("_", ".")):
-                    n += 1
-                    b += os.path.getsize(os.path.join(root, f))
-        return n, b
-
-    files_before, total_bytes = dir_stats(path)
-    n_out = max(1, math.ceil(total_bytes / target_file_bytes))
-    compacted = spark.read.schema(schema).format(fmt).load(path).repartition(n_out)
-    tmp = path.rstrip("/") + "__compacting"
-    compacted.write.mode("overwrite").format(fmt).save(tmp)
-    shutil.rmtree(path)
-    os.rename(tmp, path)
-    files_after, _ = dir_stats(path)
-    return {
-        "files_before": files_before,
-        "files_after": files_after,
-        "bytes": total_bytes,
-    }
-
-
 def read_with_schema_merge(
     spark: SparkSession, path: str, fmt: str = "parquet"
 ) -> DataFrame:

@@ -21,18 +21,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from ..pipeline.atomic import AtomicWarehouse
-from ..pipeline.medallion import Warehouse, load_bronze
+from ..pipeline.medallion import load_bronze
 from ..session import local_frame
 
 
 def stream_wire_to_bronze(
     wire_stream: DataFrame,
-    wh: Warehouse,
+    wh: AtomicWarehouse,
     ingest_ts: str,
     checkpoint_dir: str,
 ):
-    """Stream wire-format transaction batches into bronze. Returns the
-    started StreamingQuery (caller awaits termination)."""
+    """Stream wire-format transaction batches into bronze, one commit
+    per micro-batch. Returns the started StreamingQuery (caller awaits
+    termination)."""
     from ..pipeline.ingest import flatten_bronze
 
     def merge_batch(batch_df: DataFrame, epoch_id: int) -> None:

@@ -93,6 +93,45 @@ def py4j_calls():
     return run
 
 
+class PlainDirStore:
+    """The reference table store: one plain parquet directory per
+    table, every write visible as it lands, no manifest and no
+    transaction. It shares no code with `atomic.AtomicWarehouse`, and
+    its writes return the rows they wrote counted by a Spark job, not
+    read off parquet footers. The medallion stages run on it
+    unchanged."""
+
+    def __init__(self, spark, root: str):
+        self.spark = spark
+        self.root = root
+
+    def _path(self, table: str) -> str:
+        return os.path.join(self.root, table)
+
+    def exists(self, table: str) -> bool:
+        return os.path.exists(self._path(table))
+
+    def read(self, table: str):
+        return self.spark.read.parquet(self._path(table))
+
+    def overwrite(self, df, table: str) -> int:
+        n = df.count()
+        df.write.mode("overwrite").parquet(self._path(table))
+        return n
+
+    def append(self, df, table: str) -> int:
+        n = df.count()
+        if n:
+            df.write.mode("append").parquet(self._path(table))
+        return n
+
+
+@pytest.fixture(scope="session")
+def plain_store(spark):
+    """``plain_store(root)`` opens a `PlainDirStore` at ``root``."""
+    return lambda root: PlainDirStore(spark, root)
+
+
 @pytest.fixture(scope="session")
 def exact_gold():
     """``exact_gold(silver)`` recomputes gold_monthly_spending from all

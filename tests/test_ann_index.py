@@ -10,12 +10,12 @@ from monzo_data_pipeline_spark.ext.ann_index import (
     build_ivf_index,
     search_ivf_index,
 )
-from monzo_data_pipeline_spark.pipeline.medallion import Warehouse
+from monzo_data_pipeline_spark.pipeline.atomic import AtomicWarehouse
 
 
 def test_index_search_equals_fresh_path(spark, sf_dir, tmp_path):
     emb = load_table(spark, sf_dir, "embeddings")
-    wh = Warehouse(spark, str(tmp_path / "wh"))
+    wh = AtomicWarehouse(spark, str(tmp_path / "wh"))
     build_ivf_index(wh, emb)
     for qid in (0, 7, 123):
         got = search_ivf_index(spark, wh, query_id=qid, k=5)
@@ -32,7 +32,7 @@ def test_index_search_prunes_partitions(spark, sf_dir, tmp_path):
     rows (via the post-scan count of distinct input files) stay
     bounded by the probed cell."""
     emb = load_table(spark, sf_dir, "embeddings")
-    wh = Warehouse(spark, str(tmp_path / "wh"))
+    wh = AtomicWarehouse(spark, str(tmp_path / "wh"))
     build_ivf_index(wh, emb)
     got = search_ivf_index(spark, wh, query_id=0, k=5)
     plan = got._jdf.queryExecution().executedPlan().toString()
@@ -40,7 +40,7 @@ def test_index_search_prunes_partitions(spark, sf_dir, tmp_path):
 
     # physical proof: rows scanned under the query-cell filter == the
     # cell's membership, far below the table
-    assigned = spark.read.parquet(wh.path("ivf_index"))
+    assigned = wh.read("ivf_index")
     q_cell = (
         assigned.filter(F.col("vec_id") == 0).select("cell").collect()[0][0]
     )
@@ -57,12 +57,12 @@ def test_index_search_prunes_partitions(spark, sf_dir, tmp_path):
 
 
 def test_index_is_an_artifact_not_a_subplan(spark, sf_dir, tmp_path):
-    """A second Warehouse handle (fresh session state) searches the
+    """A second warehouse handle (fresh session state) searches the
     same files — the index survives the builder's lineage."""
     emb = load_table(spark, sf_dir, "embeddings")
     root = str(tmp_path / "wh")
-    build_ivf_index(Warehouse(spark, root), emb)
-    wh2 = Warehouse(spark, root)
+    build_ivf_index(AtomicWarehouse(spark, root), emb)
+    wh2 = AtomicWarehouse(spark, root)
     got = search_ivf_index(spark, wh2, query_id=42, k=3)
     want = SIM.ivf_topk(emb, query_id=42, n_centroids=16, k=3)
     assert [tuple(r) for r in got.collect()] == [
@@ -76,7 +76,7 @@ def test_multiprobe_index_search_equals_fresh_path(spark, sf_dir, tmp_path):
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    wh = Warehouse(spark, str(tmp_path / "wh"))
+    wh = AtomicWarehouse(spark, str(tmp_path / "wh"))
     build_ivf_index(wh, emb)
     for qid, probes in ((0, 3), (57, 1), (200, 5)):
         got = search_ivf_index_multiprobe(
@@ -112,7 +112,7 @@ def test_multiprobe_reads_n_centroids_from_index_metadata(
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    wh = Warehouse(spark, str(tmp_path / "wh"))
+    wh = AtomicWarehouse(spark, str(tmp_path / "wh"))
     build_ivf_index(wh, emb, n_centroids=8)
     got = search_ivf_index_multiprobe(
         spark, wh, query_id=3, k=4, n_probe=2
@@ -150,7 +150,7 @@ def test_ivfpq_search_equals_pq_rerank_on_probed_cells(
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    wh = Warehouse(spark, str(tmp_path / "wh"))
+    wh = AtomicWarehouse(spark, str(tmp_path / "wh"))
     build_ivfpq_index(wh, emb, n_centroids=16, m=8, ksub=8, iters=2)
 
     for qid, n_probe in ((0, 3), (57, 1), (123, 2)):
@@ -211,14 +211,28 @@ def test_ivfpq_search_prunes_partitions(spark, sf_dir, tmp_path):
         search_ivfpq_index,
     )
 
+    from monzo_data_pipeline_spark.ext.ann_index import append_ivfpq_index
+
     emb = load_table(spark, sf_dir, "embeddings")
-    wh = Warehouse(spark, str(tmp_path / "wh"))
+    wh = AtomicWarehouse(spark, str(tmp_path / "wh"))
     build_ivfpq_index(wh, emb)
     got = search_ivfpq_index(spark, wh, query_id=0, k=10, n_probe=3)
     plan = got._jdf.queryExecution().executedPlan().toString()
     assert "dynamicpruning" in plan.lower()
 
-    index = spark.read.parquet(wh.path("ivfpq_index"))
+    # build + append: two cell-partitioned data dirs, read back as one
+    # table, and the probe still prunes both scans
+    wh2 = AtomicWarehouse(spark, str(tmp_path / "wh2"))
+    build_ivfpq_index(wh2, emb.filter(F.col("vec_id") % 2 == 0))
+    append_ivfpq_index(wh2, emb.filter(F.col("vec_id") % 2 == 1))
+    assert len(wh2.manifest()["tables"]["ivfpq_index"]) == 2
+    assert wh2.read("ivfpq_index").count() == wh2.rows("ivfpq_index") == emb.count()
+    got2 = search_ivfpq_index(spark, wh2, query_id=1, k=10, n_probe=3)
+    assert got2.count() == 10
+    plan2 = got2._jdf.queryExecution().executedPlan().toString()
+    assert "dynamicpruning" in plan2.lower()
+
+    index = wh.read("ivfpq_index")
     probed = (
         index.filter(F.col("vec_id").isin([r.vec_id for r in got.collect()]))
         .select("cell")
@@ -240,7 +254,8 @@ def test_ivfpq_search_prunes_partitions(spark, sf_dir, tmp_path):
 def test_ivfpq_index_carries_codes_and_metadata(spark, sf_dir, tmp_path):
     """The artifact is self-describing: codes length == meta.m, code
     values < meta.ksub, codebook has m*ksub rows, and a fresh
-    Warehouse handle (no builder lineage) can search it."""
+    warehouse handle (no builder lineage) can search it; the
+    manifest's row count of the partitioned index is exact."""
     from monzo_data_pipeline_spark.ext.ann_index import (
         build_ivfpq_index,
         search_ivfpq_index,
@@ -249,14 +264,15 @@ def test_ivfpq_index_carries_codes_and_metadata(spark, sf_dir, tmp_path):
     emb = load_table(spark, sf_dir, "embeddings")
     root = str(tmp_path / "wh")
     build_ivfpq_index(
-        Warehouse(spark, root), emb, n_centroids=8, m=4, ksub=16, iters=1
+        AtomicWarehouse(spark, root), emb, n_centroids=8, m=4, ksub=16, iters=1
     )
-    wh2 = Warehouse(spark, root)
-    meta = spark.read.parquet(wh2.path("ivfpq_index__meta")).head()
+    wh2 = AtomicWarehouse(spark, root)
+    meta = wh2.read("ivfpq_index__meta").head()
     assert (meta.n_centroids, meta.m, meta.ksub) == (8, 4, 16)
-    cb = spark.read.parquet(wh2.path("ivfpq_index__codebook"))
+    cb = wh2.read("ivfpq_index__codebook")
     assert cb.count() == 4 * 16
-    index = spark.read.parquet(wh2.path("ivfpq_index"))
+    index = wh2.read("ivfpq_index")
+    assert wh2.rows("ivfpq_index") == emb.count()
     bad = index.filter(
         (F.size("codes") != 4)
         | F.exists("codes", lambda c: (c < 0) | (c >= 16))
@@ -290,22 +306,21 @@ def test_ivfpq_append_equals_frozen_quantizer_build(
     half_b = emb.filter(F.col("vec_id") % 2 == 1)
 
     root = str(tmp_path / "wh_inc")
-    wh = Warehouse(spark, root)
+    wh = AtomicWarehouse(spark, root)
     build_ivfpq_index(wh, half_a, n_centroids=8, m=8, ksub=8, iters=1)
 
-    files_before = {
-        (f, os.stat(os.path.join(dp, f)).st_ino)
-        for dp, _, fs in os.walk(wh.path("ivfpq_index"))
-        for f in fs
-        if f.endswith(".parquet")
-    }
+    def index_files():
+        return {
+            (f, os.stat(os.path.join(dp, f)).st_ino)
+            for rel in wh.manifest()["tables"]["ivfpq_index"]
+            for dp, _, fs in os.walk(wh._abs(rel))
+            for f in fs
+            if f.endswith(".parquet")
+        }
+
+    files_before = index_files()
     append_ivfpq_index(wh, half_b)
-    files_after = {
-        (f, os.stat(os.path.join(dp, f)).st_ino)
-        for dp, _, fs in os.walk(wh.path("ivfpq_index"))
-        for f in fs
-        if f.endswith(".parquet")
-    }
+    files_after = index_files()
     assert files_before < files_after  # strictly grew, nothing replaced
 
     # reference: A's quantizers, A∪B rows, in one build — emulate by
@@ -314,9 +329,7 @@ def test_ivfpq_append_equals_frozen_quantizer_build(
     # A's artifacts
     from monzo_data_pipeline_spark.ext import similarity as SIM
 
-    cb_rows = spark.read.parquet(
-        wh.path("ivfpq_index__codebook")
-    ).collect()
+    cb_rows = wh.read("ivfpq_index__codebook").collect()
     cbs = [
         (int(r["sub"]), int(r["cell"]), list(r["centroid"]))
         for r in cb_rows
@@ -325,14 +338,15 @@ def test_ivfpq_append_equals_frozen_quantizer_build(
     want_assigned = SIM.ivf_assign(emb, centroids)
     want_codes = SIM.pq_encode(emb, cbs)
     root2 = str(tmp_path / "wh_ref")
-    wh2 = Warehouse(spark, root2)
+    wh2 = AtomicWarehouse(spark, root2)
+    src = str(tmp_path / "ref_cells")
     want_assigned.join(want_codes, "vec_id").write.partitionBy(
         "cell"
-    ).parquet(wh2.path("ivfpq_index"))
-    for aux in ("__meta", "__codebook"):
-        spark.read.parquet(wh.path("ivfpq_index" + aux)).write.parquet(
-            wh2.path("ivfpq_index" + aux)
-        )
+    ).parquet(src)
+    with wh2.transaction() as txn:
+        txn.append_parquet_dir(src, "ivfpq_index")
+        for aux in ("__meta", "__codebook"):
+            txn.overwrite(wh.read("ivfpq_index" + aux), "ivfpq_index" + aux)
 
     for qid in (1, 57, 123):  # odd ids live in the appended half
         got = search_ivfpq_index(
@@ -345,3 +359,51 @@ def test_ivfpq_append_equals_frozen_quantizer_build(
 
     with pytest.raises(ValueError, match="already in the index"):
         append_ivfpq_index(wh, half_b.limit(3))
+
+
+def test_failed_index_rebuild_leaves_the_previous_index(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """An index, its codebook and its metadata commit together: a
+    rebuild with another n_centroids that fails at the metadata write
+    leaves the first build searchable, unchanged — never an index whose
+    metadata describes another build (searches read K from it)."""
+    import pytest
+
+    from monzo_data_pipeline_spark.ext.ann_index import (
+        build_ivfpq_index,
+        search_ivf_index_multiprobe,
+        search_ivfpq_index,
+    )
+    from monzo_data_pipeline_spark.pipeline import atomic as A
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    wh = AtomicWarehouse(spark, str(tmp_path / "wh"))
+    build_ivf_index(wh, emb, n_centroids=16)
+    build_ivfpq_index(wh, emb, n_centroids=16, m=8, ksub=8, iters=1)
+
+    def searches():
+        return (
+            [tuple(r) for r in search_ivf_index_multiprobe(
+                spark, wh, query_id=7, k=5, n_probe=2
+            ).collect()],
+            [tuple(r) for r in search_ivfpq_index(
+                spark, wh, query_id=7, k=5, n_probe=2
+            ).collect()],
+        )
+
+    first = searches()
+    real_overwrite = A._Transaction.overwrite
+
+    def failing_meta(self, df, table):
+        if table.endswith("__meta"):
+            raise RuntimeError("meta write failed")
+        return real_overwrite(self, df, table)
+
+    with monkeypatch.context() as m:
+        m.setattr(A._Transaction, "overwrite", failing_meta)
+        with pytest.raises(RuntimeError):
+            build_ivf_index(wh, emb, n_centroids=8)
+        with pytest.raises(RuntimeError):
+            build_ivfpq_index(wh, emb, n_centroids=8, m=8, ksub=8, iters=1)
+    assert searches() == first

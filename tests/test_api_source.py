@@ -72,9 +72,10 @@ def test_source_feeds_bronze_merge(spark, tmp_path):
     connector slots into the same medallion path as mapInPandas
     ingestion."""
     from monzo_data_pipeline_spark.pipeline import medallion as MED
+    from monzo_data_pipeline_spark.pipeline.atomic import AtomicWarehouse
     from monzo_data_pipeline_spark.schemas import BRONZE_TRANSACTIONS_SCHEMA
 
-    wh = MED.Warehouse(spark, str(tmp_path / "wh"))
+    wh = AtomicWarehouse(spark, str(tmp_path / "wh"))
     flat = _read(
         spark,
         since="2025-02-01T00:00:00",
@@ -99,9 +100,10 @@ def test_streaming_source_cursor_advances_and_feeds_bronze(spark, tmp_path):
     window; caught-up source emits empty batches (processAllAvailable
     returns); rows land in bronze via the same idempotent merge."""
     from monzo_data_pipeline_spark.pipeline import medallion as MED
+    from monzo_data_pipeline_spark.pipeline.atomic import AtomicWarehouse
     from monzo_data_pipeline_spark.schemas import BRONZE_TRANSACTIONS_SCHEMA
 
-    wh = MED.Warehouse(spark, str(tmp_path / "wh_stream"))
+    wh = AtomicWarehouse(spark, str(tmp_path / "wh_stream"))
 
     stream = (
         spark.readStream.format("monzo_api")

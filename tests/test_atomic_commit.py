@@ -156,25 +156,38 @@ def test_full_pipeline_one_commit(wh, spark):
 
 
 def test_atomic_erasure_one_commit_all_tables(wh, spark):
-    from monzo_data_pipeline_spark.pipeline.erasure import erase_keys_atomic
+    from monzo_data_pipeline_spark.pipeline.erasure import erase_keys
 
     with wh.transaction() as txn:
         txn.overwrite(
             spark.createDataFrame(
                 [(1, "a"), (2, "b"), (3, "c")], "user_id bigint, v string"
-            ),
+            ).coalesce(1),
             "t1",
         )
         txn.overwrite(
-            spark.createDataFrame([(2, 20), (4, 40)], "user_id bigint, x bigint"),
+            spark.createDataFrame(
+                [(2, 20), (4, 40)], "user_id bigint, x bigint"
+            ).coalesce(1),
             "t2",
         )
         txn.overwrite(
             spark.createDataFrame([(9,)], "other bigint"), "t3"
         )
     ids = spark.createDataFrame([(2,)], "user_id bigint")
-    report = erase_keys_atomic(wh, ids, "user_id", ["t1", "t2", "t3", "t_missing"])
-    assert report == {"t1": 1, "t2": 1, "t3": -1}
+    report = erase_keys(wh, ids, "user_id", ["t1", "t2", "t3", "t_missing"])
+    one = {"dirs_total": 1, "dirs_rewritten": 1, "files_total": 1, "files_rewritten": 1}
+    assert report == {
+        "t1": {"rows_removed": 1} | one,
+        "t2": {"rows_removed": 1} | one,
+        "t3": {
+            "rows_removed": -1,
+            "dirs_total": 0,
+            "dirs_rewritten": 0,
+            "files_total": 0,
+            "files_rewritten": 0,
+        },
+    }
     assert wh.manifest()["version"] == 2  # ONE commit for the whole erasure
     assert sorted(r.user_id for r in wh.read("t1").collect()) == [1, 3]
     assert sorted(r.user_id for r in wh.read("t2").collect()) == [4]
@@ -253,7 +266,7 @@ def test_erase_keys_atomic_pruned_one_commit_clean_dirs_untouched(spark, tmp_pat
     import os
 
     from monzo_data_pipeline_spark.pipeline.atomic import AtomicWarehouse
-    from monzo_data_pipeline_spark.pipeline.erasure import erase_keys_atomic_pruned
+    from monzo_data_pipeline_spark.pipeline.erasure import erase_keys
 
     wh = AtomicWarehouse(spark, str(tmp_path))
     for lo in (0, 1000, 2000):
@@ -261,7 +274,7 @@ def test_erase_keys_atomic_pruned_one_commit_clean_dirs_untouched(spark, tmp_pat
             spark.createDataFrame(
                 [(lo + i, f"p{lo + i}") for i in range(100)],
                 "user_id bigint, payload string",
-            ),
+            ).coalesce(1),
             "tx",
         )
     wh.overwrite(
@@ -281,9 +294,15 @@ def test_erase_keys_atomic_pruned_one_commit_clean_dirs_untouched(spark, tmp_pat
 
     before = {d: dir_bytes(d) for d in clean_dirs}
     ids = spark.createDataFrame([(5,)], "user_id bigint")
-    report = erase_keys_atomic_pruned(wh, ids, "user_id", ["tx", "scores"])
+    report = erase_keys(wh, ids, "user_id", ["tx", "scores"])
 
-    assert report["tx"] == {"rows_removed": 1, "dirs_total": 3, "dirs_rewritten": 1}
+    assert report["tx"] == {
+        "rows_removed": 1,
+        "dirs_total": 3,
+        "dirs_rewritten": 1,
+        "files_total": 3,
+        "files_rewritten": 1,
+    }
     assert report["scores"]["rows_removed"] == 1
     # ONE commit for both tables
     assert wh.manifest()["version"] == v_before + 1
@@ -356,7 +375,7 @@ def test_table_changes_cdf_between_versions(spark, tmp_path):
         AtomicWarehouse,
         table_changes,
     )
-    from monzo_data_pipeline_spark.pipeline.erasure import erase_keys_atomic_pruned
+    from monzo_data_pipeline_spark.pipeline.erasure import erase_keys
 
     wh = AtomicWarehouse(spark, str(tmp_path))
     wh.overwrite(
@@ -372,7 +391,7 @@ def test_table_changes_cdf_between_versions(spark, tmp_path):
     assert {(r.k, r._change_type) for r in ch} == {(10, "insert"), (11, "insert"), (12, "insert")}
 
     # v2 -> current after an erasure: one delete
-    erase_keys_atomic_pruned(
+    erase_keys(
         wh, spark.createDataFrame([(2,)], "k bigint"), "k", ["t"]
     )  # v3
     ch2 = table_changes(wh, "t", 2).collect()
@@ -583,6 +602,39 @@ def test_bloom_prunes_where_minmax_cannot(spark, tmp_path):
     assert any(c in dirs for c in cand2)
 
 
+def test_erase_keys_prunes_dirs_by_bloom_and_runs_no_count_job(spark, tmp_path, jobs_in):
+    """erase_keys prunes dirs with `pruned_dirs`' predicate, Bloom
+    filter included: on the interleaved evens/odds dirs min/max
+    prunes nothing, the Bloom filter leaves only the evens dir to
+    rewrite. Its counts come from footers, so it runs no count job:
+    the erase-set collect, two parquet schema reads and the rewrite
+    with its broadcast (2)."""
+    from monzo_data_pipeline_spark.pipeline.erasure import erase_keys
+
+    wh = AtomicWarehouse(
+        spark, str(tmp_path / "whb"), bloom_cols={"tx": ["user_id"]}
+    )
+    with wh.transaction() as txn:
+        txn.append(_udf_df(spark, range(0, 200, 2)), "tx")
+    with wh.transaction() as txn:
+        txn.append(_udf_df(spark, range(1, 200, 2)), "tx")
+    evens, odds = wh.manifest()["tables"]["tx"]
+    ids = _df(spark, [42], "user_id")
+    report, jobs = jobs_in(
+        "erase-one-table", lambda: erase_keys(wh, ids, "user_id", ["tx"])
+    )
+    assert report["tx"]["dirs_rewritten"] == 1
+    assert report["tx"]["rows_removed"] == 1
+    now = wh.manifest()["tables"]["tx"]
+    assert odds in now and evens not in now
+    assert wh.rows("tx") == wh.read("tx").count() == 199
+    assert wh.read("tx").filter("user_id = 42").count() == 0
+    store = spark.sparkContext._jsc.sc().statusStore()
+    names = [store.job(j).name() for j in jobs]
+    assert not any(n.startswith("count") for n in names), names
+    assert len(jobs) == 5, names
+
+
 def test_bloom_never_false_negative_randomized(spark, tmp_path):
     import random
 
@@ -673,7 +725,7 @@ def test_manifest_row_counts_match_reads(spark, tmp_path):
     import pyarrow.parquet as pq
 
     from monzo_data_pipeline_spark.pipeline.atomic import compact_table
-    from monzo_data_pipeline_spark.pipeline.erasure import erase_keys_atomic
+    from monzo_data_pipeline_spark.pipeline.erasure import erase_keys
 
     wh = AtomicWarehouse(spark, str(tmp_path / "wh"))
 
@@ -697,7 +749,7 @@ def test_manifest_row_counts_match_reads(spark, tmp_path):
     check("t")
     compact_table(wh, "t")
     check("t")
-    erase_keys_atomic(wh, _df(spark, [3, 11, 101], "user_id"), "user_id", ["t", "o"])
+    erase_keys(wh, _df(spark, [3, 11, 101], "user_id"), "user_id", ["t", "o"])
     check("t")
     check("o")
     assert wh.rows("t") == 15 + 1 + 4 - 2

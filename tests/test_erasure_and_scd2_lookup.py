@@ -7,8 +7,12 @@ from datetime import datetime
 from pyspark.sql import functions as F
 
 from monzo_data_pipeline_spark.operators import behavioral as BH
+from monzo_data_pipeline_spark.pipeline.atomic import AtomicWarehouse
 from monzo_data_pipeline_spark.pipeline.erasure import erase_keys
-from monzo_data_pipeline_spark.pipeline.medallion import Warehouse
+
+
+def _data_dirs(wh, table):
+    return [wh._abs(rel) for rel in wh.manifest()["tables"][table]]
 
 
 def test_scd2_lookup_interval_semantics(spark):
@@ -37,13 +41,13 @@ def test_scd2_lookup_interval_semantics(spark):
 
 
 def test_erase_keys_across_tables(spark, tmp_path):
-    wh = Warehouse(spark, str(tmp_path))
+    wh = AtomicWarehouse(spark, str(tmp_path))
     tx = spark.createDataFrame(
         [(1, "a"), (2, "b"), (3, "c")], "user_id bigint, payload string"
-    )
+    ).coalesce(1)
     docs = spark.createDataFrame(
         [(2, "doc-two"), (4, "doc-four")], "user_id bigint, text string"
-    )
+    ).coalesce(1)
     nokey = spark.createDataFrame([(9, "x")], "other_id bigint, v string")
     wh.overwrite(tx, "tx")
     wh.overwrite(docs, "docs")
@@ -52,18 +56,34 @@ def test_erase_keys_across_tables(spark, tmp_path):
     ids = spark.createDataFrame([(2,), (3,)], "user_id bigint")
     report = erase_keys(wh, ids, "user_id", ["tx", "docs", "nokey", "absent"])
 
-    assert report == {"tx": 2, "docs": 1, "nokey": -1}
+    one_file = {"dirs_total": 1, "dirs_rewritten": 1, "files_total": 1, "files_rewritten": 1}
+    assert report == {
+        "tx": {"rows_removed": 2} | one_file,
+        "docs": {"rows_removed": 1} | one_file,
+        "nokey": {
+            "rows_removed": -1,
+            "dirs_total": 0,
+            "dirs_rewritten": 0,
+            "files_total": 0,
+            "files_rewritten": 0,
+        },
+    }
     assert {r.user_id for r in wh.read("tx").collect()} == {1}
     assert {r.user_id for r in wh.read("docs").collect()} == {4}
     assert wh.read("nokey").count() == 1  # untouched
 
-    # idempotent: a second run removes nothing
+    # idempotent: a second run removes nothing, and the manifest stats
+    # of the rewritten dirs prune it to no rewrite at all
     again = erase_keys(wh, ids, "user_id", ["tx", "docs"])
-    assert again == {"tx": 0, "docs": 0}
+    untouched = {"dirs_total": 1, "dirs_rewritten": 0, "files_total": 1, "files_rewritten": 0}
+    assert again == {
+        "tx": {"rows_removed": 0} | untouched,
+        "docs": {"rows_removed": 0} | untouched,
+    }
 
 
 def test_erase_keys_preserves_schema_and_other_rows(spark, tmp_path):
-    wh = Warehouse(spark, str(tmp_path))
+    wh = AtomicWarehouse(spark, str(tmp_path))
     df = spark.createDataFrame(
         [(i, float(i) * 1.5, f"p{i}") for i in range(10)],
         "user_id bigint, score double, payload string",
@@ -96,32 +116,32 @@ def test_pseudonymize_consistent_salted_and_null_safe(spark):
 
 
 def test_erase_keys_pruned_keeps_clean_files_byte_identical(spark, tmp_path):
-    """Stat pruning: files whose min/max provably exclude every erase
-    key are hardlinked, not re-encoded — byte-identical after the run;
-    only the hit files rewrite; result matches wholesale erase_keys."""
+    """Stat pruning inside a data dir: files whose footer min/max
+    provably exclude every erase key are hardlinked into the rewritten
+    dir, not re-encoded — byte-identical after the run; only the hit
+    files rewrite; the result is the plain anti-join's."""
     import hashlib
     import os
 
-    from monzo_data_pipeline_spark.pipeline.erasure import erase_keys_pruned
-
-    wh = Warehouse(spark, str(tmp_path))
+    wh = AtomicWarehouse(spark, str(tmp_path))
     df = spark.createDataFrame(
         [(i, f"p{i}") for i in range(1000)], "user_id bigint, payload string"
     )
     # range layout → disjoint per-file key ranges → prunable stats
     laid_out = df.repartitionByRange(8, "user_id").sortWithinPartitions("user_id")
-    laid_out.write.mode("overwrite").parquet(wh.path("tx"))
+    wh.overwrite(laid_out, "tx")
 
     def file_hashes():
         return {
-            n: hashlib.md5(open(os.path.join(wh.path("tx"), n), "rb").read()).hexdigest()
-            for n in os.listdir(wh.path("tx"))
+            n: hashlib.md5(open(os.path.join(d, n), "rb").read()).hexdigest()
+            for d in _data_dirs(wh, "tx")
+            for n in os.listdir(d)
             if n.endswith(".parquet")
         }
 
     before = file_hashes()
     ids = spark.createDataFrame([(3,), (7,)], "user_id bigint")  # one range
-    report = erase_keys_pruned(wh, ids, "user_id", ["tx"])
+    report = erase_keys(wh, ids, "user_id", ["tx"])
 
     assert report["tx"]["rows_removed"] == 2
     assert report["tx"]["files_total"] == len(before)
@@ -139,22 +159,20 @@ def test_erase_keys_pruned_keeps_clean_files_byte_identical(spark, tmp_path):
     # idempotent re-run: min/max can't prove INTERIOR absence, so the
     # one straddling file rewrites again (removing nothing) — but the
     # clean files still never rewrite
-    again = erase_keys_pruned(wh, ids, "user_id", ["tx"])
+    again = erase_keys(wh, ids, "user_id", ["tx"])
     assert again["tx"]["files_rewritten"] <= 1 and again["tx"]["rows_removed"] == 0
     final = file_hashes()
     assert all(after[n] == final[n] for n in set(after) & set(final) & carried)
 
     # keys outside every file's range prune to zero work
     off_range = spark.createDataFrame([(10_000,)], "user_id bigint")
-    noop = erase_keys_pruned(wh, off_range, "user_id", ["tx"])
+    noop = erase_keys(wh, off_range, "user_id", ["tx"])
     assert noop["tx"]["files_rewritten"] == 0 and noop["tx"]["rows_removed"] == 0
     assert file_hashes() == final
 
 
 def test_erase_keys_pruned_matches_wholesale_and_handles_missing_key(spark, tmp_path):
-    from monzo_data_pipeline_spark.pipeline.erasure import erase_keys_pruned
-
-    wh = Warehouse(spark, str(tmp_path))
+    wh = AtomicWarehouse(spark, str(tmp_path))
     wh.overwrite(
         spark.createDataFrame(
             [(i % 5, float(i)) for i in range(50)], "user_id bigint, v double"
@@ -163,7 +181,7 @@ def test_erase_keys_pruned_matches_wholesale_and_handles_missing_key(spark, tmp_
     )
     wh.overwrite(spark.createDataFrame([(9, "x")], "other_id bigint, v string"), "nokey")
     ids = spark.createDataFrame([(1,), (4,)], "user_id bigint")
-    report = erase_keys_pruned(wh, ids, "user_id", ["t", "nokey", "absent"])
+    report = erase_keys(wh, ids, "user_id", ["t", "nokey", "absent"])
     assert report["t"]["rows_removed"] == 20
     assert report["nokey"]["rows_removed"] == -1
     assert {r.user_id for r in wh.read("t").collect()} == {0, 2, 3}
@@ -204,14 +222,11 @@ def test_k_anonymity_and_l_diversity_audits(spark):
 def test_erase_keys_pruned_tolerates_null_and_mixed_keys(spark, tmp_path):
     """A NULL in the erase-id set (or a key type incomparable with the
     column's footer stats) must degrade to the never-assume-exclusion
-    posture — plain erase_keys already tolerates nulls via the
-    anti-join, so the pruned variant must match it, not crash."""
-    from monzo_data_pipeline_spark.pipeline.erasure import (
-        _files_that_may_contain,
-        erase_keys_pruned,
-    )
+    posture — the anti-join matches no NULL, so the pruning must not
+    crash on one either."""
+    from monzo_data_pipeline_spark.pipeline.erasure import _files_that_may_contain
 
-    wh = Warehouse(spark, str(tmp_path))
+    wh = AtomicWarehouse(spark, str(tmp_path))
     wh.overwrite(
         spark.createDataFrame(
             [(i, f"p{i}") for i in range(20)], "user_id bigint, payload string"
@@ -222,7 +237,7 @@ def test_erase_keys_pruned_tolerates_null_and_mixed_keys(spark, tmp_path):
     ids = spark.createDataFrame(
         [(3,), (None,), (17,)], "user_id bigint"
     )
-    report = erase_keys_pruned(wh, ids, "user_id", ["tx"])
+    report = erase_keys(wh, ids, "user_id", ["tx"])
     assert report["tx"]["rows_removed"] == 2
     left = sorted(r.user_id for r in wh.read("tx").collect())
     assert 3 not in left and 17 not in left and len(left) == 18
@@ -236,7 +251,7 @@ def test_erase_keys_pruned_tolerates_null_and_mixed_keys(spark, tmp_path):
         ).coalesce(1),
         "tx2",
     )
-    path = wh.path("tx2")
+    (path,) = _data_dirs(wh, "tx2")
     cand, clean = _files_that_may_contain(path, "user_id", [None, 9999999])
     assert cand == [] and len(clean) == 1
     # ...and an in-range key still marks it a candidate despite the None

@@ -1,5 +1,5 @@
-"""Erasure × layout interaction: erase_keys_pruned(preserve_layout=
-True) on a Z-ordered table must keep the PHYSICAL per-file clustering
+"""Erasure × layout interaction: erase_keys(preserve_layout=True) on a
+Z-ordered table must keep the PHYSICAL per-file clustering
 — every surviving file's value rectangle stays inside the rectangle
 of the file it replaced (so parquet min/max skipping keeps working on
 both Z-order dimensions), clean files are carried over byte-identical,
@@ -11,20 +11,27 @@ and silently destroys their clustering."""
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import functions as F
 
 from monzo_data_pipeline_spark.catalog import load_table
+from monzo_data_pipeline_spark.pipeline.atomic import AtomicWarehouse
 from monzo_data_pipeline_spark.pipeline.erasure import (
     _files_that_may_contain,
-    erase_keys_pruned,
+    erase_keys,
 )
-from monzo_data_pipeline_spark.pipeline.medallion import Warehouse
 from monzo_data_pipeline_spark.sources.io import write_zordered
 
 
-def _per_file_rects(spark, path):
-    df = spark.read.parquet(path).select(
+def _table_dir(wh, table):
+    """The table's one data dir."""
+    (rel,) = wh.manifest()["tables"][table]
+    return wh._abs(rel)
+
+
+def _per_file_rects(wh, table):
+    df = wh.read(table).select(
         F.col("_metadata.file_path").alias("fp"), "o_custkey", "pc"
     )
     out = {}
@@ -52,11 +59,15 @@ def test_preserve_layout_erasure_keeps_per_file_rectangles(
             "pc"
         ),
     )
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    table_path = wh.path("orders_z")
-    write_zordered(o, table_path, "o_custkey", "pc", n_files=8)
+    wh = AtomicWarehouse(spark, str(tmp_path / "wh"))
+    src = str(tmp_path / "zordered")
+    write_zordered(o, src, "o_custkey", "pc", n_files=8)
+    with wh.transaction() as txn:
+        txn.append_parquet_dir(src, "orders_z", link=True)
+    shutil.rmtree(src)
+    table_path = _table_dir(wh, "orders_z")
 
-    before = _per_file_rects(spark, table_path)
+    before = _per_file_rects(wh, "orders_z")
     assert len(before) >= 4  # a real multi-file layout
 
     key_vals = [
@@ -78,7 +89,7 @@ def test_preserve_layout_erasure_keeps_per_file_rectangles(
     ids = spark.createDataFrame(
         [(k,) for k in key_vals], "o_custkey: long"
     )
-    report = erase_keys_pruned(
+    report = erase_keys(
         wh, ids, "o_custkey", ["orders_z"], preserve_layout=True
     )["orders_z"]
     assert report["files_rewritten"] == len(candidates)
@@ -94,7 +105,8 @@ def test_preserve_layout_erasure_keeps_per_file_rectangles(
     assert got == want
     assert report["rows_removed"] == o.count() - len(want)
 
-    after = _per_file_rects(spark, table_path)
+    table_path = _table_dir(wh, "orders_z")  # the rewritten dir
+    after = _per_file_rects(wh, "orders_z")
     for base, (x0, x1, y0, y1, n) in after.items():
         if base.startswith("part-rw"):
             # part-rw{i:05d}-{j} replaced candidates[i]: its rectangle
@@ -119,13 +131,15 @@ def test_preserve_layout_handles_fully_erased_file(spark, tmp_path):
     df = spark.range(100).select(
         F.col("id").alias("k"), (F.col("id") * 7).alias("pc")
     )
-    wh = Warehouse(spark, str(tmp_path / "wh2"))
-    path = wh.path("t")
-    # two files with disjoint k ranges
-    df.filter("k < 50").coalesce(1).write.parquet(path)
-    df.filter("k >= 50").coalesce(1).write.mode("append").parquet(path)
+    wh = AtomicWarehouse(spark, str(tmp_path / "wh2"))
+    # two files with disjoint k ranges, staged as one data dir
+    src = str(tmp_path / "src")
+    df.filter("k < 50").coalesce(1).write.parquet(src)
+    df.filter("k >= 50").coalesce(1).write.mode("append").parquet(src)
+    with wh.transaction() as txn:
+        txn.append_parquet_dir(src, "t")
     ids = spark.range(50).select(F.col("id").alias("k"))
-    report = erase_keys_pruned(wh, ids, "k", ["t"], preserve_layout=True)[
+    report = erase_keys(wh, ids, "k", ["t"], preserve_layout=True)[
         "t"
     ]
     assert report["rows_removed"] == 50

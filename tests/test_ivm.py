@@ -8,14 +8,16 @@ including the persisted warehouse lane.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 
 from monzo_data_pipeline_spark.catalog import load_table
+from monzo_data_pipeline_spark.pipeline import atomic as A
+from monzo_data_pipeline_spark.pipeline.atomic import AtomicWarehouse
 from monzo_data_pipeline_spark.pipeline.ivm import (
     join_view_delta,
     maintain_view_state,
     merge_agg_state,
 )
-from monzo_data_pipeline_spark.pipeline.medallion import Warehouse
 
 
 def _sorted_rows(df):
@@ -88,7 +90,7 @@ def test_merge_agg_state_any_batching_bit_exact(spark, sf_dir):
 
 
 def test_maintain_view_state_persisted(spark, sf_dir, tmp_path):
-    wh = Warehouse(spark, str(tmp_path / "wh"))
+    wh = AtomicWarehouse(spark, str(tmp_path / "wh"))
     orders = load_table(spark, sf_dir, "orders").select(
         "o_custkey",
         F.col("o_totalprice").cast("decimal(18,2)").alias("v"),
@@ -112,16 +114,14 @@ def test_maintain_view_state_persisted(spark, sf_dir, tmp_path):
     assert _sorted_rows(got) == _sorted_rows(want)
 
 
-def test_maintain_view_state_recovers_mid_swap_crash(
-    spark, sf_dir, tmp_path
+def test_maintain_view_state_failed_commit_keeps_state(
+    spark, sf_dir, tmp_path, monkeypatch
 ):
-    """r10: simulate a driver crash between the retire rename and the
-    promote rename (live path gone, full history in .__retired__).
-    The next maintain_view_state call must restore the history and
-    fold the batch into it — NOT re-initialize from the partial."""
-    import os
-
-    wh = Warehouse(spark, str(tmp_path / "wh"))
+    """A fold whose commit fails (a driver crash before the manifest
+    swap) leaves the previous state whole: re-running the batch folds
+    it into the full history — it is never folded into nothing, and
+    the state is never re-initialized from the partial."""
+    wh = AtomicWarehouse(spark, str(tmp_path / "wh"))
     orders = load_table(spark, sf_dir, "orders").select(
         "o_custkey",
         F.col("o_totalprice").cast("decimal(18,2)").alias("v"),
@@ -136,9 +136,16 @@ def test_maintain_view_state_recovers_mid_swap_crash(
     b0 = orders.filter(F.pmod(F.col("o_custkey"), F.lit(2)) == 0)
     b1 = orders.filter(F.pmod(F.col("o_custkey"), F.lit(2)) == 1)
     maintain_view_state(wh, "rev_state", partial(b0), ["o_custkey"])
-    # crash mid-swap: live renamed to .__retired__, promote never ran
-    live = wh.path("rev_state").rstrip("/")
-    os.rename(live, live + ".__retired__")
+    state_b0 = _sorted_rows(wh.read("rev_state"))
+
+    def crash(self):
+        raise RuntimeError("driver died before the manifest swap")
+
+    with monkeypatch.context() as m:
+        m.setattr(A._Transaction, "_commit", crash)
+        with pytest.raises(RuntimeError):
+            maintain_view_state(wh, "rev_state", partial(b1), ["o_custkey"])
+    assert _sorted_rows(wh.read("rev_state")) == state_b0
     maintain_view_state(wh, "rev_state", partial(b1), ["o_custkey"])
     got = wh.read("rev_state")
     want = partial(orders)

@@ -55,12 +55,15 @@ def test_distributed_ingest_shape(spark):
     assert any(r.settled is None for r in rows)
 
 
-def test_steady_ingest_run_py4j_budget(spark, warehouse, py4j_calls):
+def test_steady_ingest_run_py4j_budget(spark, warehouse, py4j_calls, jobs_in):
     """Plans enter the JVM as SQL text and driver rows as Arrow, so a
     steady-state ingest request (fetch, flatten, `run_pipeline_atomic`
     into a warehouse that already holds two runs) crosses py4j at most
     1,300 times. Built column by column, the same request made about
-    6,300 round trips."""
+    6,300 round trips. It also runs at most 26 Spark jobs: writes
+    return the rows they wrote from parquet footers, so neither the
+    bronze load nor the silver merges run a count job (with them the
+    request ran 29)."""
     fetch = ING.make_fake_fetch(n_per_window=50, dup_every=10)
     for run in range(3):
         day = datetime(2025, 1, 1) + timedelta(days=2 * run)
@@ -71,9 +74,12 @@ def test_steady_ingest_run_py4j_budget(spark, warehouse, py4j_calls):
             wire = ING.fetch_transactions_distributed(spark, fetch, windows)
             return run_pipeline_atomic(spark, warehouse, ING.flatten_bronze(wire, ts), ts)
 
-        stats, calls = py4j_calls(request)
+        (stats, jobs), calls = py4j_calls(
+            lambda: jobs_in(f"steady-ingest-{run}", request)
+        )
     assert stats["bronze_appended"] > 0
     assert calls <= 1300, calls
+    assert len(jobs) <= 26, len(jobs)
 
 
 def test_pipeline_end_to_end_and_idempotence(spark, warehouse):
@@ -143,7 +149,7 @@ def test_sql_path_transform_matches_dataframe_path(spark, tmp_path):
     from all of bronze."""
     batch = _batch(spark)
     wh_df = AtomicWarehouse(spark, str(tmp_path / "wh_df"))
-    wh_sql = MED.Warehouse(spark, str(tmp_path / "wh_sql"))
+    wh_sql = AtomicWarehouse(spark, str(tmp_path / "wh_sql"))
     _silver_through_delta(wh_df, batch, "2025-01-05T00:00:00")
     MED.load_bronze(wh_sql, batch)[1].unpersist()
     SQLP.transform_silver_sql(wh_sql, inserted_at="2025-01-05T00:00:00")
@@ -282,7 +288,7 @@ def test_first_wins_survivor_independent_of_row_order(spark, tmp_path):
 
 
 def _full_recompute(wh, batch, ts, exact_gold):
-    """The reference run over a plain `Warehouse`: bronze through
+    """The reference run over a plain-directory store: bronze through
     `load_bronze`, silver recomputed from all of bronze by the SQL front
     end, gold recomputed exactly from all of silver, and every count
     read off the table itself."""
@@ -303,16 +309,17 @@ def _full_recompute(wh, batch, ts, exact_gold):
 
 
 def test_delta_driven_atomic_run_matches_full_recompute(
-    spark, tmp_path, jobs_in, exact_gold
+    spark, tmp_path, jobs_in, exact_gold, plain_store
 ):
     """run_pipeline_atomic folds each run's delta; the reference
     recomputes silver (`sql_path.transform_silver_sql`) and gold
-    (exact-decimal aggregate) from full bronze over a plain Warehouse.
+    (exact-decimal aggregate) from full bronze over a plain-directory
+    store (`conftest.PlainDirStore`).
     Over nine runs with re-deliveries and late settles every table is
     equal (schema and rows, decimal total_spend uncast), the returned
     counts agree, and a run's Spark job count does not grow with the
     warehouse."""
-    full = MED.Warehouse(spark, str(tmp_path / "full"))
+    full = plain_store(str(tmp_path / "full"))
     delta = AtomicWarehouse(spark, str(tmp_path / "delta"))
     jobs = {}
     for run in range(1, 10):

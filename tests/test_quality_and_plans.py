@@ -40,10 +40,10 @@ def test_pipeline_failure_propagates(spark, tmp_path):
     """The reference swallows transform failures (transform.py:13-16);
     this engine must NOT (SURVEY §7.4): the full silver transform over
     a missing bronze table raises instead of logging-and-continuing."""
-    from monzo_data_pipeline_spark.pipeline import medallion as MED
+    from monzo_data_pipeline_spark.pipeline.atomic import AtomicWarehouse
     from monzo_data_pipeline_spark.pipeline.sql_path import transform_silver_sql
 
-    wh = MED.Warehouse(spark, str(tmp_path / "empty_wh"))
+    wh = AtomicWarehouse(spark, str(tmp_path / "empty_wh"))
     with pytest.raises(Exception):
         transform_silver_sql(wh, inserted_at="2025-01-01T00:00:00")
 

@@ -1,25 +1,8 @@
-"""Table-maintenance I/O: small-file compaction and schema-evolution
-reads (sources/io.py)."""
+"""Source and sink I/O (sources/io.py): schema-evolution reads, layout
+writers, sharded and binary sources. Small-file compaction is
+`pipeline/atomic.py::compact_table` (tests/test_atomic_commit.py)."""
 
 from __future__ import annotations
-
-
-def test_compact_table_reduces_files_and_preserves_rows(spark, sf_dir, tmp_path):
-    from monzo_data_pipeline_spark.catalog import load_table
-    from monzo_data_pipeline_spark.sources.io import compact_table
-
-    orders = load_table(spark, sf_dir, "orders")
-    path = str(tmp_path / "orders_small_files")
-    orders.repartition(40).write.parquet(path)  # simulate micro-batch litter
-    before = orders.count()
-
-    stats = compact_table(spark, path, orders.schema, target_file_bytes=64 * 1024 * 1024)
-    assert stats["files_before"] == 40
-    assert stats["files_after"] < stats["files_before"]
-
-    after = spark.read.schema(orders.schema).parquet(path)
-    assert after.count() == before
-    assert sorted(after.columns) == sorted(orders.columns)
 
 
 def test_read_with_schema_merge_unions_columns(spark, tmp_path):

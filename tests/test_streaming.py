@@ -95,6 +95,7 @@ def test_streaming_ingest_to_bronze_idempotent(spark, tmp_path):
 
     from monzo_data_pipeline_spark.pipeline import ingest as ING
     from monzo_data_pipeline_spark.pipeline import medallion as MED
+    from monzo_data_pipeline_spark.pipeline.atomic import AtomicWarehouse
     from monzo_data_pipeline_spark.streaming.ingest import stream_wire_to_bronze
 
     fetch = ING.make_fake_fetch(n_per_window=30, dup_every=10)
@@ -103,7 +104,7 @@ def test_streaming_ingest_to_bronze_idempotent(spark, tmp_path):
     drops = str(tmp_path / "wire_drops")
     wire.repartition(3).write.parquet(drops)
 
-    wh = MED.Warehouse(spark, str(tmp_path / "wh"))
+    wh = AtomicWarehouse(spark, str(tmp_path / "wh"))
     stream = (
         spark.readStream.schema(wire.schema).option("maxFilesPerTrigger", 1).parquet(drops)
     )

@@ -104,7 +104,7 @@ SHOW = {
     "zorder_layout_orders": "Z-order audit — map-side bit-interleave projection in codegen, ONE ≤1024-group exchange, ordered output",
     # round 8
     "scc_part_precedence": "directed SCC — r9: memoized precedence edge set; trim peels the DAG bulk check-free, jump-accelerated min-label rounds in 4-round blocks with ONE stability job each, all in a child session with edge-scaled shuffle parallelism",
-    "zorder_erasure_layout": "erasure×layout audit — r9: the memo holds the POST-ERASURE WAREHOUSE artifact (write+erase once per session); every call runs the real Morton audit over the surviving clustered table: map-side bit-interleave, ONE ≤1024-group exchange",
+    "zorder_erasure_layout": "erasure×layout audit — r9: the memo holds the POST-ERASURE WAREHOUSE artifact (Z-order write staged into an AtomicWarehouse, then one erase_keys(preserve_layout=True) commit, once per session); every call runs the real Morton audit over the surviving clustered table: map-side bit-interleave, ONE ≤1024-group exchange",
     "kmv_distinct_parts": "KMV sketch — pushed NOT-NULL, map-side partial DISTINCT before the exchange, TakeOrderedAndProject(k); never a global sort, state 256 rows",
     "theta_intersect_customers": "theta intersection — two KMV state builds (each partial-distinct + TakeOrdered), then broadcast-sized joins of the 256-row states; the big scans never join each other",
     "ivm_join_delta": "IVM delta rule — two joins with the delta side broadcast; the stored relations are scanned but never shuffled",
