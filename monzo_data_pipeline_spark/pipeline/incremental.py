@@ -30,10 +30,11 @@ tests/test_incremental.py and tests/test_pipeline.py.
 
 Writers: `medallion.build_gold` (inside `atomic.run_pipeline_atomic`'s
 transaction) and `streaming.ingest.stream_silver_to_gold` (one
-transaction per micro-batch, with its epoch ledger). Both hand in an
-`AtomicWarehouse` or its transaction, where an overwrite lands in a
-fresh data directory: the state is read from the old directory while
-the new one is written, so the fold needs no persist or count job.
+`fold_stream` transaction per micro-batch, with its epoch ledger).
+Both overwrite the state with `merge_gold_state(state, rows)` through
+an `AtomicWarehouse` transaction, where an overwrite lands in a fresh
+data directory: the state is read from the old directory while the
+new one is written, so the fold needs no persist or count job.
 """
 
 from __future__ import annotations
@@ -43,6 +44,7 @@ from typing import TYPE_CHECKING
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions.deterministic import MONEY_DECIMAL
+from .ivm import merge_agg_state
 
 if TYPE_CHECKING:
     from .atomic import AtomicWarehouse, _Transaction
@@ -65,32 +67,23 @@ def partial_state(new_silver_rows: DataFrame) -> DataFrame:
 
 
 def merge_gold_state(
-    wh: AtomicWarehouse | _Transaction, new_silver_rows: DataFrame
-) -> None:
-    """Fold a new silver batch into the gold state (state ⊕ delta).
-
-    DECIMAL sums are associative/commutative, so any batching of
-    history folds to the same state. ``wh`` is an `AtomicWarehouse` or
-    its transaction: the overwrite goes to a fresh directory, never
-    the one the state is read from.
+    state: DataFrame | None, new_silver_rows: DataFrame
+) -> DataFrame:
+    """Fold a new silver batch into the gold state (state ⊕ delta) and
+    return the new state; ``state`` is None before the first batch.
+    The `ivm.merge_agg_state` law over (year, month): DECIMAL sums are
+    associative/commutative, so any batching of history folds to the
+    same state, and ``total_dec`` keeps its decimal(28,2) type.
     """
-    folded = partial_state(new_silver_rows)
-    if wh.exists(GOLD_STATE):
-        folded = (
-            wh.read(GOLD_STATE)
-            .unionByName(folded)
-            .groupBy("year", "month")
-            .agg(F.expr("sum(total_dec) AS total_dec"), F.expr("sum(n) AS n"))
-        )
-    wh.overwrite(folded, GOLD_STATE)
+    return merge_agg_state(state, partial_state(new_silver_rows), ["year", "month"])
 
 
 def gold_from_state(wh: AtomicWarehouse | _Transaction) -> DataFrame:
     """Finalize: state → gold_monthly_spending (total_spend as the
     exact decimal sum, avg_spend as that sum in double ÷ count)."""
     # a full recompute's SUM over silver's decimal(18,2) amounts is
-    # decimal(28,2) (Spark widens a decimal sum's precision by 10);
-    # folded state sums widen further, so the total is cast back
+    # decimal(28,2) (Spark widens a decimal sum's precision by 10); the
+    # cast pins that type for a state stored with wider sums too
     total = "CAST(total_dec AS DECIMAL(28,2))"
     return wh.read(GOLD_STATE).selectExpr(
         "year",

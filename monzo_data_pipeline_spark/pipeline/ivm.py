@@ -37,6 +37,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..operators.projection import quote_ident
 from .atomic import AtomicWarehouse
 
 
@@ -99,15 +100,16 @@ def merge_agg_state(
     """Fold one batch's partial aggregate into view state: UNION +
     per-key SUM of every non-key column (DECIMAL sums and BIGINT
     counts both merge by addition — the algebraic law
-    `incremental.py` relies on). Returns the new state; pass
-    state=None for the first batch."""
+    `incremental.py` relies on), each sum cast back to the column's
+    type so the state's schema holds fold after fold. Returns the new
+    state; pass state=None for the first batch. Built as SQL text
+    (session.py)."""
     merged = partial if state is None else state.unionByName(partial)
-    val_cols = [c for c in merged.columns if c not in keys]
-    sum_schema = dict(merged.dtypes)
     return merged.groupBy(*keys).agg(
         *[
-            F.sum(c).cast(sum_schema[c]).alias(c)
-            for c in val_cols
+            F.expr(f"CAST(sum({quote_ident(c)}) AS {t}) AS {quote_ident(c)}")
+            for c, t in merged.dtypes
+            if c not in keys
         ]
     )
 
@@ -122,8 +124,9 @@ def maintain_view_state(
     swap makes it visible: a crash at any point leaves the previous
     state whole, never a half-folded or missing one. Exactly-once
     across a crash is the caller's: re-running a batch whose commit
-    landed folds it twice (the streaming lane's epoch ledger,
-    `streaming/ingest.py::stream_silver_to_gold`, is the pattern)."""
+    landed folds it twice. `streaming/ingest.py::fold_stream` is the
+    exactly-once form: each fold commits with a one-row epoch
+    ledger."""
     # read inside the transaction: the commit's version check then
     # covers the state the fold was computed from
     with wh.transaction() as txn:

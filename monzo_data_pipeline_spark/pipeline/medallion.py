@@ -239,9 +239,10 @@ def build_gold(wh: AtomicWarehouse | _Transaction, new_silver: DataFrame) -> Non
     ``new_silver``."""
     from .incremental import GOLD_STATE, gold_from_state, merge_gold_state
 
-    if not wh.exists(GOLD_STATE):
+    state = wh.read(GOLD_STATE) if wh.exists(GOLD_STATE) else None
+    if state is None:
         new_silver = wh.read(SILVER_TX)
-    merge_gold_state(wh, new_silver)
+    wh.overwrite(merge_gold_state(state, new_silver), GOLD_STATE)
     wh.overwrite(gold_from_state(wh), GOLD_MONTHLY)
 
 

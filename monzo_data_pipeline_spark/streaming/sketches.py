@@ -1,42 +1,43 @@
 """Incremental sketch-state maintenance over streams — the proof that
 the deterministic sketches' "mergeable by construction" claim holds
-operationally: a stream that checkpoints grid/register state and a
-batch job over the union of all inputs produce BIT-IDENTICAL
-estimates (parity-tested in tests/test_streaming.py).
+operationally: a stream that folds grid/register state micro-batch by
+micro-batch and a batch job over the union of all inputs produce
+BIT-IDENTICAL estimates (parity-tested in tests/test_streaming.py).
 
-Pattern: ``foreachBatch`` + versioned state directories. Each
-micro-batch b
+Every lane is a `streaming.ingest.fold_stream` over a warehouse
+table. For each micro-batch it
 
   1. builds the batch's bounded sketch state (quantile-grid cells
      via `quantile_grid_cells`, or grouped-HLL registers via
      `hll_registers_by_group`) — one scan of the batch, state ≤
      ~3 810 cells (or ≤ m registers) per group BY CONSTRUCTION;
-  2. merges it with the latest persisted state (`merge_grid_cells` =
+  2. merges it with the committed state (`merge_grid_cells` =
      UNION+SUM, `hll_merge_registers` = UNION+MAX, `bitmap_merge` =
      UNION+OR, `kmv_merge` = union∘distinct∘k-smallest);
-  3. writes the merged state to ``state_dir/v{b}``.
+  3. commits the merged state and the table's one-row epoch ledger
+     in one `AtomicWarehouse` transaction.
 
-Version-per-batch makes recovery idempotent-by-replay: if batch b
-fails after a partial write, the retry recomputes v{b} from v{b-1}
-and the SAME input rows (Structured Streaming replays the batch) and
-overwrites — grid merge is counter addition over exactly-once batch
-rows, register merge is idempotent MAX, so the recovered state equals
-the no-failure state. The reference's only persistent state is its
-`since` cursor (/root/reference/src/utils/api/token_manager.py
+The ledger makes recovery exactly-once: a batch that failed before
+its commit left the previous state whole and is folded on replay; a
+batch whose commit landed before the source offsets did is skipped
+on replay, because its epoch is not above the ledger's. That matters
+for the grid's SUM merge, which would double-count a batch folded
+twice (the MAX/OR/k-smallest merges would absorb it). The table holds
+one data dir whatever the stream's length; superseded dirs go to
+`AtomicWarehouse.vacuum`. The reference's only persistent state is
+its `since` cursor (/root/reference/src/utils/api/token_manager.py
 pattern); this is the general mergeable-aggregate form at 100 TB:
 state size is bounded by the sketch, never by the stream.
 
-Estimates are read back with the SAME finalizers the batch queries
-use (`sketch_quantiles_from_cells`, `hll_estimate_from_registers`),
-so stream==batch parity is structural, not coincidental.
+Estimates are read back (``wh.read(table)``) with the SAME finalizers
+the batch queries use (`sketch_quantiles_from_cells`,
+`hll_estimate_from_registers`), so stream==batch parity is
+structural, not coincidental.
 """
 
 from __future__ import annotations
 
-import re
-from typing import Callable
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 from monzo_data_pipeline_spark.operators.sketches import (
     KMV_K,
@@ -49,182 +50,81 @@ from monzo_data_pipeline_spark.operators.sketches import (
     merge_grid_cells,
     quantile_grid_cells,
 )
-
-_VERSION_RE = re.compile(r"^v(\d{9})$")
-
-
-def _version_path(state_dir: str, version: int) -> str:
-    # URI-safe join (state_dir may be s3a://... on a cluster, where
-    # os.path.join would still work but local-FS checks would not).
-    return state_dir.rstrip("/") + f"/v{version:09d}"
-
-
-def _latest_version(
-    spark: SparkSession, state_dir: str, below: int | None = None
-) -> int | None:
-    """Highest committed state version (< ``below`` if given). A
-    version is committed iff Spark's _SUCCESS marker exists — a
-    partial write from a crashed batch is invisible.
-
-    Listing goes through the JVM Hadoop FileSystem API (the same FS
-    the `DataFrame.write.parquet` calls below resolve against), so
-    state on s3a/hdfs/abfs is found exactly like state on file:// —
-    a driver-local os.listdir here would silently see an empty dir
-    on any non-local default filesystem and make every batch start
-    from scratch."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(state_dir)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(hpath):
-        return None
-    best = None
-    for status in fs.listStatus(hpath):
-        name = status.getPath().getName()
-        m = _VERSION_RE.match(name)
-        if not m:
-            continue
-        v = int(m.group(1))
-        if below is not None and v >= below:
-            continue
-        success = jvm.org.apache.hadoop.fs.Path(status.getPath(), "_SUCCESS")
-        if not fs.exists(success):
-            continue
-        if best is None or v > best:
-            best = v
-    return best
-
-
-def _read_state(
-    spark: SparkSession, state_dir: str, below: int | None = None
-) -> DataFrame | None:
-    v = _latest_version(spark, state_dir, below)
-    if v is None:
-        return None
-    return spark.read.parquet(_version_path(state_dir, v))
-
-
-def read_latest_state(spark: SparkSession, state_dir: str) -> DataFrame | None:
-    """The committed state table after the stream drains — feed it to
-    `sketch_quantiles_from_cells` / `hll_estimate_from_registers`
-    (or `*_by_group_from_cells`) for estimates."""
-    return _read_state(spark, state_dir)
+from monzo_data_pipeline_spark.pipeline.atomic import AtomicWarehouse
+from monzo_data_pipeline_spark.streaming.ingest import fold_stream
 
 
 def stream_grid_state(
     stream: DataFrame,
     value_col: str,
-    state_dir: str,
+    wh: AtomicWarehouse,
+    table: str,
     checkpoint_dir: str,
     group_cols: list[str] | None = None,
-    _fault_hook: Callable[[int], None] | None = None,
 ):
-    """Maintain quantile-grid cell state incrementally over a stream.
+    """Maintain quantile-grid cell state in warehouse ``table``
+    incrementally over a stream.
 
     Returns the started StreamingQuery (availableNow trigger: drains
     the current input then stops — swap the trigger for a continuous
-    deployment). State at any version answers quantile queries over
+    deployment). The committed state answers quantile queries over
     every row absorbed so far, without rescanning them.
     """
 
-    def update(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
+    def fold(prev: DataFrame | None, batch: DataFrame) -> DataFrame:
         cells = quantile_grid_cells(batch, value_col, group_cols)
-        prev = _read_state(spark, state_dir, below=batch_id)
-        merged = (
-            merge_grid_cells(prev, cells) if prev is not None
-            else merge_grid_cells(cells)
-        )
-        merged.write.mode("overwrite").parquet(
-            _version_path(state_dir, batch_id)
-        )
-        if _fault_hook is not None:
-            # chaos seam (tests only): runs AFTER the state write,
-            # BEFORE Structured Streaming commits the source offsets —
-            # raising here models a crash in that window, and the hook
-            # may first strip v{b}/_SUCCESS to model a crash mid-commit
-            _fault_hook(batch_id)
+        return merge_grid_cells(cells) if prev is None else merge_grid_cells(prev, cells)
 
-    return (
-        stream.writeStream.foreachBatch(update)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return fold_stream(stream, wh, table, fold, checkpoint_dir)
 
 
 def stream_bitmap_state(
     stream: DataFrame,
     keys: list[str],
     int_col: str,
-    state_dir: str,
+    wh: AtomicWarehouse,
+    table: str,
     checkpoint_dir: str,
-    _fault_hook: Callable[[int], None] | None = None,
 ):
     """Maintain EXACT roaring-bitmap distinct state incrementally over
     a stream (UNION + bitmap_or_agg merge — idempotent like the HLL
     registers, but exact: the third mergeable-state lane, for when the
     keys are dense integers and exactness is required). Finalize with
-    `operators.sketches.bitmap_finalize` on `read_latest_state`."""
+    `operators.sketches.bitmap_finalize` on ``wh.read(table)``."""
 
-    def update(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
+    def fold(prev: DataFrame | None, batch: DataFrame) -> DataFrame:
         st = bitmap_state(batch, keys, int_col)
-        prev = _read_state(spark, state_dir, below=batch_id)
-        merged = bitmap_merge(prev, st, keys=keys) if prev is not None else st
-        merged.write.mode("overwrite").parquet(
-            _version_path(state_dir, batch_id)
-        )
-        if _fault_hook is not None:
-            _fault_hook(batch_id)
+        return st if prev is None else bitmap_merge(prev, st, keys=keys)
 
-    return (
-        stream.writeStream.foreachBatch(update)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return fold_stream(stream, wh, table, fold, checkpoint_dir)
 
 
 def stream_hll_registers(
     stream: DataFrame,
     key_col: str,
     group_col: str,
-    state_dir: str,
+    wh: AtomicWarehouse,
+    table: str,
     checkpoint_dir: str,
-    _fault_hook: Callable[[int], None] | None = None,
 ):
     """Maintain grouped deterministic-HLL register state incrementally
     over a stream (UNION+MAX merge — idempotent, so even accidental
     double-processing of a batch cannot skew the estimate)."""
 
-    def update(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
+    def fold(prev: DataFrame | None, batch: DataFrame) -> DataFrame:
         regs = hll_registers_by_group(batch, key_col, group_col)
-        prev = _read_state(spark, state_dir, below=batch_id)
-        merged = (
-            hll_merge_registers(prev, regs) if prev is not None else regs
-        )
-        merged.write.mode("overwrite").parquet(
-            _version_path(state_dir, batch_id)
-        )
-        if _fault_hook is not None:
-            _fault_hook(batch_id)
+        return regs if prev is None else hll_merge_registers(prev, regs)
 
-    return (
-        stream.writeStream.foreachBatch(update)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return fold_stream(stream, wh, table, fold, checkpoint_dir)
 
 
 def stream_kmv_state(
     stream: DataFrame,
     key_col: str,
-    state_dir: str,
+    wh: AtomicWarehouse,
+    table: str,
     checkpoint_dir: str,
     k: int = KMV_K,
-    _fault_hook: Callable[[int], None] | None = None,
 ):
     """Maintain KMV/theta distinct state incrementally over a stream
     (union ∘ distinct ∘ k-smallest merge — idempotent AND exact as a
@@ -235,44 +135,29 @@ def stream_kmv_state(
     two maintained states with `theta_intersect` — the streaming path
     to "how many users did BOTH things" without storing user sets."""
 
-    def update(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
+    def fold(prev: DataFrame | None, batch: DataFrame) -> DataFrame:
         st = kmv_state(batch, key_col, k)
-        prev = _read_state(spark, state_dir, below=batch_id)
-        merged = kmv_merge(prev, st, k=k) if prev is not None else st
-        merged.write.mode("overwrite").parquet(
-            _version_path(state_dir, batch_id)
-        )
-        if _fault_hook is not None:
-            _fault_hook(batch_id)
+        return st if prev is None else kmv_merge(prev, st, k=k)
 
-    return (
-        stream.writeStream.foreachBatch(update)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return fold_stream(stream, wh, table, fold, checkpoint_dir)
 
 
 def stream_ares_sample(
     stream: DataFrame,
     key_col: str,
     weight_col: str,
-    state_dir: str,
+    wh: AtomicWarehouse,
+    table: str,
     checkpoint_dir: str,
     n: int = 100,
-    _fault_hook: Callable[[int], None] | None = None,
 ):
     """Maintain an A-ES weighted reservoir incrementally over a
     stream (r10) — the fifth state lane: per micro-batch build the
-    batch's n-row priority state (`weighted_sample_ares`), merge with
-    the latest persisted state (`ares_merge` = union ∘ distinct ∘
+    batch's n-row priority state (`weighted_sample_ares`) and merge it
+    with the committed state (`ares_merge` = union ∘ distinct ∘
     top-n — the KMV bottom-k law, idempotent AND exact, so the
     maintained reservoir is bit-identical to the one a batch build
-    over every absorbed row would produce), write to the versioned
-    `_SUCCESS`-gated dir. Recovery is idempotent-by-replay like the
-    KMV lane: a retried batch recomputes v{b} from v{b-1} and the
-    same rows; distinct absorbs the duplicate-key overlap.
+    over every absorbed row would produce).
 
     This is the streaming form of weight-proportional training-data
     sampling: the reservoir a mixture pipeline reads at any moment is
@@ -282,20 +167,8 @@ def stream_ares_sample(
         weighted_sample_ares,
     )
 
-    def update(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
+    def fold(prev: DataFrame | None, batch: DataFrame) -> DataFrame:
         st = weighted_sample_ares(batch, key_col, weight_col, n=n)
-        prev = _read_state(spark, state_dir, below=batch_id)
-        merged = ares_merge(prev, st, n=n) if prev is not None else st
-        merged.write.mode("overwrite").parquet(
-            _version_path(state_dir, batch_id)
-        )
-        if _fault_hook is not None:
-            _fault_hook(batch_id)
+        return st if prev is None else ares_merge(prev, st, n=n)
 
-    return (
-        stream.writeStream.foreachBatch(update)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return fold_stream(stream, wh, table, fold, checkpoint_dir)

@@ -154,3 +154,81 @@ def exact_gold():
         )
 
     return recompute
+
+
+def unpartitioned_windows(df) -> bool:
+    """Walk the optimized logical plan: any Window node whose
+    partitionSpec is empty serializes the whole input onto one task."""
+    root = df._jdf.queryExecution().optimizedPlan()
+    if "Window" not in root.toString():
+        return False  # one JVM call instead of a walk, for most plans
+    stack = [root]
+    while stack:
+        node = stack.pop()
+        if (
+            node.getClass().getSimpleName() == "Window"
+            and node.partitionSpec().isEmpty()
+        ):
+            return True
+        for i in range(node.children().size()):
+            stack.append(node.children().apply(i))
+    return False
+
+
+# the DataFrame methods that materialize (or pin for later reuse) a
+# plan while a registry query is being BUILT — eager per-round plans of
+# the iterative operators never reach the returned frame's plan
+_MATERIALIZERS = (
+    "collect", "count", "toArrow", "toPandas",
+    "checkpoint", "localCheckpoint", "persist", "cache",
+)
+
+
+class BuiltPlan:
+    """One registry spec, built: its frame, or the exception its
+    build raised, and whether a plan it materialized while building
+    held an unpartitioned window."""
+
+    def __init__(self, spec):
+        self.spec = spec
+        self.frame = None
+        self.error = None
+        self.windowed = False
+
+    def result(self):
+        """The built frame; re-raises the build's exception."""
+        if self.error is not None:
+            raise self.error
+        return self.frame
+
+
+@pytest.fixture(scope="session")
+def registry_plans(spark, sf_dir):
+    """Every registry spec built once per session, in `specs()` order,
+    with each materializing DataFrame method wrapped to look for
+    unpartitioned windows in the plans a build runs. The registry-wide
+    plan audits read these instead of building all specs each."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from monzo_data_pipeline_spark.registry import specs
+
+    built: list[BuiltPlan] = []
+
+    def inspecting(method):
+        def wrapper(self, *args, **kwargs):
+            if unpartitioned_windows(self):
+                built[-1].windowed = True
+            return method(self, *args, **kwargs)
+
+        return wrapper
+
+    with pytest.MonkeyPatch.context() as mp:
+        for name in _MATERIALIZERS:
+            mp.setattr(DataFrame, name, inspecting(getattr(DataFrame, name)))
+        for spec in specs():
+            built.append(BuiltPlan(spec))
+            try:
+                built[-1].frame = spec.fn(spark, sf_dir)
+            except Exception as e:  # noqa: BLE001 — each audit re-raises it
+                built[-1].error = e
+    return built

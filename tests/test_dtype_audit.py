@@ -15,6 +15,7 @@ constructing those plans at all.)
 
 from __future__ import annotations
 
+import dataclasses
 import os
 import sys
 
@@ -43,11 +44,18 @@ def duck(sf_dir):
     con.close()
 
 
-def test_registry_dtype_audit_clean(spark, duck, sf_dir):
+def test_registry_dtype_audit_clean(spark, duck, sf_dir, registry_plans):
     """No oracle twin in the whole registry may produce driver-unstable
-    output types. This is the r3 regression class as a permanent gate."""
+    output types. This is the r3 regression class as a permanent gate.
+    The audit reads the session's built plans through spec proxies
+    whose ``fn`` returns the built frame (or re-raises its build
+    error)."""
+    proxies = [
+        dataclasses.replace(b.spec, fn=lambda spark, sf_dir, b=b: b.result())
+        for b in registry_plans
+    ]
     violations, n_checked, n_rows_only = run_audit(
-        spark, duck, specs(), sf_dir
+        spark, duck, proxies, sf_dir
     )
     assert not violations, "\n".join(violations)
     # sanity: the audit actually covered the registry

@@ -52,6 +52,13 @@ def _recomputed(wh, exact_gold, silver):
     return _gold(wh.read(MED.GOLD_MONTHLY))
 
 
+def _fold(wh, batch):
+    """Fold ``batch`` into the warehouse's gold state, as `build_gold`
+    does."""
+    state = wh.read(INC.GOLD_STATE) if wh.exists(INC.GOLD_STATE) else None
+    wh.overwrite(INC.merge_gold_state(state, batch), INC.GOLD_STATE)
+
+
 def test_incremental_equals_full_recompute(spark, warehouse, exact_gold):
     b1 = _silver_batch(spark, 1, 3, "1")
     b2 = _silver_batch(spark, 4, 2, "2")
@@ -59,7 +66,7 @@ def test_incremental_equals_full_recompute(spark, warehouse, exact_gold):
 
     # incremental path: fold batch by batch
     for b in (b1, b2, b3):
-        INC.merge_gold_state(warehouse, b)
+        _fold(warehouse, b)
     incr = _gold(INC.gold_from_state(warehouse))
 
     # full-recompute path over the concatenated history
@@ -75,11 +82,11 @@ def test_state_is_batching_invariant(spark, warehouse):
     b2 = _silver_batch(spark, 3, 2, "2")
 
     wh_a = AtomicWarehouse(spark, warehouse.root + "_a")
-    INC.merge_gold_state(wh_a, b1)
-    INC.merge_gold_state(wh_a, b2)
+    _fold(wh_a, b1)
+    _fold(wh_a, b2)
 
     wh_b = AtomicWarehouse(spark, warehouse.root + "_b")
-    INC.merge_gold_state(wh_b, b1.unionByName(b2))
+    _fold(wh_b, b1.unionByName(b2))
 
     assert _gold(INC.gold_from_state(wh_a)) == _gold(INC.gold_from_state(wh_b))
 
@@ -123,22 +130,22 @@ def test_streaming_gold_equals_batch_and_survives_replay(
 def test_streaming_gold_fold_commits_with_its_epoch(
     spark, warehouse, tmp_path, monkeypatch, exact_gold
 ):
-    """The fold and its `gold_epochs` ledger row commit together: when
+    """The fold and its epoch-ledger row commit together: when
     recording an epoch fails, its fold does not land either, so the
     replay (fresh checkpoint) folds every epoch exactly once."""
     from monzo_data_pipeline_spark.pipeline import atomic
 
     silver = _drops(spark, tmp_path)
-    append = atomic._Transaction.append
+    overwrite = atomic._Transaction.overwrite
     failed = []
 
     def flaky(txn, df, table):
-        if table == "gold_epochs" and not failed:
+        if table == f"{INC.GOLD_STATE}_epoch" and not failed:
             failed.append(table)
             raise OSError("ledger write lost")
-        return append(txn, df, table)
+        return overwrite(txn, df, table)
 
-    monkeypatch.setattr(atomic._Transaction, "append", flaky)
+    monkeypatch.setattr(atomic._Transaction, "overwrite", flaky)
     with pytest.raises(Exception):
         _stream_gold(spark, warehouse, silver, tmp_path, "ckpt1")
     assert failed

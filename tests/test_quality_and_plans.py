@@ -258,7 +258,7 @@ def test_projection_prunes_scan(spark, sf_dir):
     struct_part = read_schema.split("struct<", 1)[1]
     assert struct_part.count(":") == 4  # 4 fields in the pruned schema
 
-def test_no_python_eval_in_oracle_checked_plans(spark, sf_dir):
+def test_no_python_eval_in_oracle_checked_plans(registry_plans):
     """Global contract: no ORACLE-CHECKED query contains a ROW-LOOP
     Python node (BatchEvalPython/ArrowEvalPython/PythonUDF). The
     sanctioned Python surface is Arrow-batched mapInPandas (a distinct
@@ -269,82 +269,34 @@ def test_no_python_eval_in_oracle_checked_plans(spark, sf_dir):
     import contextlib
     import io
 
-    from monzo_data_pipeline_spark.registry import specs
-
     offenders = []
-    for spec in specs():
-        if spec.oracle is None:
+    for built in registry_plans:
+        frame = built.result()
+        if built.spec.oracle is None:
             continue
         buf = io.StringIO()
         with contextlib.redirect_stdout(buf):
-            spec.fn(spark, sf_dir).explain("extended")
+            frame.explain("extended")
         plan = buf.getvalue()
         if "BatchEvalPython" in plan or "ArrowEvalPython" in plan or "PythonUDF" in plan:
-            offenders.append(spec.name)
+            offenders.append(built.spec.name)
     assert offenders == []
 
 
-def _unpartitioned_windows(df) -> bool:
-    """Walk the optimized logical plan: any Window node whose
-    partitionSpec is empty serializes the whole input onto one task."""
-    root = df._jdf.queryExecution().optimizedPlan()
-    if "Window" not in root.toString():
-        return False  # one JVM call instead of a walk, for most plans
-    stack = [root]
-    while stack:
-        node = stack.pop()
-        if (
-            node.getClass().getSimpleName() == "Window"
-            and node.partitionSpec().isEmpty()
-        ):
-            return True
-        for i in range(node.children().size()):
-            stack.append(node.children().apply(i))
-    return False
-
-
-# the DataFrame methods that materialize (or pin for later reuse) a
-# plan while a registry query is being BUILT — eager per-round plans of
-# the iterative operators never reach the returned frame's plan
-_MATERIALIZERS = (
-    "collect", "count", "toArrow", "toPandas",
-    "checkpoint", "localCheckpoint", "persist", "cache",
-)
-
-
-def test_no_unpartitioned_window_in_any_registry_plan(
-    spark, sf_dir, monkeypatch
-):
+def test_no_unpartitioned_window_in_any_registry_plan(registry_plans):
     """Global contract: NO registry query — oracle-checked or not —
     plans a global-order window (WindowExec with no partition spec),
     neither in the frame it returns nor in any plan it materializes
-    while building it. ntile_quartiles was the one offender (r2
-    verdict); it now computes broadcast cut pairs instead. A global
-    window moves the entire table through ONE task — the canonical
-    100 TB scale-killer."""
-    from pyspark.sql.classic.dataframe import DataFrame
-
-    from monzo_data_pipeline_spark.registry import specs
+    while building it (the `registry_plans` fixture watches those).
+    ntile_quartiles was the one offender (r2 verdict); it now computes
+    broadcast cut pairs instead. A global window moves the entire
+    table through ONE task — the canonical 100 TB scale-killer."""
+    from conftest import unpartitioned_windows
 
     offenders: set = set()
-    building = [None]
-
-    def inspecting(method):
-        def wrapper(self, *args, **kwargs):
-            if _unpartitioned_windows(self):
-                offenders.add(building[0])
-            return method(self, *args, **kwargs)
-
-        return wrapper
-
-    for name in _MATERIALIZERS:
-        monkeypatch.setattr(
-            DataFrame, name, inspecting(getattr(DataFrame, name))
-        )
-    for spec in specs():
-        building[0] = spec.name
-        if _unpartitioned_windows(spec.fn(spark, sf_dir)):
-            offenders.add(spec.name)
+    for built in registry_plans:
+        if built.windowed or unpartitioned_windows(built.result()):
+            offenders.add(built.spec.name)
     assert sorted(offenders) == []
 
 

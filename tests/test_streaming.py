@@ -20,6 +20,18 @@ def event_files(spark, sf_dir, tmp_path):
     return path
 
 
+@pytest.fixture()
+def wh(spark, tmp_path):
+    from monzo_data_pipeline_spark.pipeline.atomic import AtomicWarehouse
+
+    return AtomicWarehouse(spark, str(tmp_path / "wh"))
+
+
+def _epoch(wh, table):
+    """The highest epoch `fold_stream` has folded into ``table``."""
+    return wh.read(f"{table}_epoch").head()[0]
+
+
 def test_stream_matches_batch(spark, sf_dir, event_files):
     events = load_table(spark, sf_dir, "events")
     batch_out = {
@@ -248,62 +260,114 @@ def test_drop_duplicates_within_watermark(spark, tmp_path):
     assert sorted(ids) == [1, 2, 3]  # exactly once each
 
 
-def test_stream_cdc_apply_converges_regardless_of_batch_order(spark, tmp_path):
-    """Version-aware CDC apply: streaming correction batches onto a
-    parquet target converges to the batch-upsert of their union, and
-    an older replayed batch cannot regress a newer row."""
+_CDC_SCHEMA = "id long, val string, version long"
+
+
+def _cdc_setup(spark, wh, tmp_path):
+    """Seed `cdc_target` with two v1 rows and write two correction
+    drops; returns the drops dir. The HIGHER version lands in the
+    directory first, so listing order delivers it in the earlier
+    micro-batch — the out-of-order case plain last-wins would
+    regress."""
+    wh.overwrite(
+        spark.createDataFrame([(1, "one-v1", 1), (2, "two-v1", 1)], _CDC_SCHEMA),
+        "cdc_target",
+    )
+    drops = str(tmp_path / "cdc_drops")
+    spark.createDataFrame(
+        [(1, "one-v3", 3), (3, "three-v1", 1)], _CDC_SCHEMA
+    ).coalesce(1).write.mode("append").parquet(drops)
+    spark.createDataFrame(
+        [(1, "one-v2", 2), (2, "two-v2", 2)], _CDC_SCHEMA
+    ).coalesce(1).write.mode("append").parquet(drops)
+    return drops
+
+
+def _cdc_apply(spark, wh, drops, checkpoint_dir):
     from pyspark.sql.types import _parse_datatype_string
 
-    from monzo_data_pipeline_spark.operators.dedup import versioned_upsert
     from monzo_data_pipeline_spark.streaming.ingest import stream_cdc_apply
 
-    sch_s = "id long, val string, version long"
-    schema = _parse_datatype_string(sch_s)
-    target_path = str(tmp_path / "cdc_target")
-    spark.createDataFrame(
-        [(1, "one-v1", 1), (2, "two-v1", 1)], sch_s
-    ).write.parquet(target_path)
-
-    # two correction drops; the HIGHER version lands in the directory
-    # first, so listing order delivers it in the earlier micro-batch —
-    # the out-of-order case plain last-wins would regress
-    drops = str(tmp_path / "cdc_drops")
-    spark.createDataFrame([(1, "one-v3", 3), (3, "three-v1", 1)], sch_s).coalesce(
-        1
-    ).write.mode("append").parquet(drops)
-    spark.createDataFrame([(1, "one-v2", 2), (2, "two-v2", 2)], sch_s).coalesce(
-        1
-    ).write.mode("append").parquet(drops)
-
     stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(drops)
+        spark.readStream.schema(_parse_datatype_string(_CDC_SCHEMA))
+        .option("maxFilesPerTrigger", 1)
+        .parquet(drops)
     )
-    q = stream_cdc_apply(
-        stream, target_path, schema, keys=["id"], order_cols=["version"],
-        checkpoint_dir=str(tmp_path / "ckpt"),
+    return stream_cdc_apply(
+        stream, wh, "cdc_target", keys=["id"], order_cols=["version"],
+        checkpoint_dir=checkpoint_dir,
     )
+
+
+def _cdc_rows(df):
+    return {r["id"]: (r["val"], r["version"]) for r in df.collect()}
+
+
+def _cdc_want(spark):
+    """The batch versioned-upsert of the union of all corrections."""
+    from monzo_data_pipeline_spark.operators.dedup import versioned_upsert
+
+    return _cdc_rows(
+        versioned_upsert(
+            spark.createDataFrame([(1, "one-v1", 1), (2, "two-v1", 1)], _CDC_SCHEMA),
+            spark.createDataFrame(
+                [(1, "one-v3", 3), (3, "three-v1", 1), (1, "one-v2", 2), (2, "two-v2", 2)],
+                _CDC_SCHEMA,
+            ),
+            keys=["id"],
+            order_cols=["version"],
+        )
+    )
+
+
+def test_stream_cdc_apply_converges_regardless_of_batch_order(spark, wh, tmp_path):
+    """Version-aware CDC apply: streaming correction batches onto a
+    warehouse table converges to the batch-upsert of their union, and
+    an older replayed batch cannot regress a newer row."""
+    drops = _cdc_setup(spark, wh, tmp_path)
+    q = _cdc_apply(spark, wh, drops, str(tmp_path / "ckpt"))
     assert q.awaitTermination(120), "stream did not drain within 120s"
 
-    got = {
-        r["id"]: (r["val"], r["version"])
-        for r in spark.read.parquet(target_path).collect()
-    }
-    # == batch versioned-upsert of the union of all corrections
-    want_df = versioned_upsert(
-        spark.createDataFrame([(1, "one-v1", 1), (2, "two-v1", 1)], sch_s),
-        spark.createDataFrame(
-            [(1, "one-v3", 3), (3, "three-v1", 1), (1, "one-v2", 2), (2, "two-v2", 2)],
-            sch_s,
-        ),
-        keys=["id"],
-        order_cols=["version"],
-    )
-    want = {r["id"]: (r["val"], r["version"]) for r in want_df.collect()}
+    got = _cdc_rows(wh.read("cdc_target"))
+    want = _cdc_want(spark)
     assert got == want == {
         1: ("one-v3", 3),
         2: ("two-v2", 2),
         3: ("three-v1", 1),
     }
+
+
+def test_stream_cdc_apply_failed_write_keeps_target(spark, wh, tmp_path, monkeypatch):
+    """Spark's overwrite deletes its output path before the write job
+    runs, so a job failing mid-write leaves the path gone. The CDC
+    target must survive that: the write lands in a staged dir that
+    never commits, and the restart on the same checkpoint converges
+    to the same table as a run without the failure."""
+    import shutil
+
+    from pyspark.errors import StreamingQueryException
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    drops = _cdc_setup(spark, wh, tmp_path)
+    parquet = DataFrameWriter.parquet
+    failed = []
+
+    def failing(self, path, *args, **kwargs):
+        if not failed:
+            failed.append(path)
+            shutil.rmtree(path, ignore_errors=True)
+            raise OSError(f"write job failed: {path}")
+        return parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", failing)
+    ckpt = str(tmp_path / "ckpt")
+    with pytest.raises(StreamingQueryException):
+        _cdc_apply(spark, wh, drops, ckpt).awaitTermination(120)
+    assert failed
+
+    q = _cdc_apply(spark, wh, drops, ckpt)
+    assert q.awaitTermination(120), "stream did not drain within 120s"
+    assert _cdc_rows(wh.read("cdc_target")) == _cdc_want(spark)
 
 
 def test_session_windows_stream_matches_batch(spark, sf_dir, event_files):
@@ -499,7 +563,7 @@ def test_stream_double_charge_flags_match_batch(spark, sf_dir, tmp_path):
     assert got == expected
 
 
-def test_stream_grid_state_matches_batch(spark, sf_dir, tmp_path):
+def test_stream_grid_state_matches_batch(spark, sf_dir, wh, tmp_path):
     """r7: incremental quantile-grid maintenance over micro-batches —
     the persisted merged state must equal the one-shot batch cell
     table BIT-EXACTLY (mergeable-by-construction, operationally), and
@@ -518,19 +582,15 @@ def test_stream_grid_state_matches_batch(spark, sf_dir, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(drops)
     )
-    state_dir = str(tmp_path / "grid_state")
     q = SSK.stream_grid_state(
-        stream, "v", state_dir, str(tmp_path / "grid_ckpt")
+        stream, "v", wh, "grid_state", str(tmp_path / "grid_ckpt")
     )
     assert q.awaitTermination(120), "stream did not drain within 120s"
 
     # multiple micro-batches actually ran (1 file per trigger)
-    import os
+    assert _epoch(wh, "grid_state") >= 2
 
-    versions = [d for d in os.listdir(state_dir) if d.startswith("v")]
-    assert len(versions) >= 3
-
-    final = SSK.read_latest_state(spark, state_dir)
+    final = wh.read("grid_state")
     batch_cells = SK.quantile_grid_cells(base, "v")
     got = sorted((r.cell, r.cnt) for r in final.collect())
     want = sorted((r.cell, r.cnt) for r in batch_cells.collect())
@@ -547,7 +607,7 @@ def test_stream_grid_state_matches_batch(spark, sf_dir, tmp_path):
     assert got_q == want_q and len(got_q) == 3
 
 
-def test_stream_hll_registers_match_batch(spark, sf_dir, tmp_path):
+def test_stream_hll_registers_match_batch(spark, sf_dir, wh, tmp_path):
     """r7: grouped deterministic-HLL register state maintained over
     micro-batches (UNION+MAX merge) — final registers and estimates
     must equal the one-shot batch build bit-exactly."""
@@ -565,14 +625,13 @@ def test_stream_hll_registers_match_batch(spark, sf_dir, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(drops)
     )
-    state_dir = str(tmp_path / "hll_state")
     q = SSK.stream_hll_registers(
-        stream, "o_custkey", "order_month", state_dir,
+        stream, "o_custkey", "order_month", wh, "hll_state",
         str(tmp_path / "hll_ckpt"),
     )
     assert q.awaitTermination(120), "stream did not drain within 120s"
 
-    final = SSK.read_latest_state(spark, state_dir)
+    final = wh.read("hll_state")
     want_regs = sorted(
         (r["__g"], r["__b"], r["reg"])
         for r in SK.hll_registers_by_group(
@@ -597,7 +656,7 @@ def test_stream_hll_registers_match_batch(spark, sf_dir, tmp_path):
     assert got_est == want_est and len(got_est) > 10
 
 
-def test_stream_bitmap_state_matches_batch(spark, sf_dir, tmp_path):
+def test_stream_bitmap_state_matches_batch(spark, sf_dir, wh, tmp_path):
     """r7: exact bitmap distinct state maintained over micro-batches
     (UNION + bitmap_or_agg) — final counts must equal both the
     one-shot bitmap build and plain countDistinct."""
@@ -614,14 +673,13 @@ def test_stream_bitmap_state_matches_batch(spark, sf_dir, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(drops)
     )
-    state_dir = str(tmp_path / "bm_state")
     q = SSK.stream_bitmap_state(
-        stream, ["event_type"], "user_id", state_dir,
+        stream, ["event_type"], "user_id", wh, "bm_state",
         str(tmp_path / "bm_ckpt"),
     )
     assert q.awaitTermination(120), "stream did not drain within 120s"
 
-    final = SSK.read_latest_state(spark, state_dir)
+    final = wh.read("bm_state")
     got = {
         r.event_type: r.n_distinct
         for r in SK.bitmap_finalize(final, ["event_type"]).collect()
@@ -672,7 +730,7 @@ def test_streaming_image_decode_matches_batch(spark, sf_dir, tmp_path):
     assert got == expected
 
 
-def test_stream_kmv_state_matches_batch(spark, sf_dir, tmp_path):
+def test_stream_kmv_state_matches_batch(spark, sf_dir, wh, tmp_path):
     """r8: KMV distinct state maintained over micro-batches (union ∘
     distinct ∘ k-smallest merge) — the merge law is EXACT, so the
     maintained state must equal the one-shot batch build as a SET, and
@@ -690,18 +748,14 @@ def test_stream_kmv_state_matches_batch(spark, sf_dir, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(drops)
     )
-    state_dir = str(tmp_path / "kmv_state")
     q = SSK.stream_kmv_state(
-        stream, "o_custkey", state_dir, str(tmp_path / "kmv_ckpt")
+        stream, "o_custkey", wh, "kmv_state", str(tmp_path / "kmv_ckpt")
     )
     assert q.awaitTermination(120), "stream did not drain within 120s"
 
-    import os
+    assert _epoch(wh, "kmv_state") >= 2
 
-    versions = [d for d in os.listdir(state_dir) if d.startswith("v")]
-    assert len(versions) >= 3
-
-    final = SSK.read_latest_state(spark, state_dir)
+    final = wh.read("kmv_state")
     want_state = SK.kmv_state(orders, "o_custkey")
     assert sorted(r.h for r in final.collect()) == sorted(
         r.h for r in want_state.collect()
@@ -721,13 +775,12 @@ def test_stream_kmv_state_matches_batch(spark, sf_dir, tmp_path):
     assert got == want
 
 
-def test_stream_view_state_matches_batch(spark, sf_dir, tmp_path):
+def test_stream_view_state_matches_batch(spark, sf_dir, wh, tmp_path):
     """r8: the IVM fold under Structured Streaming — a revenue view
     (per-custkey DECIMAL spend + order count, orders enriched inside
     the partial) maintained over micro-batches must equal the one-shot
     batch aggregate bit-exactly (DECIMAL sums re-associate over any
     batching)."""
-    from monzo_data_pipeline_spark.streaming import sketches as SSK
     from monzo_data_pipeline_spark.streaming.views import stream_view_state
 
     orders = load_table(spark, sf_dir, "orders").select(
@@ -748,20 +801,17 @@ def test_stream_view_state_matches_batch(spark, sf_dir, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(drops)
     )
-    state_dir = str(tmp_path / "view_state")
     q = stream_view_state(
-        stream, partial, ["o_custkey"], state_dir,
+        stream, partial, ["o_custkey"], wh, "view_state",
         str(tmp_path / "view_ckpt"),
     )
     assert q.awaitTermination(120), "stream did not drain within 120s"
 
-    import os
-
-    assert len([d for d in os.listdir(state_dir) if d.startswith("v")]) >= 4
+    assert _epoch(wh, "view_state") >= 3
 
     got = {
         r.o_custkey: (str(r.spend_dec), r.n_orders)
-        for r in SSK.read_latest_state(spark, state_dir).collect()
+        for r in wh.read("view_state").collect()
     }
     want = {
         r.o_custkey: (str(r.spend_dec), r.n_orders)
@@ -771,13 +821,12 @@ def test_stream_view_state_matches_batch(spark, sf_dir, tmp_path):
 
 
 def test_stream_view_state_with_retractions_matches_batch(
-    spark, sf_dir, tmp_path
+    spark, sf_dir, wh, tmp_path
 ):
     """r8: counting-IVM deletes over a stream — batches carry an op
     multiplicity (+1 insert / −1 delete); the maintained state after
     the deletes equals the batch aggregate over the surviving rows,
     and fully-deleted groups sit at count 0 (filtered at finalize)."""
-    from monzo_data_pipeline_spark.streaming import sketches as SSK
     from monzo_data_pipeline_spark.streaming.views import stream_view_state
 
     orders = load_table(spark, sf_dir, "orders").select(
@@ -805,9 +854,8 @@ def test_stream_view_state_with_retractions_matches_batch(
         .option("maxFilesPerTrigger", 1)
         .parquet(drops)
     )
-    state_dir = str(tmp_path / "retract_state")
     q = stream_view_state(
-        stream, partial, ["o_custkey"], state_dir,
+        stream, partial, ["o_custkey"], wh, "retract_state",
         str(tmp_path / "retract_ckpt"),
     )
     assert q.awaitTermination(120), "stream did not drain within 120s"
@@ -817,7 +865,7 @@ def test_stream_view_state_with_retractions_matches_batch(
     )
     got = {
         r.o_custkey: (str(r.spend_dec), r.n_orders)
-        for r in SSK.read_latest_state(spark, state_dir)
+        for r in wh.read("retract_state")
         .filter("n_orders > 0")
         .collect()
     }
@@ -927,7 +975,7 @@ def test_stream_stream_join_state_evicts_at_watermark(spark, tmp_path):
         assert (100 + 10 * h + 1, 100 + 10 * h) in got
 
 
-def test_stream_ares_sample_matches_batch(spark, sf_dir, tmp_path):
+def test_stream_ares_sample_matches_batch(spark, sf_dir, wh, tmp_path):
     """r10: A-ES weighted reservoir maintained over micro-batches
     (union ∘ distinct ∘ top-n merge — the KMV bottom-k law is EXACT),
     so the maintained reservoir must equal the one-shot batch build
@@ -948,24 +996,59 @@ def test_stream_ares_sample_matches_batch(spark, sf_dir, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(drops)
     )
-    state_dir = str(tmp_path / "ares_state")
     q = SSK.stream_ares_sample(
         stream,
         "o_orderkey",
         "w",
-        state_dir,
+        wh,
+        "ares_state",
         str(tmp_path / "ares_ckpt"),
         n=64,
     )
     assert q.awaitTermination(120), "stream did not drain within 120s"
 
-    import os
+    assert _epoch(wh, "ares_state") >= 2
 
-    versions = [d for d in os.listdir(state_dir) if d.startswith("v")]
-    assert len(versions) >= 3
-
-    final = SSK.read_latest_state(spark, state_dir)
+    final = wh.read("ares_state")
     want = SK.weighted_sample_ares(orders, "o_orderkey", "w", n=64)
     assert sorted(map(tuple, final.collect())) == sorted(
         map(tuple, want.collect())
     )
+
+
+def test_fold_stream_keeps_one_state_dir_and_one_ledger_row(spark, wh, tmp_path):
+    """However many micro-batches fold, the state table is one data
+    dir and its epoch ledger one row; the superseded dirs are
+    unreferenced, and `vacuum` leaves one dir per table."""
+    import os
+
+    from monzo_data_pipeline_spark.pipeline.ivm import merge_agg_state
+    from monzo_data_pipeline_spark.streaming.ingest import fold_stream
+
+    drops = str(tmp_path / "fold_drops")
+    spark.range(0, 300).repartition(3).write.parquet(drops)
+    stream = (
+        spark.readStream.schema("id long")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(drops)
+    )
+
+    def fold(prev, batch):
+        partial = batch.selectExpr("id % 3 AS k", "id").groupBy("k").agg(
+            F.expr("count(1) AS n"), F.expr("sum(id) AS s")
+        )
+        return merge_agg_state(prev, partial, ["k"])
+
+    q = fold_stream(stream, wh, "counts", fold, str(tmp_path / "ckpt"))
+    assert q.awaitTermination(120), "stream did not drain within 120s"
+
+    assert _epoch(wh, "counts") >= 2
+    tables = wh.manifest()["tables"]
+    assert len(tables["counts"]) == 1
+    assert len(tables["counts_epoch"]) == 1 and wh.rows("counts_epoch") == 1
+    got = sorted((r.k, r.n, r.s) for r in wh.read("counts").collect())
+    assert got == [(k, 100, sum(range(k, 300, 3))) for k in range(3)]
+
+    wh.vacuum(min_age_seconds=0)
+    for table in ("counts", "counts_epoch"):
+        assert len(os.listdir(os.path.join(wh.root, table))) == 1

@@ -1,35 +1,32 @@
-"""Failure-injection tests for the versioned streaming sketch-state
-recovery contract (streaming/sketches.py) — the claim the docstring
-argues and the happy-path parity tests assume:
+"""Failure-injection tests for the streaming fold's commit protocol
+(streaming/ingest.py::fold_stream) — the claim its docstring argues
+and the happy-path parity tests assume:
 
-  * crash mid-commit of ``v{b}`` (data files present, no _SUCCESS):
-    the partial version is INVISIBLE (_SUCCESS-gated discovery), the
-    replay recomputes v{b} from v{b-1} and the same batch rows, and
-    the recovered state is bit-identical to a no-failure run;
-  * crash AFTER v{b} commits but BEFORE the source offsets do (the
-    double-fire lane): the replay re-runs batch b against v{b-1}
-    (``below=batch_id`` excludes the batch's own committed output)
-    and overwrites v{b} with identical content — the lane where the
-    grid's SUM merge would silently double-count if recovery ever
-    merged a replayed batch into its own prior output.
+  * crash BEFORE the commit of batch b (the pointer swap never
+    happens): neither the state nor the ledger moves, the replay folds
+    batch b into the state of batch b-1, and the recovered state is
+    bit-identical to a no-failure run;
+  * crash AFTER batch b commits but BEFORE the source offsets do (the
+    double-fire lane): the ledger already holds epoch b, so the replay
+    of batch b is skipped — the lane where the grid's SUM merge would
+    silently double-count if a replayed batch were ever folded again.
 
-Chaos enters through the ``_fault_hook`` seam (runs after the state
-write, before the offset commit — the exact window a real crash
-occupies), mirroring the raise-at-injection-point idiom of
-tests/test_atomic_commit.py. Recovery is the REAL mechanism: the
-restarted query resumes from the same checkpoint and Structured
+Chaos enters by patching `_Transaction._commit` for the commit that
+records epoch 1, raising before or after the real commit — the exact
+windows a real crash occupies, mirroring the raise-at-injection-point
+idiom of tests/test_atomic_commit.py. Recovery is the REAL mechanism:
+the restarted query resumes from the same checkpoint and Structured
 Streaming replays the uncommitted batch with the same id and rows.
 """
 
 from __future__ import annotations
-
-import os
 
 import pytest
 from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 
 from monzo_data_pipeline_spark.catalog import load_table
+from monzo_data_pipeline_spark.pipeline.atomic import AtomicWarehouse, _Transaction
 from monzo_data_pipeline_spark.streaming import sketches as SSK
 
 
@@ -37,41 +34,35 @@ class Boom(RuntimeError):
     pass
 
 
-def _state_rows(spark, state_dir):
-    df = SSK.read_latest_state(spark, state_dir)
-    assert df is not None
+def _state_rows(wh, table):
+    df = wh.read(table)
     return sorted(map(tuple, df.select(*sorted(df.columns)).collect()))
 
 
-def _committed_versions(state_dir):
-    return sorted(
-        d
-        for d in os.listdir(state_dir)
-        if d.startswith("v")
-        and os.path.exists(os.path.join(state_dir, d, "_SUCCESS"))
-    )
+def _epoch(wh, table):
+    return wh.read(f"{table}_epoch").head()[0]
 
 
-def _make_hook(state_dir, fail_batch, strip_success):
-    """Fail ONCE on ``fail_batch``; optionally strip the _SUCCESS
-    marker first (crash mid-commit vs crash after commit)."""
-    fired = {"done": False}
+def _crash_on_epoch_1(monkeypatch, table, after_swap):
+    """Fail ONCE, on the commit that records epoch 1 in ``table``'s
+    ledger: before the pointer swap (crash mid-commit) or after it
+    (crash after the commit, before the source offsets)."""
+    commit = _Transaction._commit
+    fired = []
 
-    def hook(batch_id: int) -> None:
-        if fired["done"] or batch_id != fail_batch:
-            return
-        fired["done"] = True
-        if strip_success:
-            marker = os.path.join(
-                state_dir, f"v{batch_id:09d}", "_SUCCESS"
-            )
-            os.remove(marker)
-        raise Boom(f"injected crash on batch {batch_id}")
+    def flaky(txn):
+        ledger = txn.tables.get(f"{table}_epoch", [])
+        if fired or [txn.stats[d].get("epoch_id") for d in ledger] != [[1, 1]]:
+            return commit(txn)
+        fired.append(True)
+        if after_swap:
+            commit(txn)
+        raise Boom("injected crash on batch 1")
 
-    return hook
+    monkeypatch.setattr(_Transaction, "_commit", flaky)
 
 
-def _run_with_chaos(spark, start, drops, schema, state_dir, strip_success):
+def _run_with_chaos(spark, monkeypatch, start, drops, schema, wh, table, after_swap):
     """One chaos run: stream fails on batch 1, restart recovers."""
 
     def mk_stream():
@@ -81,60 +72,65 @@ def _run_with_chaos(spark, start, drops, schema, state_dir, strip_success):
             .parquet(drops)
         )
 
-    hook = _make_hook(state_dir, fail_batch=1, strip_success=strip_success)
-    q = start(mk_stream(), hook)
-    with pytest.raises(StreamingQueryException):
-        # the injected Boom surfaces as the query's terminal exception;
-        # a timeout (False return) would fail pytest.raises instead
-        q.awaitTermination(180)
-    if strip_success:
-        # the partial version must be invisible to state discovery
-        assert "v000000001" not in _committed_versions(state_dir)
-    else:
+    with monkeypatch.context() as m:
+        _crash_on_epoch_1(m, table, after_swap)
+        q = start(mk_stream())
+        with pytest.raises(StreamingQueryException):
+            # the injected Boom surfaces as the query's terminal
+            # exception; a timeout (False return) would fail
+            # pytest.raises instead
+            q.awaitTermination(180)
+    if after_swap:
         # committed state, uncommitted offsets — the double-fire setup
-        assert "v000000001" in _committed_versions(state_dir)
+        assert _epoch(wh, table) == 1
+    else:
+        # the failed commit left the state and ledger of batch 0
+        assert _epoch(wh, table) == 0
 
-    # recovery: same checkpoint, no hook — Structured Streaming
+    # recovery: same checkpoint, no patch — Structured Streaming
     # replays the failed batch (same id, same rows) and drains
-    q2 = start(mk_stream(), None)
+    q2 = start(mk_stream())
     assert q2.awaitTermination(180), "recovery stream did not drain"
-    return _state_rows(spark, state_dir)
+    return _state_rows(wh, table)
 
 
-def _chaos_parity(spark, tmp_path, base, name, start):
-    """Reference (no-failure) state vs both chaos lanes, bit-exact."""
+def _chaos_parity(spark, monkeypatch, tmp_path, base, name, start):
+    """Reference (no-failure) state vs both chaos lanes, bit-exact.
+    ``start(stream, wh, table, checkpoint_dir)`` starts the lane."""
     drops = str(tmp_path / f"{name}_drops")
     base.repartition(3).write.parquet(drops)
     schema = base.schema
 
-    ref_state = str(tmp_path / f"{name}_ref_state")
+    ref_wh = AtomicWarehouse(spark, str(tmp_path / f"{name}_ref_wh"))
     q = start(
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(drops),
-        None,
-        ref_state,
+        ref_wh,
+        name,
         str(tmp_path / f"{name}_ref_ckpt"),
     )
     assert q.awaitTermination(180), "reference stream did not drain"
-    assert len(_committed_versions(ref_state)) >= 3  # real micro-batches
-    want = _state_rows(spark, ref_state)
+    assert _epoch(ref_wh, name) >= 2  # real micro-batches
+    want = _state_rows(ref_wh, name)
 
-    for lane, strip in (("partial", True), ("doublefire", False)):
-        state_dir = str(tmp_path / f"{name}_{lane}_state")
+    for lane, after_swap in (("partial", False), ("doublefire", True)):
+        wh = AtomicWarehouse(spark, str(tmp_path / f"{name}_{lane}_wh"))
         ckpt = str(tmp_path / f"{name}_{lane}_ckpt")
         got = _run_with_chaos(
             spark,
-            lambda s, h, sd=state_dir, cp=ckpt: start(s, h, sd, cp),
+            monkeypatch,
+            lambda s, w=wh, cp=ckpt: start(s, w, name, cp),
             drops,
             schema,
-            state_dir,
-            strip_success=strip,
+            wh,
+            name,
+            after_swap,
         )
         assert got == want, f"{name}/{lane}: recovered state diverged"
 
 
-def test_grid_state_recovers_bit_exact_under_chaos(spark, sf_dir, tmp_path):
+def test_grid_state_recovers_bit_exact_under_chaos(spark, sf_dir, tmp_path, monkeypatch):
     """The SUM lane — the one that genuinely depends on exactly-once
     batch replay (a double-merged batch would double every count)."""
     events = load_table(spark, sf_dir, "events")
@@ -142,63 +138,57 @@ def test_grid_state_recovers_bit_exact_under_chaos(spark, sf_dir, tmp_path):
         F.expr("CAST(FLOOR(value * 100 + 0.5) AS BIGINT)").alias("v")
     )
 
-    def start(stream, hook, state_dir, ckpt):
-        return SSK.stream_grid_state(
-            stream, "v", state_dir, ckpt, _fault_hook=hook
-        )
+    def start(stream, wh, table, ckpt):
+        return SSK.stream_grid_state(stream, "v", wh, table, ckpt)
 
-    _chaos_parity(spark, tmp_path, base, "grid", start)
+    _chaos_parity(spark, monkeypatch, tmp_path, base, "grid", start)
 
 
 def test_hll_registers_recover_bit_exact_under_chaos(
-    spark, sf_dir, tmp_path
+    spark, sf_dir, tmp_path, monkeypatch
 ):
     events = load_table(spark, sf_dir, "events")
     base = events.select("user_id", "event_type").filter(
         F.col("user_id").isNotNull() & F.col("event_type").isNotNull()
     )
 
-    def start(stream, hook, state_dir, ckpt):
+    def start(stream, wh, table, ckpt):
         return SSK.stream_hll_registers(
-            stream, "user_id", "event_type", state_dir, ckpt,
-            _fault_hook=hook,
+            stream, "user_id", "event_type", wh, table, ckpt
         )
 
-    _chaos_parity(spark, tmp_path, base, "hll", start)
+    _chaos_parity(spark, monkeypatch, tmp_path, base, "hll", start)
 
 
 def test_bitmap_state_recovers_bit_exact_under_chaos(
-    spark, sf_dir, tmp_path
+    spark, sf_dir, tmp_path, monkeypatch
 ):
     events = load_table(spark, sf_dir, "events")
     base = events.select("event_type", "user_id").filter(
         F.col("user_id").isNotNull() & F.col("event_type").isNotNull()
     )
 
-    def start(stream, hook, state_dir, ckpt):
+    def start(stream, wh, table, ckpt):
         return SSK.stream_bitmap_state(
-            stream, ["event_type"], "user_id", state_dir, ckpt,
-            _fault_hook=hook,
+            stream, ["event_type"], "user_id", wh, table, ckpt
         )
 
-    _chaos_parity(spark, tmp_path, base, "bitmap", start)
+    _chaos_parity(spark, monkeypatch, tmp_path, base, "bitmap", start)
 
 
-def test_kmv_state_recovers_bit_exact_under_chaos(spark, sf_dir, tmp_path):
+def test_kmv_state_recovers_bit_exact_under_chaos(spark, sf_dir, tmp_path, monkeypatch):
     """The k-smallest lane: merge is idempotent AND exact, so both
     chaos lanes must land on the identical k-row state."""
     events = load_table(spark, sf_dir, "events")
     base = events.select("user_id").filter(F.col("user_id").isNotNull())
 
-    def start(stream, hook, state_dir, ckpt):
-        return SSK.stream_kmv_state(
-            stream, "user_id", state_dir, ckpt, _fault_hook=hook
-        )
+    def start(stream, wh, table, ckpt):
+        return SSK.stream_kmv_state(stream, "user_id", wh, table, ckpt)
 
-    _chaos_parity(spark, tmp_path, base, "kmv", start)
+    _chaos_parity(spark, monkeypatch, tmp_path, base, "kmv", start)
 
 
-def test_view_state_recovers_bit_exact_under_chaos(spark, sf_dir, tmp_path):
+def test_view_state_recovers_bit_exact_under_chaos(spark, sf_dir, tmp_path, monkeypatch):
     """The IVM SUM fold — like the grid lane, NOT idempotent, so this
     is the lane where recovery merging a replayed batch into its own
     prior output would silently double-count."""
@@ -215,17 +205,16 @@ def test_view_state_recovers_bit_exact_under_chaos(spark, sf_dir, tmp_path):
             F.sum("user_id").alias("s"),
         )
 
-    def start(stream, hook, state_dir, ckpt):
+    def start(stream, wh, table, ckpt):
         return stream_view_state(
-            stream, partial, ["event_type"], state_dir, ckpt,
-            _fault_hook=hook,
+            stream, partial, ["event_type"], wh, table, ckpt
         )
 
-    _chaos_parity(spark, tmp_path, base, "view", start)
+    _chaos_parity(spark, monkeypatch, tmp_path, base, "view", start)
 
 
 def test_ares_sample_recovers_bit_exact_under_chaos(
-    spark, sf_dir, tmp_path
+    spark, sf_dir, tmp_path, monkeypatch
 ):
     """r10, the weighted-reservoir lane: like KMV the merge is
     idempotent AND exact (priorities are pure functions of (key,
@@ -239,10 +228,9 @@ def test_ares_sample_recovers_bit_exact_under_chaos(
         (F.pmod(F.col("user_id"), F.lit(50)) + 1).alias("w"),
     )
 
-    def start(stream, hook, state_dir, ckpt):
+    def start(stream, wh, table, ckpt):
         return SSK.stream_ares_sample(
-            stream, "event_id", "w", state_dir, ckpt, n=32,
-            _fault_hook=hook,
+            stream, "event_id", "w", wh, table, ckpt, n=32
         )
 
-    _chaos_parity(spark, tmp_path, base, "ares", start)
+    _chaos_parity(spark, monkeypatch, tmp_path, base, "ares", start)
