@@ -844,16 +844,24 @@ def simhash(
     xxhash64(token). hash_family="poly": the ±1 is the threshold test
     ((Aⱼ·h + Bⱼ) mod 2³¹−1) > ⌊(2³¹−2)/2⌋ over the engine-agnostic
     polynomial fold, Aⱼ/Bⱼ fixed pseudorandom 31-bit constants
-    (_lcg_constants) — 64 independent affine hyperplanes whose every step an ANSI-SQL oracle reproduces, which
-    puts the whole simhash→chunk-block→Hamming pipeline under the
-    DuckDB gate.
+    (_lcg_constants) — 64 independent affine hyperplanes whose every
+    step an ANSI-SQL oracle reproduces, which puts the whole
+    fingerprint→chunk-block→Hamming pipeline under the DuckDB gate.
 
-    Implementation note: expressed as explode → one hash aggregate
-    with 64 conditional-sum accumulators, NOT nested higher-order
-    array folds — higher-order lambdas are interpreted per element
-    (an earlier version cost 40 s/5k docs); conditional sums live in
-    whole-stage codegen and the partial aggregation collapses the
-    token rows map-side (~100× faster, bit-identical output).
+    Implementation: explode → one hash aggregate over the token rows,
+    in whole-stage codegen (higher-order array folds run interpreted
+    per element; an earlier version cost 40 s/5k docs). The aggregate
+    holds 32 two-lane sums and ``COUNT(*) AS n``, not 64 ±1 sums:
+    accumulator ``s_j`` counts the tokens with bit j set in its low 32
+    bits and those with bit j+32 set in its high 32 bits (for xxhash,
+    ``SUM(shiftrightunsigned(h, j) & (2³² + 1))``; for poly, the two
+    hyperplane tests packed the same way). Bit j is set when
+    2·lane > n, which is Σ±1 > 0 — the fingerprint is bit-identical to
+    the 64-sum form. A Spark string is under 2 GB, so a document has
+    fewer than 2³¹ tokens and a lane never carries into the next. The
+    sums and the 64-term pack are one SQL statement, parsed once on
+    the JVM side: built as Column chains they cost ~1.4 s per plan
+    build.
     """
     if hash_family not in ("xxhash", "poly"):
         raise ValueError(f"hash_family must be 'xxhash' or 'poly', got {hash_family!r}")
@@ -863,44 +871,35 @@ def simhash(
         F.col(id_col),
         F.explode(F.split(F.trim(F.lower(F.col(text_col))), r"\s+")).alias("tok"),
     )
-    # Expression-construction note: the 64 accumulators and the 64-term
-    # pack are one SQL statement over the token frame, parsed once on
-    # the JVM side. Built as Column chains they cost ~1.4 s of DRIVER
-    # time per plan build, and as 64 ``F.expr`` aliases still ~900 py4j
-    # round trips, re-paid on every run of the query. Identical
-    # expressions after parsing (pinned by
-    # tests/test_neardup_oracle_parity.py + gate).
     if hash_family == "xxhash":
         toks = toks.withColumn("h", F.xxhash64("tok"))
-        bit = "(shiftright(h, {j}) & 1) = 1"
+
+        def lanes(j: int) -> str:
+            return f"shiftrightunsigned(h, {j}) & 4294967297"
+
     else:
         toks = toks.withColumn(
             "h", F.pmod(_poly_hash62(F.col("tok")), F.lit(2147483647))
         )
-        bit = "({a} * h + {b}) % 2147483647 > 1073741823"
-    bit_sums = ", ".join(
-        "SUM(CASE WHEN "
-        + bit.format(j=j, a=_AFFINE_A[j], b=_AFFINE_B[j])
-        + f" THEN 1 ELSE -1 END) AS b{j}"
-        for j in range(64)
-    )
-    # pack sign bits into one signed 64-bit value (bit 63 is the sign bit:
-    # 1<<63 as signed long is LONG_MIN, added explicitly)
-    packed = " + ".join(
-        f"(CASE WHEN b{j} > 0 THEN "
-        + (
-            # -2^63 has no positive literal twin; spell it wrap-free
-            "(CAST(-9223372036854775807 AS BIGINT) - 1)"
-            if j == 63
-            else f"CAST({1 << j} AS BIGINT)"
-        )
-        + " ELSE CAST(0 AS BIGINT) END)"
-        for j in range(64)
+
+        def test(j: int) -> str:
+            return f"({_AFFINE_A[j]} * h + {_AFFINE_B[j]}) % 2147483647 > 1073741823"
+
+        def lanes(j: int) -> str:
+            return f"IF({test(j)}, 1, 0) + IF({test(j + 32)}, 4294967296, 0)"
+
+    sums = ", ".join(f"SUM({lanes(j)}) AS s{j}" for j in range(32))
+    # bit j from the low lane, bit j+32 from the high one; shiftleft of
+    # 1 by 63 is the sign bit, and the terms are disjoint, so OR packs
+    packed = " | ".join(
+        f"shiftleft(CAST(2 * (s{j} & 4294967295) > n AS BIGINT), {j}) | "
+        f"shiftleft(CAST(2 * shiftright(s{j}, 32) > n AS BIGINT), {j + 32})"
+        for j in range(32)
     )
     key = quote_ident(id_col)
     return docs.sparkSession.sql(
-        f"SELECT {key}, CAST({packed} AS BIGINT) AS simhash FROM "
-        f"(SELECT {key}, {bit_sums} FROM {{toks}} GROUP BY {key})",
+        f"SELECT {key}, {packed} AS simhash FROM "
+        f"(SELECT {key}, {sums}, COUNT(*) AS n FROM {{toks}} GROUP BY {key})",
         toks=toks,
     )
 
@@ -911,40 +910,53 @@ def simhash_near_dup_pairs(
     id_col: str = "doc_id",
     hash_family: str = "xxhash",
 ) -> DataFrame:
-    """SimHash near-dup: pairs with Hamming distance ≤ max_hamming.
+    """SimHash near-dup: every pair with Hamming distance ≤ max_hamming,
+    each once, as (doc_a, doc_b, hamming) with doc_a < doc_b.
 
-    Blocking: split the 64-bit fingerprint into 4 16-bit chunks; by
-    pigeonhole, any pair within Hamming ≤ 3·4 shares ≥1 exact chunk —
-    join on (chunk index, chunk value), verify with bit_count(xor).
+    Blocking (Manku, Jain & Das Sarma, WWW 2007): split the 64-bit
+    fingerprint into k = max_hamming + 1 chunks of 64//k or 64//k + 1
+    bits. A pair differing in at most k − 1 bits leaves at least one
+    chunk equal (pigeonhole), so joining on (chunk index, chunk value)
+    finds every such pair. A pair that shares several chunks meets in
+    several blocks; it is kept only in the block of the first chunk at
+    which sim_a ^ sim_b is zero, so it comes out exactly once and no
+    `distinct` is needed. bit_count(xor) then verifies the distance.
+    With more than 64 chunks some would be empty, and the pigeonhole
+    argument fails: max_hamming must lie in [0, 63].
+
+    The chunk rows are hash-partitioned by (index, value) before the
+    self-join, so both join sides read one exchange and the
+    fingerprint aggregate under it runs once; at scale this is the
+    same shuffle a sort-merge join on the block key would do.
     `hash_family` as in `simhash` ("poly" → oracle-checkable).
     """
-    # no checkpoint here: both self-join sides share one exchange
-    # (ReuseExchange) within the single job, unlike the cross-job
-    # recompute in near_dup_clusters
+    if not 0 <= max_hamming <= 63:
+        raise ValueError(f"max_hamming must be in [0, 63], got {max_hamming}")
+    k = max_hamming + 1
+    w, wide = divmod(64, k)  # the first `wide` chunks are one bit wider
+    bounds = [i * w + min(i, wide) for i in range(k + 1)]
+
+    def chunk(x: str, i: int) -> str:
+        width = bounds[i + 1] - bounds[i]
+        mask = -1 if width == 64 else (1 << width) - 1
+        return f"shiftrightunsigned({x}, {bounds[i]}) & {mask}L"
+
+    chunk_rows = ", ".join(
+        f"named_struct('i', {i}, 'v', {chunk('simhash', i)})" for i in range(k)
+    )
+    first_zero = " ".join(f"WHEN {chunk('x', i)} = 0 THEN {i}" for i in range(k))
     sh = simhash(docs, id_col=id_col, hash_family=hash_family)
-    # per-chunk extraction: shiftright then 16-bit mask
-    exploded = sh.select(
-        id_col,
-        "simhash",
-        F.explode(F.array(*[F.lit(c) for c in range(4)])).alias("chunk_idx"),
-    ).withColumn(
-        "chunk_val",
-        F.expr("shiftright(simhash, chunk_idx * 16)").bitwiseAND(F.lit(0xFFFF)),
-    )
-    left = exploded.select(
-        F.col(id_col).alias("doc_a"), F.col("simhash").alias("sim_a"), "chunk_idx", "chunk_val"
-    )
-    right = exploded.select(
-        F.col(id_col).alias("doc_b"), F.col("simhash").alias("sim_b"), "chunk_idx", "chunk_val"
-    )
-    return (
-        left.join(right, ["chunk_idx", "chunk_val"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", "sim_a", "sim_b")
-        .distinct()
-        .withColumn("hamming", F.bit_count(F.expr("sim_a").bitwiseXOR(F.expr("sim_b"))))
-        .filter(F.col("hamming") <= max_hamming)
-        .select("doc_a", "doc_b", "hamming")
+    chunks = sh.selectExpr(
+        f"{quote_ident(id_col)} AS doc", "simhash", f"inline(array({chunk_rows}))"
+    ).repartition("i", "v")
+    return docs.sparkSession.sql(
+        "SELECT doc_a, doc_b, bit_count(x) AS hamming FROM ("
+        " SELECT a.doc AS doc_a, b.doc AS doc_b, a.i,"
+        " a.simhash ^ b.simhash AS x"
+        " FROM {chunks} a JOIN {chunks} b ON a.i = b.i AND a.v = b.v"
+        " WHERE a.doc < b.doc)"
+        f" WHERE bit_count(x) <= {max_hamming} AND CASE {first_zero} END = i",
+        chunks=chunks,
     )
 
 

@@ -1934,10 +1934,10 @@ def q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "simhash_near_dup",
-    "north-star (SimHash 64-bit + pigeonhole-blocked Hamming pairs — r3: "
-    "64 engine-agnostic affine hyperplanes over the polynomial fold, so "
-    "signature, 4×16-bit chunk blocking, and Hamming verify are all "
-    "oracle-checked)",
+    "north-star (SimHash 64-bit + exact Hamming pairs — 64 engine-agnostic "
+    "affine hyperplanes over the polynomial fold; the oracle is the "
+    "definition, all pairs with bit_count(xor) <= 6 and no blocking, so "
+    "the engine's max_hamming + 1 chunk blocking is checked for recall)",
     f"""
 WITH toks AS MATERIALIZED (
     SELECT doc_id, unnest(regexp_split_to_array(trim(lower(text)), '\\s+')) AS tok
@@ -1965,20 +1965,11 @@ WITH toks AS MATERIALIZED (
                        ELSE (CAST(1 AS BIGINT) << CAST(j AS INT)) END)
                ELSE 0 END) AS BIGINT) AS simhash
     FROM bits GROUP BY doc_id
-), chunks AS (
-    SELECT doc_id, simhash, c.c AS chunk_idx,
-           (simhash >> CAST(c.c * 16 AS INT)) & 65535 AS chunk_val
-    FROM sig, LATERAL (SELECT unnest(range(0, 4)) AS c) c
-), cands AS (
-    SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-           a.simhash AS sim_a, b.simhash AS sim_b
-    FROM chunks a JOIN chunks b
-      ON a.chunk_idx = b.chunk_idx AND a.chunk_val = b.chunk_val
-     AND a.doc_id < b.doc_id
 )
-SELECT doc_a, doc_b, CAST(bit_count(xor(sim_a, sim_b)) AS INT) AS hamming
-FROM cands
-WHERE bit_count(xor(sim_a, sim_b)) <= 6
+SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+       CAST(bit_count(xor(a.simhash, b.simhash)) AS INT) AS hamming
+FROM sig a JOIN sig b ON a.doc_id < b.doc_id
+WHERE bit_count(xor(a.simhash, b.simhash)) <= 6
 """,
 )
 def q_simhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4705,7 +4696,7 @@ _DRIVER_PREFIX = [
     # rule, the deterministic count-min and Bloom sketches, the
     # t-closeness privacy audit, the Holt forecast fold, and the
     # bucketed co-located join. Rotated out, each recorded green in
-    # CORRECTNESS_r08 with its family still sampled:
+    # the full gate with its family still sampled:
     # sssp_copurchase (graph via scc/communities/k_core/hits),
     # grid_merge_quantiles (merge laws via kmv_merge+bitmap_merge),
     # cosine_topk_bruteforce (ANN via ivf_index_search +
@@ -4723,7 +4714,7 @@ _DRIVER_PREFIX = [
     # plus the three r10 NEW families sampled immediately (the
     # IVF-PQ composite index search, the Q16 bigram-LM perplexity
     # scores, and the A-ES weighted reservoir sample). Rotated out,
-    # each green in CORRECTNESS_r09 with its family still sampled:
+    # each green in the full gate with its family still sampled:
     # cms_heavy_parts (CMS via cms_merge_counts), kmv_merge_distinct
     # (KMV via kmv_distinct_parts, merge laws via
     # bitmap_merge_distinct), pq_rerank_topk (PQ/ADC via

@@ -4,9 +4,11 @@ driver's pandas canonicalizer — no DuckDB HUGEINT (→ float64 vs Spark
 int64), no array/struct/map output columns (unhashable in pandas
 sort_values), no int-vs-float category splits between engines.
 
-Both round-3 driver-red classes (VERDICT.md "What's wrong" 1–2) would
-have been caught locally by this audit; no result set is computed
-(Spark analysis + DuckDB bind), so the registry-wide sweep costs one
+Both classes once failed the pandas-based gate while
+tools/oracle_check.py passed: a DuckDB HUGEINT sum read as float64,
+and a list column that pandas cannot sort. This audit would have
+caught them locally; no result set is computed (Spark analysis +
+DuckDB bind), so the registry-wide sweep costs one
 plan-construction pass — under a minute — rather than the full gate's
 execute-and-compare. (Trainer specs do run their driver-side fit
 collects inside the query builder; that cost is inherent to

@@ -8,9 +8,8 @@ all columns, and hash-compares stringified values — so DuckDB HUGEINT
 (float64 '42.0' vs Spark int64 '42') and list-valued object columns
 (unhashable in sort_values) fail there while passing the Python gate.
 
-This tool reproduces that pandas pathway as faithfully as the r3
-failure evidence allows (CORRECTNESS_r03.json tracebacks + the two
-observed mismatch classes): Spark via ``toPandas()``, DuckDB via
+This tool reproduces that pandas pathway for the two mismatch classes
+above: Spark via ``toPandas()``, DuckDB via
 ``.df()``, sorted-by-name columns, ``sort_values`` canonical order,
 MD5 over ``str(value)`` rows. Run it over the driver's 50-query
 prefix before a round closes to predict the driver's own file.

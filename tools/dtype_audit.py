@@ -4,7 +4,7 @@ break the driver's correctness gate even when the *values* are equal.
 The driver canonicalizes both result sets through pandas
 (``DataFrame.sort_values`` + per-value stringification), which is
 stricter than tools/oracle_check.py's Python-value canonicalizer in two
-ways (both bit round 3 — see VERDICT.md "What's wrong"):
+ways, and both once failed that gate while the Python one passed:
 
 1. DuckDB types ``SUM(BIGINT)`` / products of sums as HUGEINT; pandas
    has no int128, so ``.df()`` materializes float64 (``42.0``) while
